@@ -273,7 +273,7 @@ def _validate_banded_params(
     METADATA that :func:`banded_signatures` writes (survives a plain
     parquet round-trip but NOT the manifest's recorded-DDL projection),
     and the ``__nh``/``__nb``/``__k`` STAMP COLUMNS that the persisted
-    index (``keyindex._stamped``) carries — so a frame loaded straight
+    index (``keyindex.BANDED``) carries — so a frame loaded straight
     through ``manifest.read_table`` is guarded too, not only callers
     going through ``keyindex.check_banded_stamp``. The column check
     reads one row (column-pruned to three RLE constants — a

@@ -9,10 +9,6 @@ boolean verdicts both engines agree on, and the ANN self-recall queries
 pin "identical vectors are always recalled" to an exact oracle row.
 Statistical accuracy on near-but-not-identical items stays
 property-tested in tests/test_extensions.py.
-
-Registry ordering note: rows-only entries now sort AHEAD of the
-already-driver-recorded oracle core (registry._record_order) so the
-driver's 50-entry budget finally reaches them in round 4.
 """
 
 from __future__ import annotations

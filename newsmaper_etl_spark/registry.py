@@ -40,133 +40,6 @@ class QuerySpec:
 
 QUERIES: dict[str, QuerySpec] = {}
 
-#: plan/semantics CHANGED-SINCE-RECORD ledger: query → the round whose
-#: build changed the query's plan, fixture, or semantics AFTER its
-#: latest driver record. A query whose latest record predates its entry
-#: here sorts with the never-recorded block (the driver has never
-#: hashed the shipped form — VERDICT r13 'what's wrong' #3: five r13
-#: plan changes missed the r13 window because their stale-but-existing
-#: records kept them mid-queue). Entries are self-expiring: once the
-#: driver records the query in round >= the listed round, the normal
-#: stalest-first order resumes; drop entries older than the rotation
-#: bound when touching this table.
-REPLANNED: dict[str, int] = {
-    # Entry value = the round of the OLDEST driver-unverified plan
-    # change (not the latest edit): the ≤2-round re-verify clock starts
-    # when the record first stopped covering the shipped plan, so a
-    # query re-planned again while already dirty keeps its original
-    # round — and with it the deferred-dirty window priority.
-    # (r16 housekeeping: the 20 r15 entries the r15 driver window
-    # recorded are expired and dropped; the 8 below are the r15 plan
-    # changes that did NOT fit that 50-query window — VERDICT r15
-    # 'do this' #1 — and the deferred-dirty ordering puts them at the
-    # head of the r16 window.)
-    # r15 BUILD plan changes (kmeans NULL guards + quantized fit
-    # fixture; fused DSIR/classifier fold — ROUND15_NOTES.md).
-    # q_kmeans_assign / q_cluster_balanced were re-planned AGAIN in r16
-    # (single-parse argmin, OPTIMIZATION_r16.md) — still 15 per the
-    # oldest-unverified rule:
-    "q_kmeans_assign": 15,
-    "q_kmeans_fit": 15,
-    "q_cluster_balanced": 15,
-    "q_dsir_select": 15,
-    "q_classifier_gate": 15,
-    "q_curate_selected_planted": 15,
-    # r15 OPTIMIZATION literal-frame sweep (OPTIMIZATION_r15.md Fix 2):
-    "q_dsir_hashed_parity": 15,
-    "q_dsir_weights_join": 15,
-    # r16 OPTIMIZATION plan changes (OPTIMIZATION_r16.md; detector =
-    # tools/plan_hashes.py, round-open tree vs shipped tree, stable
-    # across two same-tree runs): single-pass jaccard_verify
-    # (dup_clusters/minhash_dedup_planted/curate_corpus_planted),
-    # single-parse excise/shingle assembly (decontaminate/substring/
-    # paragraph family), the q20 window rewrite, and the batched DSIR
-    # fold. All oracle-rechecked green at sf0.01 before shipping.
-    "q_curate_corpus_planted": 16,
-    "q_decontaminate_spans": 16,
-    "q_dsir_incremental": 16,
-    "q_dup_clusters_planted": 16,
-    "q_minhash_dedup_planted": 16,
-    "q_paragraph_dedup": 16,
-    "q_paragraph_incremental": 16,
-    "q_substring_dedup": 16,
-    "q_substring_dedup_planted": 16,
-    "q_substring_incremental": 16,
-    "q_tpch_q20": 16,
-}
-
-#: driver per-round record budget (the driver records the first
-#: DRIVER_CAP entries of the ordering below each round).
-DRIVER_CAP = 50
-
-
-def _record_order(specs: dict[str, QuerySpec]) -> list[str]:
-    """Driver-facing iteration order. The driver's per-round run is
-    budget-capped (50 entries, recorded in ``queries()`` order), so the
-    registry emits:
-
-    1. oracle-checked queries with NO driver record yet (newly added or
-       newly upgraded to an oracle);
-    2. rows-only queries (``oracle=None``) with no record — the weaker
-       rows-only check is still the only record they can get, and the
-       early rounds starved them behind the oracle core (VERDICT r03);
-    3. everything recorded, by ascending latest-record round — stalest
-       refresh first.
-
-    The record state comes from the checked-in CORRECTNESS_r*.json
-    history (:mod:`newsmaper_etl_spark.records`), so after every driver
-    round the rotation advances BY ITSELF. Up to r07 this was a trio of
-    hand-banked frozensets frozen at r04 — which silently pinned the
-    same 50-query prefix for three rounds (VERDICT r07 'do this' #7).
-    Bound: with C-entry rounds over n queries, every query re-records
-    at least every ceil(n / C) rounds — proven by simulation in
-    tests/test_registry_rotation.py. Registration order breaks ties.
-
-    r15 refinement: REPLANNED entries used to sort WITH the unrecorded
-    block, which let a large changed-plan set push queries sitting AT
-    the rotation deadline out of the window. Priority now: (0/1)
-    unrecorded, (2) DEFERRED REPLANNED (dirty AND the plan changed in
-    an earlier round — it already missed one window), (3) recorded
-    queries AT the deadline, (4) fresh REPLANNED (changed this round),
-    (5) everything else stalest-first.
-
-    r16 refinement (ADVICE r15 #4 — the structural gap): group-2
-    deadline entries used to outrank ALL REPLANNED entries, so a round
-    whose deadline block filled the window (r16: 45 at deadline + 8
-    deferred dirty = 53 > 50) silently broke the "re-verified within
-    ≤2 rounds" promise. A deferred dirty entry now outranks the
-    deadline block: a shipped-but-never-driver-verified plan is the
-    higher risk than an UNCHANGED plan's record aging one extra round.
-    Cost bound: the age bound degrades by at most
-    ceil(len(deferred_dirty) / DRIVER_CAP) rounds (= 1 for any honest
-    ledger), and the spilled deadline entries head the next window —
-    proven by the rotation simulation test."""
-    import math
-
-    from newsmaper_etl_spark.records import latest_round, record_history
-
-    hist = record_history()
-    n_visible = sum(1 for s in specs.values() if s.oracle is not None)
-    bound = max(1, math.ceil(n_visible / DRIVER_CAP))
-    next_rnd = latest_round() + 1
-
-    def key(n: str, idx: int) -> tuple:
-        s = specs[n]
-        rec = hist.get(n)
-        if rec is None:
-            return (0 if s.oracle is not None else 1, 0, idx)
-        dirty = rec["round"] < REPLANNED.get(n, 0)
-        if dirty and next_rnd - REPLANNED[n] >= 1:
-            return (2, rec["round"], idx)  # deferred dirty: missed a window
-        if next_rnd - rec["round"] >= bound:
-            return (3, rec["round"], idx)  # at/over the deadline
-        if dirty:
-            return (4, rec["round"], idx)  # shipped plan not covered
-        return (5, rec["round"], idx)
-
-    names = list(specs)
-    return sorted(names, key=lambda n: key(n, names.index(n)))
-
 
 def query(
     name: str,
@@ -202,16 +75,16 @@ def driver_specs() -> dict[str, QuerySpec]:
 
 
 def all_queries() -> dict[str, QueryFn]:
-    specs = driver_specs()
-    return {name: specs[name].fn for name in _record_order(specs)}
+    """Every driver-visible query, in registration order."""
+    return {name: spec.fn for name, spec in driver_specs().items()}
 
 
 def all_oracles() -> dict[str, str]:
-    specs = driver_specs()
+    """Every driver-visible oracle, in registration order."""
     return {
-        name: specs[name].oracle
-        for name in _record_order(specs)
-        if specs[name].oracle is not None
+        name: spec.oracle
+        for name, spec in driver_specs().items()
+        if spec.oracle is not None
     }
 
 

@@ -466,7 +466,7 @@ def write_stream_manifest(
     ``id_col`` (required) and optional ``text_col`` ("text"), ``k``
     (8). Maintains the persisted distinct-gram index at
     ``<table>/_grams`` (same txn/bootstrap/compaction discipline; size
-    disclosed in :func:`keyindex.read_grams_index` — ~one 8-byte row
+    disclosed in :func:`keyindex.span_dedup_batch` — ~one 8-byte row
     per corpus token). Runs LAST of the content gates (after
     ``dedup_keys`` and ``near_dedup``): whole-document drops first, so
     span excision only pays for rows that will actually commit —
@@ -570,6 +570,7 @@ def write_stream_manifest(
     """
     import os as _os
 
+    from newsmaper_etl_spark import keyindex as K
     from newsmaper_etl_spark import manifest as M
 
     app = app_id or f"stream:{_os.path.abspath(checkpoint_dir)}"
@@ -670,394 +671,119 @@ def write_stream_manifest(
         ds.setdefault("text_col", "text")
         ds.setdefault("id_col", "doc_id")
 
+    # the gate chain in run order: (telemetry count label, side index,
+    # its config). The classifier is the one stateless gate (no index,
+    # no replay pinning, no txn coupling); dsir is a side output with no
+    # gate, so its rows commit unfiltered.
+    stages: list[tuple[str | None, K.SideIndex | None, dict | None]] = []
+    if dg is not None:
+        # FIRST content gate: a dropped domain skips every hash and
+        # shuffle downstream (the batch recipe's stage order)
+        stages.append(("after_domain", K.DOMAINS, dg))
+    if clf is not None:
+        # one codegen filter shields all downstream content hashing
+        stages.append(("after_classifier", None, clf))
+    if dedup_keys:
+        stages.append(("after_exact", K.KEYS, {
+            "cols": list(dedup_keys), "order_col": dedup_order_col}))
+    if nd is not None:
+        # cheap exact-key drops first shrink the signing work
+        stages.append(("after_near", {"minhash": K.BANDED,
+                                      "simhash": K.CHUNKS,
+                                      "semantic": K.SEMCELLS}[nd["method"]],
+                       nd))
+    if pdd is not None:
+        # whole repeated paragraphs are cheap per-doc hash cuts, so the
+        # span stage's per-token gram pass only sees what survives them
+        stages.append(("after_para", K.PARAS, pdd))
+    if sd is not None:
+        # LAST content gate: span excision only pays for rows that will
+        # actually commit
+        stages.append((None, K.GRAMS, sd))
+    if ds is not None:
+        stages.append((None, K.GUMBEL, ds))
+    indexes = [(spec, cfg) for _, spec, cfg in stages if spec is not None]
+    gated = [spec for _, spec, _ in stages if spec is None or spec.gate]
+    # the gated batch feeds the data commit AND every index commit:
+    # persist it when the last gate leaves it lazy, so the gate plan runs
+    # once (and dropDuplicates can't pick different survivor rows for
+    # different commits); every other gate materializes its output
+    persist = bool(gated) and gated[-1] is not None and gated[-1].lazy_gate
+    data_stat_cols = tuple(stat_cols)
+    if nd is not None and nd["id_col"] not in data_stat_cols:
+        # candidate point-fetch pruning needs id footer stats
+        data_stat_cols += (nd["id_col"],)
+
     def _commit_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_id = int(batch_id)
         main_done = batch_id <= M.last_txn_version(table, app)
-        if (main_done and not dedup_keys and nd is None and sd is None
-                and pdd is None and dg is None and ds is None):
-            return  # replay of an already-committed batch: exactly-once
+        if main_done and all(
+            batch_id <= M.last_txn_version(spec.path(table), app)
+            for spec, _ in indexes
+        ):
+            return  # data and every index committed: pure replay
         gates: dict | None = {} if telemetry else None
         if gates is not None:
             gates["input"] = batch_df.count()
-        persisted = False
-        eff_stat_cols = tuple(stat_cols)
-        data_version = None
-        if (dedup_keys or nd is not None or sd is not None
-                or pdd is not None or dg is not None or ds is not None):
-            from newsmaper_etl_spark import keyindex as K
+        spark = batch_df.sparkSession
+        # Replay with a pending INDEX commit (crash between the data
+        # commit and a later index commit): every read below sees the
+        # PRE-batch state the original run saw (keyindex.replay_version)
+        data_version = (
+            K.replay_version(table, app, batch_id) if main_done else None
+        )
+        for spec, cfg in indexes:
+            # one-time bootstrap for a table that predates the index,
+            # BEFORE the data commit so the snapshot is pre-batch
+            K.ensure_index_bootstrap(spec, spark, table, cfg, app,
+                                     version=data_version)
+        for label, spec, cfg in stages:
+            if spec is None:
+                from newsmaper_etl_spark.operators.selection import (
+                    classifier_gate,
+                )
 
-            spark = batch_df.sparkSession
-            done = main_done
-            if dedup_keys:
-                done = done and batch_id <= M.last_txn_version(
-                    K.key_index_path(table), app
+                batch_df = classifier_gate(
+                    batch_df, cfg["weights"], bias=cfg["bias"],
+                    threshold=cfg["threshold"], text_col=cfg["text_col"],
+                    id_col=cfg["id_col"], missing=cfg["missing"],
+                    score_col=None,
                 )
-            if nd is not None:
-                nd_index_path = {
-                    "minhash": K.banded_index_path,
-                    "simhash": K.chunks_index_path,
-                    "semantic": K.semcells_index_path,
-                }[nd["method"]](table)
-                done = done and batch_id <= M.last_txn_version(
-                    nd_index_path, app
+            elif spec.gate is not None:
+                index_version = (
+                    K.replay_version(spec.path(table), app, batch_id)
+                    if main_done else None
                 )
-            if sd is not None:
-                done = done and batch_id <= M.last_txn_version(
-                    K.grams_index_path(table), app
-                )
-            if pdd is not None:
-                done = done and batch_id <= M.last_txn_version(
-                    K.paras_index_path(table), app
-                )
-            if dg is not None:
-                done = done and batch_id <= M.last_txn_version(
-                    K.domains_index_path(table), app
-                )
-            if ds is not None:
-                done = done and batch_id <= M.last_txn_version(
-                    K.gumbel_index_path(table), app
-                )
-            if done:
-                return  # data and every index committed: pure replay
-            if main_done:
-                # Replay with a pending INDEX commit (crash between the
-                # data/key commit and a later index commit — ADVICE r08
-                # high): every read below must see the exact PRE-batch
-                # state the original run saw, or the batch's own
-                # already-committed rows/keys empty it out and the
-                # pending index is appended from an EMPTY frame —
-                # permanently losing the batch's keys/signatures. The
-                # manifest records which snapshot version first carried
-                # this (app, batch) txn; reading at version-1 is that
-                # pre-batch state. None (vacuumed past — impossible in
-                # the seconds-old replay window under any sane
-                # retention) falls back to the current snapshot.
-                dv = M.txn_commit_version(table, app, int(batch_id))
-                if dv is not None:
-                    data_version = dv - 1
-        if dg is not None:
-            # FIRST content gate (the recipe order: a dropped domain
-            # skips every hash and shuffle downstream). Replay with a
-            # pending LATER commit: pin the domains read to its
-            # pre-commit version or the batch's own already-committed
-            # deltas double-count and the gate decisions don't
-            # reproduce (the paras pver rule).
-            dgver = None
-            if main_done and batch_id <= M.last_txn_version(
-                K.domains_index_path(table), app
-            ):
-                dgv = M.txn_commit_version(
-                    K.domains_index_path(table), app, int(batch_id)
-                )
-                if dgv is not None:
-                    dgver = dgv - 1
-            K.ensure_domains_bootstrap(
-                spark, table, dg["url_col"], dg["tokens_col"], app,
-                version=data_version,
-            )
-            batch_df = K.domain_gate_batch(
-                batch_df, table, dg["url_col"], dg["tokens_col"],
-                dg["min_docs"], dg["max_docs"], dg["min_sum_tokens"],
-                index_version=dgver,
-            )  # eagerly-materialized: feeds the data AND domains commits
-            if gates is not None:
-                gates["after_domain"] = batch_df.count()
-        if clf is not None:
-            # stateless model-quality gate: pure projection + filter,
-            # deterministic on replay, no index — runs before every
-            # content-dedup gate so one codegen filter shields all
-            # downstream hashing (the batch recipe's stage order)
-            from newsmaper_etl_spark.operators.selection import (
-                classifier_gate,
-            )
-
-            batch_df = classifier_gate(
-                batch_df, clf["weights"], bias=clf["bias"],
-                threshold=clf["threshold"], text_col=clf["text_col"],
-                id_col=clf["id_col"], missing=clf["missing"],
-                score_col=None,
-            )
-            if gates is not None:
-                gates["after_classifier"] = batch_df.count()
-        if ds is not None:
-            # one-time selection bootstrap for a table that predates
-            # the _gumbel index — BEFORE the data commit so the scored
-            # snapshot is pre-batch (data_version pins it on replay;
-            # a post-commit bootstrap would double-count this batch's
-            # rows in the k-row state)
-            K.ensure_gumbel_bootstrap(
-                spark, table, ds["weights"], ds["k"], ds["seed"],
-                ds["text_col"], ds["id_col"], ds["missing"], app,
-                version=data_version,
-            )
-        if dedup_keys:
-            from newsmaper_etl_spark.operators.dedup import exact_dedup
-
-            keys = list(dedup_keys)
-            if dedup_order_col:
-                batch_df = exact_dedup(
-                    batch_df, keys, dedup_order_col, hash_keys=True
-                )
-            else:
-                batch_df = batch_df.dropDuplicates(keys)
-            K.ensure_bootstrap(spark, table, keys, app, version=data_version)
-            kver = None
-            if main_done and batch_id <= M.last_txn_version(
-                K.key_index_path(table), app
-            ):
-                # this batch's keys already committed: anti-join against
-                # the index as it stood BEFORE that commit
-                kv = M.txn_commit_version(
-                    K.key_index_path(table), app, int(batch_id)
-                )
-                if kv is not None:
-                    kver = kv - 1
-            idx = K.read_key_index(spark, table, version=kver)
-            if idx is not None:
-                batch_df = K.anti_join_index(batch_df, keys, idx)
-            if gates is not None:
-                gates["after_exact"] = batch_df.count()
-        if nd is not None:
-            if nd["id_col"] not in eff_stat_cols:
-                # candidate point-fetch pruning needs id footer stats
-                eff_stat_cols = eff_stat_cols + (nd["id_col"],)
-            if nd["method"] == "minhash":
-                K.ensure_banded_bootstrap(
-                    spark, table, nd["id_col"], nd["text_col"],
-                    nd["num_hashes"], nd["bands"], nd["k"], app,
-                    version=data_version,
-                )
-                batch_df = K.near_dedup_batch(
-                    batch_df, table, nd["id_col"], nd["text_col"],
-                    nd["threshold"], nd["num_hashes"], nd["bands"],
-                    nd["k"], nd["within_batch"], nd["max_candidate_ids"],
-                    data_version=data_version,
-                )  # returns an eagerly-materialized frame
-            elif nd["method"] == "simhash":
-                K.ensure_chunks_bootstrap(
-                    spark, table, nd["id_col"], nd["text_col"],
-                    nd["max_hamming"], nd["bits"], app,
-                    version=data_version,
-                )
-                # replay-with-pending-LATER-commit (code review r11,
-                # only reachable with span_dedup configured after this
-                # gate): the batch's own chunks may already be in the
-                # index — pin the read to the pre-commit version, the
-                # kver pattern, or every redelivered row self-matches
-                # at hamming 0 and the pending grams commit is appended
-                # from an empty frame
-                cver = None
-                if main_done and batch_id <= M.last_txn_version(
-                    K.chunks_index_path(table), app
-                ):
-                    cv = M.txn_commit_version(
-                        K.chunks_index_path(table), app, int(batch_id)
-                    )
-                    if cv is not None:
-                        cver = cv - 1
-                batch_df = K.simhash_dedup_batch(
-                    batch_df, table, nd["id_col"], nd["text_col"],
-                    nd["max_hamming"], nd["bits"], nd["within_batch"],
-                    index_version=cver,
-                )  # eagerly-materialized; the hamming verify runs off
-                # the (pinned) index fingerprints — no data fetch
-            else:
-                K.ensure_semantic_bootstrap(
-                    spark, table, nd["id_col"], nd["vec_col"], nd["dim"],
-                    nd["n_centroids"], nd["n_planes"], nd["n_tables"],
-                    nd["sample_n"], nd["seed"], app,
-                    version=data_version,
-                )
-                batch_df = K.semantic_dedup_batch(
-                    batch_df, table, nd["id_col"], nd["vec_col"],
-                    nd["dim"], nd["threshold"], nd["within_batch"],
-                    nd["max_candidate_ids"], data_version=data_version,
-                    n_centroids=nd["n_centroids"],
-                    n_tables=nd["n_tables"], seed=nd["seed"],
-                )  # eagerly-materialized; verify point-fetches seen
-                # vectors from the pinned data snapshot
-            if gates is not None:
-                gates["after_near"] = batch_df.count()
-        if pdd is not None:
-            # coarse text-edit gate BEFORE span excision: whole repeated
-            # paragraphs cut first (cheap — per-doc hash counts), so the
-            # span stage's per-token gram pass only sees what survives.
-            # Replay with a pending LATER commit (paras committed, grams
-            # pending): pin the paras read to its pre-commit version or
-            # every redelivered paragraph self-matches (the simhash cver
-            # rule).
-            pver = None
-            if main_done and batch_id <= M.last_txn_version(
-                K.paras_index_path(table), app
-            ):
-                pv = M.txn_commit_version(
-                    K.paras_index_path(table), app, int(batch_id)
-                )
-                if pv is not None:
-                    pver = pv - 1
-            K.ensure_paras_bootstrap(
-                spark, table, pdd["id_col"], pdd["text_col"],
-                pdd["sep"], app, version=data_version,
-            )
-            batch_df = K.paragraph_dedup_batch(
-                batch_df, table, pdd["id_col"], pdd["text_col"],
-                pdd["sep"], index_version=pver,
-            )  # eagerly-materialized: feeds the data AND paras commits
-            if gates is not None:
-                gates["after_para"] = batch_df.count()
-        if sd is not None:
-            # LAST content gate: edit surviving rows' text against the
-            # persisted gram index (+ within-batch rule). On replay with
-            # a pending grams commit the index is still pre-batch by
-            # construction (the grams txn hasn't advanced), so the edit
-            # is reproduced bit-for-bit from the redelivered rows.
-            K.ensure_grams_bootstrap(
-                spark, table, sd["id_col"], sd["text_col"], sd["k"], app,
-                version=data_version,
-            )
-            batch_df = K.span_dedup_batch(
-                batch_df, table, sd["id_col"], sd["text_col"], sd["k"]
-            )  # eagerly-materialized: feeds the data AND grams commits
-        if (nd is None and sd is None and pdd is None) and dedup_keys:
-            # the deduped batch feeds TWO commits (data, then keys):
-            # persist so the dedup plan runs once, and so the
-            # arbitrary-survivor dropDuplicates path can't pick
-            # different survivor ROWS between the two (the keys would
-            # agree either way, but the persisted frame makes the pair
-            # bit-identical)
+                batch_df = spec.gate(batch_df, table, cfg, index_version,
+                                     data_version)
+            if gates is not None and label is not None:
+                gates[label] = batch_df.count()
+        if persist:
             batch_df = batch_df.persist()
-            persisted = True
         if gates is not None:
             gates["committed"] = batch_df.count()
-
-        def _append() -> None:
-            meta = {"app": app, "batch_id": int(batch_id)}
-            if gates is not None:
-                meta["gates"] = gates
-            M.append(
-                batch_df, table, stat_cols=eff_stat_cols,
-                txn=(app, int(batch_id)),
-                meta=meta,
-                merge_schema=merge_schema,
-            )
         try:
             if not main_done:
-                try:
-                    _append()
-                except M.ConcurrentWriteError:
-                    # our own orphaned claim from a prior crashed attempt
-                    # of THIS batch? clear it and retry once; else re-raise
-                    if not M.repair_claimed_orphan(table, app, int(batch_id)):
-                        raise
-                    _append()
-            if dedup_keys:
-                K.append_batch_keys(
-                    batch_df, table, keys, app, int(batch_id)
-                )
-            if nd is not None:
-                if nd["method"] == "minhash":
-                    K.append_batch_banded(
-                        batch_df, table, nd["id_col"], nd["text_col"],
-                        nd["num_hashes"], nd["bands"], nd["k"],
-                        app, int(batch_id),
-                    )
-                elif nd["method"] == "simhash":
-                    K.append_batch_chunks(
-                        batch_df, table, nd["id_col"], nd["text_col"],
-                        nd["max_hamming"], nd["bits"],
-                        app, int(batch_id),
-                    )
-                elif nd["method"] == "semantic":
-                    K.append_batch_cells(
-                        batch_df, table, nd["id_col"], nd["vec_col"],
-                        nd["dim"], nd["n_centroids"], nd["n_planes"],
-                        nd["n_tables"], nd["sample_n"], nd["seed"],
-                        app, int(batch_id),
-                    )
-            if pdd is not None:
-                # paragraphs of the text AS COMMITTED
-                K.append_batch_paras(
-                    batch_df, table, pdd["id_col"], pdd["text_col"],
-                    pdd["sep"], app, int(batch_id),
-                )
-            if sd is not None:
-                # grams of the text AS COMMITTED (batch_df is the edited,
-                # materialized frame both commits read)
-                K.append_batch_grams(
-                    batch_df, table, sd["id_col"], sd["text_col"],
-                    sd["k"], app, int(batch_id),
-                )
-            if dg is not None:
-                # stat deltas of the rows AS COMMITTED (post every gate)
-                K.append_batch_domains(
-                    batch_df, table, dg["url_col"], dg["tokens_col"],
-                    app, int(batch_id),
-                )
-            if ds is not None:
-                # Gumbel top-k partial of the rows AS COMMITTED (post
-                # every gate): the running selection describes exactly
-                # what the corpus holds
-                K.append_batch_gumbel(
-                    batch_df, table, ds["weights"], ds["k"], ds["seed"],
-                    ds["text_col"], ds["id_col"], ds["missing"],
-                    app, int(batch_id),
-                )
+                meta = {"app": app, "batch_id": batch_id}
+                if gates is not None:
+                    meta["gates"] = gates
+                K.txn_append(batch_df, table, app, batch_id,
+                             stat_cols=data_stat_cols, meta=meta,
+                             merge_schema=merge_schema)
+            for spec, cfg in indexes:
+                # index rows of the batch AS COMMITTED (post every gate)
+                K.append_batch_index(spec, batch_df, table, cfg, app,
+                                     batch_id)
         finally:
-            if persisted:
+            if persist:
                 batch_df.unpersist()
-        if compact_every and (int(batch_id) + 1) % int(compact_every) == 0:
-            for _maint in (
-                [K.compact_key_index] if dedup_keys else []
-            ) + (
-                [{"minhash": K.compact_banded_index,
-                  "simhash": K.compact_chunks_index,
-                  "semantic": K.compact_semcells_index}[nd["method"]]]
-                if nd is not None else []
-            ) + (
-                [K.compact_grams_index] if sd is not None else []
-            ) + (
-                [K.compact_paras_index] if pdd is not None else []
-            ) + (
-                [K.compact_domains_index] if dg is not None else []
-            ) + (
-                # squash, not file-compact: the gumbel partials' true
-                # compaction is "keep only the k winners" (txn marks
-                # carry forward through the overwrite)
-                [lambda sp, t: K.squash_gumbel_index(sp, t, ds["k"])]
-                if ds is not None else []
-            ):
-                try:
-                    _maint(batch_df.sparkSession, table)
-                except M.ConcurrentWriteError:
-                    pass  # racer won this cycle; next cycle retries
-                except Exception as e:  # noqa: BLE001 — same contract as
-                    # data compaction below: maintenance never fails a
-                    # durably-committed batch
-                    import sys
-
-                    print(
-                        f"write_stream_manifest: index compaction "
-                        f"failed (will retry next cycle): {e}",
-                        file=sys.stderr,
-                    )
-            try:
-                M.compact(
-                    batch_df.sparkSession, table,
-                    min_file_bytes=compact_min_bytes,
-                )
-            except M.ConcurrentWriteError:
-                pass  # racer won this cycle; next cycle retries
-            except Exception as e:  # noqa: BLE001 — maintenance must
-                # never fail the batch: its data is already durably
-                # committed, and compaction only rearranges bytes. Any
-                # other failure (corrupt file, transient job error) is
-                # surfaced to the driver log and retried next cycle.
-                import sys
-
-                print(
-                    f"write_stream_manifest: compaction cycle failed "
-                    f"(will retry next cycle): {e}",
-                    file=sys.stderr,
-                )
+        if compact_every and (batch_id + 1) % int(compact_every) == 0:
+            for spec, cfg in indexes:
+                _maintain(lambda: K.compact_index(spec, spark, table, cfg),
+                          "index compaction")
+            _maintain(lambda: M.compact(spark, table,
+                                        min_file_bytes=compact_min_bytes),
+                      "compaction cycle")
 
     writer = (
         df.writeStream.foreachBatch(_commit_batch)
@@ -1066,6 +792,28 @@ def write_stream_manifest(
     )
     trigger = trigger or {"availableNow": True}
     return writer.trigger(**trigger).start()
+
+
+def _maintain(fn, what: str) -> None:
+    """Run one maintenance step (compaction) of a durably-committed
+    batch. It never fails the batch: compaction only rearranges bytes.
+    A lost race (e.g. a second pipeline on the same table) skips this
+    cycle; any other failure (corrupt file, transient job error) is
+    surfaced to the driver log. Both retry at the next cycle."""
+    from newsmaper_etl_spark import manifest as M
+
+    try:
+        fn()
+    except M.ConcurrentWriteError:
+        pass
+    except Exception as e:  # noqa: BLE001 — see docstring
+        import sys
+
+        print(
+            f"write_stream_manifest: {what} failed (will retry next "
+            f"cycle): {e}",
+            file=sys.stderr,
+        )
 
 
 def ingest_history(table: str) -> list[dict]:

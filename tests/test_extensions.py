@@ -2347,12 +2347,12 @@ def test_incremental_minhash_manifest_loaded_stamp_guard(spark, tmp_path):
 
     seen = values_df(spark, [(1, _BASE)], ["doc_id", "text"])
     new = values_df(spark, [(10, _NEAR)], ["doc_id", "text"])
-    pre = K._stamped(
+    pre = K._with_stamp(
         D.banded_signatures(seen, "doc_id", "text", num_hashes=32, bands=8),
-        32, 8, 3,
+        K.BANDED.stamp, (32, 8, 3),
     )
     t = str(tmp_path / "banded32")
-    MF.append(pre, t, stat_cols=K._BSTAMP)
+    MF.append(pre, t, stat_cols=K.BANDED.stamp)
     back = MF.read_table(spark, t)
     # the metadata stamp really is gone on this path (the gap)
     assert not back.schema["bh"].metadata
@@ -2364,8 +2364,9 @@ def test_incremental_minhash_manifest_loaded_stamp_guard(spark, tmp_path):
     # matching parameters: accepted, stamp columns dropped, output right
     t2 = str(tmp_path / "banded16")
     MF.append(
-        K._stamped(D.banded_signatures(seen, "doc_id", "text"), 16, 4, 3),
-        t2, stat_cols=K._BSTAMP,
+        K._with_stamp(D.banded_signatures(seen, "doc_id", "text"),
+                      K.BANDED.stamp, (16, 4, 3)),
+        t2, stat_cols=K.BANDED.stamp,
     )
     out = D.incremental_minhash_dedup(
         new, seen, threshold=0.5, seen_banded=MF.read_table(spark, t2),

@@ -3,7 +3,10 @@ the batch transform's rows with within-stream dedup applied."""
 
 from __future__ import annotations
 
+import contextlib
 import json
+
+import pytest
 
 from newsmaper_etl_spark import fixtures as FX
 from newsmaper_etl_spark.streaming.pipeline import (
@@ -528,6 +531,32 @@ def test_stream_manifest_schema_evolution_across_restart(spark, tmp_path):
     assert out[1]["score"] is None and out[2]["score"] == 7.5
 
 
+@contextlib.contextmanager
+def _fail_side_index_commit(sub, message):
+    """Fault-injection seam for the crash-replay tests: every per-batch
+    commit to the ``<table>/<sub>`` side index raises ``message`` (the
+    writer dies after the data commit and before that index's commit).
+    Bootstrap commits (they carry an ``op_detail``) and commits to every
+    other table go through."""
+    import os
+
+    from newsmaper_etl_spark import manifest as M
+
+    real = M.append
+
+    def _append(df, table, *a, **kw):
+        if (os.path.basename(os.path.normpath(table)) == sub
+                and "op_detail" not in (kw.get("meta") or {})):
+            raise RuntimeError(message)
+        return real(df, table, *a, **kw)
+
+    M.append = _append
+    try:
+        yield
+    finally:
+        M.append = real
+
+
 def _run_dedup_stream(spark, src, table, ckpt, **kw):
     from newsmaper_etl_spark.streaming.pipeline import write_stream_manifest
 
@@ -674,20 +703,11 @@ def test_key_index_repairs_after_crash_between_commits(spark, tmp_path):
     )
     table = str(tmp_path / "ctable")
     ckpt = str(tmp_path / "cck")
-    boom = RuntimeError("injected crash before key commit")
-    real = K.append_batch_keys
-
-    def _crash(*a, **kw):
-        raise boom
-
-    K.append_batch_keys = _crash
-    try:
+    with _fail_side_index_commit("_keys", "injected crash before key commit"):
         import pytest as _pytest
 
         with _pytest.raises(Exception):
             _run_dedup_stream(spark, src, table, ckpt)
-    finally:
-        K.append_batch_keys = real
     # data landed, index did not
     assert M.read_table(spark, table).count() == 2
     assert M.current_version(K.key_index_path(table)) == 0
@@ -900,17 +920,9 @@ def test_banded_index_survives_crash_between_key_and_banded_commits(
     # commit and the banded commit
     (src / "b1.json").write_text(_json.dumps({"id": 20, "text": third}))
     ck1 = str(tmp_path / "xck1")
-    real = K.append_batch_banded
-
-    def _crash(*a, **kw):
-        raise RuntimeError("injected crash before banded commit")
-
-    K.append_batch_banded = _crash
-    try:
+    with _fail_side_index_commit("_banded", "injected crash before banded commit"):
         with _pytest.raises(Exception):
             run(ck1)
-    finally:
-        K.append_batch_banded = real
     # data + keys landed; banded index is one batch behind
     assert {r["id"] for r in M.read_table(spark, table).collect()} == {1, 2, 20}
     bidx = M.read_table(spark, K.banded_index_path(table))
@@ -979,17 +991,9 @@ def test_bootstrap_on_replay_pins_pre_batch_snapshot(spark, tmp_path):
     # run 2: dedup_keys now enabled; crash between data and key commits
     (src / "b1.json").write_text(_json.dumps({"id": 20, "text": third}))
     ck1 = str(tmp_path / "yck1")
-    real = K.append_batch_keys
-
-    def _crash(*a, **kw):
-        raise RuntimeError("injected crash before key commit")
-
-    K.append_batch_keys = _crash
-    try:
+    with _fail_side_index_commit("_keys", "injected crash before key commit"):
         with _pytest.raises(Exception):
             run(ck1, with_keys=True)
-    finally:
-        K.append_batch_keys = real
     assert {r["id"] for r in M.read_table(spark, table).collect()} == {1, 20}
     # the bootstrap committed BEFORE the data append: the index exists
     # and holds exactly the pre-batch keys (base), not the batch's
@@ -1129,17 +1133,9 @@ def test_chunks_index_survives_crash_before_chunk_commit(spark, tmp_path):
 
     (src / "b1.json").write_text(_json.dumps({"id": 20, "text": third}))
     ck1 = str(tmp_path / "zck1")
-    real = K.append_batch_chunks
-
-    def _crash(*a, **kw):
-        raise RuntimeError("injected crash before chunk commit")
-
-    K.append_batch_chunks = _crash
-    try:
+    with _fail_side_index_commit("_chunks", "injected crash before chunk commit"):
         with _pytest.raises(Exception):
             run(ck1)
-    finally:
-        K.append_batch_chunks = real
     # data landed; chunk index is one batch behind
     assert {r["id"] for r in M.read_table(spark, table).collect()} == {1, 20}
     cidx = M.read_table(spark, K.chunks_index_path(table))
@@ -1332,17 +1328,9 @@ def test_semcells_index_survives_crash_before_cells_commit(spark, tmp_path):
 
     (src / "b1.json").write_text(_json.dumps({"id": 20, "embedding": v3}))
     ck1 = str(tmp_path / "csemck1")
-    real = K.append_batch_cells
-
-    def _crash(*a, **kw):
-        raise RuntimeError("injected crash before cells commit")
-
-    K.append_batch_cells = _crash
-    try:
+    with _fail_side_index_commit("_semcells", "injected crash before cells commit"):
         with _pytest.raises(Exception):
             run(ck1)
-    finally:
-        K.append_batch_cells = real
     # data landed; cell index is one batch behind
     assert {r["id"] for r in M.read_table(spark, table).collect()} == {1, 20}
     sidx = M.read_table(spark, K.semcells_index_path(table))
@@ -1536,17 +1524,9 @@ def test_stream_manifest_span_dedup_on_ingest(spark, tmp_path):
         _json.dumps({"id": 20, "text": fresh + " extra0"})
     )
     ck2 = str(tmp_path / "spanck2")
-    real = K.append_batch_grams
-
-    def _crash(*a, **kw):
-        raise RuntimeError("injected crash before grams commit")
-
-    K.append_batch_grams = _crash
-    try:
+    with _fail_side_index_commit("_grams", "injected crash before grams commit"):
         with _pytest.raises(Exception):
             run(ck2)
-    finally:
-        K.append_batch_grams = real
     rows = {r["id"]: r["text"] for r in M.read_table(spark, table).collect()}
     # data landed with the edit (fresh's grams were already indexed)
     assert rows[20] == "extra0"
@@ -1658,17 +1638,9 @@ def test_simhash_plus_span_crash_replay_pins_chunk_index(spark, tmp_path):
     fresh = " ".join(f"f{i}" for i in range(10))
     (src / "b1.json").write_text(_json.dumps({"id": 2, "text": fresh}))
     ck1 = str(tmp_path / "sscck1")
-    real = K.append_batch_grams
-
-    def _crash(*a, **kw):
-        raise RuntimeError("injected crash before grams commit")
-
-    K.append_batch_grams = _crash
-    try:
+    with _fail_side_index_commit("_grams", "injected crash before grams commit"):
         with _pytest.raises(Exception):
             run(ck1)
-    finally:
-        K.append_batch_grams = real
     # data AND chunks committed; grams one behind
     assert {r["id"] for r in M.read_table(spark, table).collect()} == {1, 2}
     cidx = M.read_table(spark, K.chunks_index_path(table))
@@ -1740,17 +1712,9 @@ def test_stream_manifest_para_dedup_on_ingest(spark, tmp_path):
         _json.dumps({"id": 20, "text": "shared delta\n\nfinal zeta"})
     )
     ck2 = str(tmp_path / "parack2")
-    real = K.append_batch_paras
-
-    def _crash(*a, **kw):
-        raise RuntimeError("injected crash before paras commit")
-
-    K.append_batch_paras = _crash
-    try:
+    with _fail_side_index_commit("_paras", "injected crash before paras commit"):
         with _pytest.raises(Exception):
             run(ck2)
-    finally:
-        K.append_batch_paras = real
     rows = {r["id"]: r["text"] for r in M.read_table(spark, table).collect()}
     assert rows[20] == "final zeta"
     pv_before = M.current_version(K.paras_index_path(table))
@@ -1836,17 +1800,9 @@ def test_stream_manifest_domain_gate_on_ingest(spark, tmp_path):
     (src / "b2.json").write_text(
         _json.dumps({"id": 20, "url": "https://keep.example/5"})
     )
-    real = K.append_batch_domains
-
-    def _crash(*a, **kw):
-        raise RuntimeError("injected crash before domains commit")
-
-    K.append_batch_domains = _crash
-    try:
+    with _fail_side_index_commit("_domains", "injected crash before domains commit"):
         with _pytest.raises(Exception):
             run()
-    finally:
-        K.append_batch_domains = real
     rows = {r["id"] for r in M.read_table(spark, table).collect()}
     assert 20 in rows  # data committed before the injected crash
     dv_before = M.current_version(K.domains_index_path(table))
@@ -2053,17 +2009,9 @@ def test_stream_manifest_dsir_selection_on_ingest(spark, tmp_path):
 
     # crash between data commit and gumbel commit heals on replay
     (src / "b2.json").write_text(doc(20, 200))
-    real = K.append_batch_gumbel
-
-    def _crash(*a, **kw):
-        raise RuntimeError("injected crash before gumbel commit")
-
-    K.append_batch_gumbel = _crash
-    try:
+    with _fail_side_index_commit("_gumbel", "injected crash before gumbel commit"):
         with _pytest.raises(Exception):
             run()
-    finally:
-        K.append_batch_gumbel = real
     assert 20 in {r["doc_id"] for r in M.read_table(spark, table).collect()}
     gv_before = M.current_version(K.gumbel_index_path(table))
     run()  # replay: data append skips, gumbel commit proceeds
@@ -2142,3 +2090,175 @@ def test_gumbel_squash_keeps_selection_and_txn_marks(spark, tmp_path):
     )
     assert 99 not in {r.id for r in
                       K.read_gumbel_index(spark, table, 3).collect()}
+
+
+#: The on-disk contract of every side index: subdir → (bootstrap
+#: ``op_detail``, stamp column → value in the manifest footer stats for
+#: the configurations of :func:`_layout_configs`).
+#: Tables written by earlier releases stay readable only while this
+#: holds.
+_SIDE_LAYOUT = {
+    "_keys": ("keyindex-bootstrap", {}),
+    "_banded": ("bandedindex-bootstrap", {"__nh": 16, "__nb": 4, "__k": 3}),
+    "_chunks": ("chunkindex-bootstrap", {"__mh": 3, "__bits": 64}),
+    "_semcells": ("semcells-bootstrap",
+                  {"__nc": 2, "__np": 8, "__nt": 8, "__dim": 8, "__seed": 42}),
+    "_semcentroids": ("semcentroids",
+                      {"__nc": 2, "__np": 8, "__nt": 8, "__dim": 8,
+                       "__seed": 42}),
+    "_grams": ("gramsindex-bootstrap", {"__gk": 4}),
+    "_paras": ("parasindex-bootstrap", {"__psep": 1541608299}),
+    "_domains": ("domainsindex-bootstrap", {"__dpsl": 2871300763}),
+    "_gumbel": ("gumbelindex-bootstrap", {"__gfp": 2931546644}),
+}
+
+
+def _layout_configs():
+    """(schema, rows, write_stream_manifest kwargs, side subdirs): every
+    side-index kind, in the three gate combinations that can coexist."""
+    text = ("id LONG, text STRING, url STRING",
+            [(1, "alpha beta gamma delta\n\nshared tail words here",
+              "https://a.example/1"),
+             (2, "epsilon zeta eta theta iota", "https://b.example/2")],
+            [(10, "kappa lambda mu nu xi\n\nshared tail words here",
+              "https://a.example/3"),
+             (11, "omicron pi rho sigma tau", "https://c.example/4")])
+    vecs = ("id LONG, embedding ARRAY<DOUBLE>",
+            [(1, [1.0] + [0.0] * 7), (2, [0.0, 1.0] + [0.0] * 6)],
+            [(10, [0.0, 0.0, 1.0] + [0.0] * 5),
+             (11, [0.0] * 7 + [1.0])])
+    return [
+        (*text, {"dedup_keys": ("text",), "dedup_order_col": "id",
+                 "near_dedup": {"id_col": "id"},
+                 "para_dedup": {"id_col": "id"},
+                 "span_dedup": {"id_col": "id", "k": 4},
+                 "domain_gate": {"url_col": "url", "min_docs": 1},
+                 "dsir": {"weights": {"alpha": 1.0, "kappa": 2.0}, "k": 2,
+                          "id_col": "id"}},
+         {"_keys", "_banded", "_paras", "_grams", "_domains", "_gumbel"}),
+        (*text, {"near_dedup": {"id_col": "id", "method": "simhash"}},
+         {"_chunks"}),
+        (*vecs, {"near_dedup": {"id_col": "id", "method": "semantic",
+                                "vec_col": "embedding", "dim": 8,
+                                "n_centroids": 2, "sample_n": 64}},
+         {"_semcells", "_semcentroids"}),
+    ]
+
+
+def test_side_index_on_disk_layout_is_pinned(spark, tmp_path):
+    """Every side-index kind keeps its on-disk contract, for a table
+    that needs a bootstrap (rows committed before the gate was
+    configured) and for a born-streaming table: the subdir names, the
+    stamp columns and values in the manifest footer stats, the
+    bootstrap ``op_detail`` tags, and the ``#keyindex-bootstrap`` txn
+    app of the bootstrap commit."""
+    import json as _json
+    import os
+
+    from newsmaper_etl_spark import manifest as M
+    from newsmaper_etl_spark.streaming.pipeline import write_stream_manifest
+
+    boot_app_suffix = "#keyindex-bootstrap"
+    for ci, (schema, pre, batch, cfg, subs) in enumerate(_layout_configs()):
+        cols = [c.split()[0] for c in schema.split(", ")]
+        for mode in ("bootstrap", "born"):
+            table = str(tmp_path / f"t{ci}{mode}")
+            src = tmp_path / f"s{ci}{mode}"
+            src.mkdir()
+            if mode == "bootstrap":
+                M.append(spark.createDataFrame(pre, schema), table)
+            (src / "b0.json").write_text("\n".join(
+                _json.dumps(dict(zip(cols, r))) for r in batch))
+            app = f"layout{ci}{mode}"
+            write_stream_manifest(
+                spark.readStream.schema(schema).json(str(src)), table,
+                str(tmp_path / f"ck{ci}{mode}"), app_id=app, **cfg,
+            ).awaitTermination()
+
+            found = {d for d in os.listdir(table)
+                     if d.startswith("_") and d not in ("_manifests", "_LATEST")}
+            assert found == subs, (mode, found)
+            for sub in subs:
+                path = os.path.join(table, sub)
+                tag, stamp = _SIDE_LAYOUT[sub]
+                first = M._load_manifest(path, 1)
+                meta = first.get("meta") or {}
+                if mode == "bootstrap" or sub == "_semcentroids":
+                    assert meta.get("op_detail") == tag, (mode, sub, meta)
+                    assert first.get("txns") == {app + boot_app_suffix: 0}
+                else:
+                    assert "op_detail" not in meta, (sub, meta)
+                    assert first.get("txns") == {app: 0}
+                if sub != "_semcentroids":
+                    assert M.last_txn_version(path, app) == 0, (mode, sub)
+                # files without row groups (empty partitions) carry no
+                # footer stats; every other file carries the full stamp
+                stats = [e.get("stats") or {}
+                         for v in range(1, M.current_version(path) + 1)
+                         for e in M._load_manifest(path, v)["files"]]
+                assert stats, (mode, sub)
+                assert not stamp or any(stats), (mode, sub)
+                for st in filter(None, stats):
+                    assert set(st) == set(stamp), (mode, sub, st)
+                    for c, want in stamp.items():
+                        lo, hi = st[c]
+                        assert lo == hi, (sub, c, st[c])
+                        assert lo == want, (sub, c, lo)
+
+
+@pytest.mark.parametrize("first_gate, first_sub", [
+    ("para_dedup", "_paras"),
+    ("near_dedup", "_banded"),
+])
+def test_first_batch_replay_with_pending_grams_commit(
+    spark, tmp_path, first_gate, first_sub
+):
+    """A born-streaming table's FIRST batch crashes after its
+    ``first_sub`` commit and before its ``_grams`` commit. The replay
+    pins that index to its pre-batch version 0, which means "no index",
+    and fetches seen rows at data version 0, which means "no seen
+    rows". It must finish and commit exactly what a crash-free run
+    commits, data and side indexes alike."""
+    import json as _json
+
+    from newsmaper_etl_spark import manifest as M
+    from newsmaper_etl_spark.streaming.pipeline import write_stream_manifest
+
+    gate = {"para_dedup": {"id_col": "id"},
+            "near_dedup": {"id_col": "id", "threshold": 0.5}}[first_gate]
+    src = tmp_path / "fbin"
+    src.mkdir()
+    (src / "b0.json").write_text("\n".join(_json.dumps(d) for d in [
+        {"id": 1, "text": "one two three four five\n\nalpha beta gamma"},
+        {"id": 2, "text": "one two three four five\n\ndelta epsilon zeta"},
+        {"id": 3, "text": "six seven eight nine ten eleven"},
+    ]))
+
+    def run(table, ck):
+        stream = spark.readStream.schema("id LONG, text STRING").json(str(src))
+        write_stream_manifest(
+            stream, table, ck, app_id="fbq", span_dedup={"id_col": "id", "k": 4},
+            **{first_gate: gate},
+        ).awaitTermination()
+
+    def state(table):
+        return (
+            sorted((r["id"], r["text"]) for r in M.read_table(spark, table).collect()),
+            {sub: sorted(map(tuple, M.read_table(spark, f"{table}/{sub}")
+                             .drop("__gk", "__psep", "__nh", "__nb", "__k")
+                             .collect()))
+             for sub in (first_sub, "_grams")},
+        )
+
+    clean = str(tmp_path / "clean")
+    run(clean, str(tmp_path / "ck_clean"))
+
+    crashed = str(tmp_path / "crashed")
+    ck = str(tmp_path / "ck_crashed")
+    with _fail_side_index_commit("_grams", "injected crash before grams commit"):
+        with pytest.raises(Exception):
+            run(crashed, ck)
+    assert M.current_version(f"{crashed}/{first_sub}") == 1
+    assert M.current_version(f"{crashed}/_grams") == 0
+    run(crashed, ck)  # replay of batch 0
+    assert state(crashed) == state(clean)

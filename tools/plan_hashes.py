@@ -12,7 +12,7 @@ RDD ids, paths, statistics, AND HOF lambda-variable ids (x_N — these
 are session-counter-dependent: one extra lambda built early shifts
 every later query's ids, which falsely flagged 44 queries before the
 normalizer learned this). The surviving hash differences are the
-queries that must enter the REPLANNED ledger (registry.py)."""
+queries whose physical plans really changed."""
 import sys, io, os, re, json, hashlib
 from contextlib import redirect_stdout
 root = sys.argv[1]; out = sys.argv[2]
