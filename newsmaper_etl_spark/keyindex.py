@@ -90,12 +90,12 @@ class SideIndex:
     basis: str = ""
     #: (batch_df, table, cfg, index_version, data_version) → gated batch,
     #: reading this index at ``index_version`` and the data table at
-    #: ``data_version`` (the :func:`replay_version` pins; None = current);
-    #: None for a side output that gates nothing
+    #: ``data_version`` (the :func:`replay_version` pins; None = current).
+    #: A gate returns its input unchanged or an eagerly materialized
+    #: frame: the gated batch feeds the data commit AND every index
+    #: append, which must see identical rows. None for a side output
+    #: that gates nothing
     gate: Callable | None = None
-    #: True when the gate returns a lazy frame (every other gate returns
-    #: an eagerly materialized one)
-    lazy_gate: bool = False
     #: columns the stored rows are a set over: new rows are anti-joined
     #: against the index on them before each append
     set_on: tuple[str, ...] = ()
@@ -324,13 +324,17 @@ def exact_dedup_batch(
     """Keep one row per key within the batch (the first by ``order_col``
     — the deterministic contract; an arbitrary survivor without it),
     then drop every row whose key the ``_keys`` index has seen. Returns
-    a lazy frame."""
+    an eagerly materialized frame: without ``order_col`` every
+    evaluation of a lazy ``dropDuplicates`` may keep a different
+    survivor."""
     if order_col:
         batch_df = D.exact_dedup(batch_df, cols, order_col, hash_keys=True)
     else:
         batch_df = batch_df.dropDuplicates(cols)
     idx = read_index(KEYS, batch_df.sparkSession, table, index_version)
-    return batch_df if idx is None else anti_join_index(batch_df, cols, idx)
+    if idx is not None:
+        batch_df = anti_join_index(batch_df, cols, idx)
+    return batch_df.localCheckpoint(eager=True)
 
 
 KEYS = SideIndex(
@@ -341,7 +345,6 @@ KEYS = SideIndex(
     ),
     gate=lambda b, t, c, iv, dv: exact_dedup_batch(
         b, t, c["cols"], c["order_col"], index_version=iv),
-    lazy_gate=True,
 )
 key_index_path = KEYS.path
 
@@ -365,12 +368,14 @@ def _seen_rows(
     few files the candidates touch instead of scanning the corpus. The
     candidate id list is a driver materialization bounded by
     ``max_candidate_ids`` (a batch of B docs against sane bucket
-    occupancy yields O(B) candidates); above the cap the fetch falls
-    back to a distributed semi-join against the full snapshot —
-    correct, disclosed, and a sign the LSH parameters need retuning."""
+    occupancy yields O(B) candidates); above the cap the fetch scans
+    the full snapshot — correct, disclosed, and a sign the LSH
+    parameters need retuning. Either way the rows are semi-joined to
+    the seen ids of the (materialized) candidate frame itself: a frame
+    built from the collected id list would run a Python-worker job per
+    batch."""
     if data_version == 0:
         return None
-    spark = batch_df.sparkSession
     seen_ids = [
         r[0]
         for r in cands.select("id_b").distinct()
@@ -378,23 +383,12 @@ def _seen_rows(
     ]
     if not seen_ids:
         return None
-    if len(seen_ids) > max_candidate_ids:
-        return M.read_table(
-            spark, table, version=data_version
-        ).select(id_col, val_col).join(
-            cands.select(F.col("id_b").alias(id_col)).distinct(),
-            on=id_col, how="left_semi",
-        )
-    from pyspark.sql.types import StructField, StructType
-
-    ids_df = spark.createDataFrame(
-        [(i,) for i in seen_ids],
-        StructType([StructField(id_col, batch_df.schema[id_col].dataType)]),
-    )
+    prune = (id_col, seen_ids) if len(seen_ids) <= max_candidate_ids else None
     return M.read_table(
-        spark, table, version=data_version, prune_in=(id_col, seen_ids),
+        batch_df.sparkSession, table, version=data_version, prune_in=prune,
     ).select(id_col, val_col).join(
-        F.broadcast(ids_df), on=id_col, how="left_semi",
+        cands.select(F.col("id_b").alias(id_col)).distinct(),
+        on=id_col, how="left_semi",
     )
 
 
@@ -458,10 +452,13 @@ def near_dedup_batch(
     from the batch's band keys ⋈ the index, verified by exact
     shingle-Jaccard over ONLY the candidate docs (:func:`_seen_rows`).
     The verify is SIDE-SPLIT (:func:`operators.dedup.cross_corpus_losers`):
-    batch and seen shingles never merge under a shared id, so a same-id
+    each candidate pair scores one distinct shingle-hash array per batch
+    id against one per seen row with array set ops, so a same-id
     re-crawl with edited text — which exact-key dedup on text does not
     catch — scores its true Jaccard instead of a corrupted one.
-    Parameter drift between the index and this batch's signing raises."""
+    Parameter drift between the index and this batch's signing raises.
+    Returns ``batch_df`` itself when there is nothing to gate (no index,
+    no within-batch pass), else an eagerly materialized frame."""
     spark = batch_df.sparkSession
     within = (
         (lambda df: D.minhash_dedup(df, id_col, text_col, threshold,
@@ -470,7 +467,9 @@ def near_dedup_batch(
     )
     idx = read_index(BANDED, spark, table, index_version)
     if idx is None:
-        return batch_df if within is None else within(batch_df)
+        if within is None:
+            return batch_df
+        return within(batch_df).localCheckpoint(eager=True)
     check_banded_stamp(table, num_hashes, bands, k)
     nb = D.banded_signatures(
         batch_df.select(id_col, text_col), id_col, text_col,
@@ -525,14 +524,15 @@ def simhash_dedup_batch(
     :func:`operators.dedup.incremental_simhash_dedup`. There is NO
     verify fetch against the data table: the index carries the
     fingerprints, so the per-batch read is exactly the index's h+1
-    narrow rows per seen doc. Parameter drift raises. Returns an
-    eagerly-materialized frame once an index exists."""
+    narrow rows per seen doc. Parameter drift raises. Returns
+    ``batch_df`` itself when there is nothing to gate (no index, no
+    within-batch pass), else an eagerly materialized frame."""
     idx = read_index(CHUNKS, batch_df.sparkSession, table, index_version)
     if idx is None:
-        if within_batch:
-            return D.simhash_dedup(batch_df, id_col, text_col, max_hamming,
-                                   bits)
-        return batch_df
+        if not within_batch:
+            return batch_df
+        return D.simhash_dedup(batch_df, id_col, text_col, max_hamming,
+                               bits).localCheckpoint(eager=True)
     check_chunks_stamp(table, max_hamming, bits)
     out = D.incremental_simhash_dedup(
         batch_df, None, id_col, text_col, max_hamming, bits,
@@ -732,7 +732,9 @@ def semantic_dedup_batch(
     Centroids are FROZEN at index birth: cells stay comparable across
     batches by construction. Corpus drift degrades cell tightness, not
     correctness (every assignment uses the same centroids); re-cluster
-    by rebuilding the index offline when drift warrants it."""
+    by rebuilding the index offline when drift warrants it. Returns
+    ``batch_df`` itself when there is nothing to gate (no index, no
+    within-batch pass), else an eagerly materialized frame."""
     _raise_if_stale(table)
     within = (
         (lambda df: S.semantic_dedup(df, dim, id_col, vec_col, threshold,
@@ -742,7 +744,9 @@ def semantic_dedup_batch(
     spark = batch_df.sparkSession
     idx = read_index(SEMCELLS, spark, table, index_version)
     if idx is None:
-        return batch_df if within is None else within(batch_df)
+        if within is None:
+            return batch_df
+        return within(batch_df).localCheckpoint(eager=True)
     params = check_semantic_stamp(table, dim, n_centroids, n_tables, seed)
     nb = S.semantic_cell_keys(
         batch_df.select(id_col, vec_col), dim, id_col, vec_col,

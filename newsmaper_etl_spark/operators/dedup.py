@@ -753,19 +753,16 @@ def incremental_minhash_dedup(
     iff some verified seen-pair scores ≥ threshold. ``within_batch=True``
     then runs :func:`minhash_dedup` over the cross-corpus survivors.
 
-    The verify stage is side-split and single-pass: each side is
-    semi-joined to the candidate ids (only bucket-mates the batch
-    actually touched are ever shingled — re-shingling the whole corpus
-    per batch would dwarf the batch and void the ``seen_banded`` seam),
-    exploded to (pair, shingle) rows through the candidate list, and the
-    two sides meet in ONE full-outer join on (pair, shingle): per-pair
-    row count = |A∪B| and both-present count = |A∩B|, so Jaccard falls
-    out of a single aggregation with no per-doc size aggregation, no
-    size joins, and each side's shingle pipeline referenced exactly
-    once. (:func:`jaccard_verify` stays the standalone primitive — its
-    every-pair-gets-a-verdict contract needs the left join this internal
-    path can skip, because threshold > 0 discards empty intersections
-    either way.)
+    The verify stage is side-split (:func:`cross_corpus_losers`): each
+    side is semi-joined to the candidate ids (only bucket-mates the
+    batch actually touched are ever shingled — re-shingling the whole
+    corpus per batch would dwarf the batch and void the ``seen_banded``
+    seam) and reduced to one distinct shingle-hash array per doc, and
+    each candidate pair scores its two arrays with array set ops.
+    (:func:`jaccard_verify` stays the standalone primitive — its
+    every-pair-gets-a-verdict contract needs a score for pairs this
+    internal path can drop, because threshold > 0 discards empty
+    intersections either way.)
 
     ``checkpoint=True`` (default) localCheckpoints the candidate-pair
     frame: it is referenced by both semi-joins and the verify join, and
@@ -829,84 +826,58 @@ def cross_corpus_losers(
     whose exact shingle Jaccard vs its ``id_b`` seen doc scores
     ``>= threshold``. ``cands`` must carry (id_a = new-side ids,
     id_b = seen-side ids); callers should materialize it (it is
-    referenced by both semi-joins and the verify join).
+    referenced by both semi-joins and both array joins).
 
-    The two sides' shingle frames NEVER union (ADVICE r08): a batch doc
-    that shares an id with a committed doc — the same-id re-crawl with
+    The two sides' shingles NEVER union (ADVICE r08): a batch doc that
+    shares an id with a committed doc — the same-id re-crawl with
     edited text, the canonical streaming-ingest case that exact-key
     dedup on text does not catch — keeps its shingles on its own side,
     so Jaccard for every pair touching that id stays exact. Each side
     is semi-joined to the candidate ids (only bucket-mates the batch
-    actually touched are ever shingled), exploded to (pair, shingle)
-    rows through the candidate list, and the two sides meet in ONE
-    full-outer join on (pair, version, shingle): per-(pair, version)
-    row count = |A∪B_v| and both-present count = |A∩B_v|, so Jaccard
-    falls out of a single aggregation with no per-doc size aggregation
-    and no size joins.
+    actually touched are ever shingled) and reduced to ONE distinct
+    shingle-hash array per doc; every candidate pair joins its two
+    arrays and scores ``size(array_intersect) / size(array_union)`` in
+    place — no per-shingle rows, no full-outer join, no aggregation
+    over the pair × shingle product.
 
     The SEEN side is version-aware (ADVICE r09): the data table can
     legitimately hold several rows under one id — the same-id re-crawl
     whose edit was admitted commits a second version — and merging
     their shingles under the shared id deflates/inflates every later
-    Jaccard against that id. Each distinct seen (id, text) is scored
-    as its own version (``__v`` = xxhash64(text), deterministic, and
-    collapsing byte-identical rows is exact), and a batch doc loses
-    iff ANY version scores ≥ threshold — near-duplicating content the
-    corpus already holds, in any of its committed revisions, drops it.
-    Remaining id contract: NEW-side ids must be unique within the
-    batch (two batch rows under one id would still merge)."""
-    # one shingle row-set per distinct seen (id, text) version; the
-    # semi-join keeps the frame batch-scaled (bucket-mates only)
-    seen_touched = (
-        seen_df.select(id_col, text_col)
-        .join(
-            cands.select(F.col("id_b").alias(id_col)).distinct(),
-            on=id_col, how="left_semi",
-        )
-        .withColumn("__v", F.xxhash64(F.col(text_col)))
-        .dropDuplicates([id_col, "__v"])
-    )
-    vcands = cands.join(
-        seen_touched.select(F.col(id_col).alias("id_b"), "__v"), on="id_b"
-    )
+    Jaccard against that id. Each seen ROW keeps its own array and is
+    scored as its own version, and a batch doc loses iff ANY version
+    scores ≥ threshold — near-duplicating content the corpus already
+    holds, in any of its committed revisions, drops it (byte-identical
+    rows score identically, so they need no collapsing).
 
-    new_touched = (
-        new_df.select(id_col, text_col)
-        .join(
-            cands.select(F.col("id_a").alias(id_col)).distinct(),
-            on=id_col, how="left_semi",
+    The NEW side is merged per id: batch rows sharing an id score the
+    union of their shingles (``array_distinct(flatten(collect_list))``)
+    — the verdict is per id, because the caller drops losers by id."""
+    def _shingles(d: DataFrame, side: str, pair_col: str) -> DataFrame:
+        return (
+            d.select(id_col, text_col)
+            .join(cands.select(F.col(pair_col).alias(id_col)).distinct(),
+                  on=id_col, how="left_semi")
+            .withColumn("__th", token_hashes_col(text_col))
+            .select(
+                F.col(id_col).alias(pair_col),
+                F.array_distinct(hashed_shingles_expr("__th", k)).alias(side),
+            )
         )
-        .withColumn("__th", token_hashes_col(text_col))
+
+    sa = (
+        _shingles(new_df, "__sa", "id_a")
+        .groupBy("id_a")
+        .agg(F.array_distinct(F.flatten(F.collect_list("__sa"))).alias("__sa"))
     )
-    # explode the EXPRESSION, not an aliased column — the
-    # jaccard_verify InferFiltersFromGenerate rule
-    na_sh = new_touched.select(
-        F.col(id_col).alias("id_a"),
-        F.explode(
-            F.array_distinct(hashed_shingles_expr("__th", k))
-        ).alias("s"),
-    )
-    sb_sh = seen_touched.withColumn(
-        "__th", token_hashes_col(text_col)
-    ).select(
-        F.col(id_col).alias("id_b"),
-        "__v",
-        F.explode(
-            F.array_distinct(hashed_shingles_expr("__th", k))
-        ).alias("s"),
-    )
-    pa = vcands.join(na_sh, on="id_a").withColumn("__ina", F.lit(1))
-    pb = vcands.join(sb_sh, on=["id_b", "__v"]).withColumn("__inb", F.lit(1))
-    stats = (
-        pa.join(pb, on=["id_a", "id_b", "__v", "s"], how="full")
-        .groupBy("id_a", "id_b", "__v")
-        .agg(
-            F.count(F.lit(1)).alias("__n_union"),
-            F.count(F.when((F.col("__ina") == 1) & (F.col("__inb") == 1), 1)).alias("__n_inter"),
-        )
+    sb = _shingles(seen_df, "__sb", "id_b")
+    jacc = (
+        F.size(F.array_intersect("__sa", "__sb"))
+        / F.size(F.array_union("__sa", "__sb"))
     )
     return (
-        stats.filter(F.col("__n_inter") / F.col("__n_union") >= threshold)
+        cands.join(sa, on="id_a").join(sb, on="id_b")
+        .filter(jacc >= threshold)
         .select(F.col("id_a").alias(id_col))
         .distinct()
     )
@@ -941,11 +912,9 @@ def jaccard_verify(
     exploded pair-id list): verification only ever needs the docs that
     appear in a candidate pair.
 
-    Single-pass shape (r16, guide §2.4 — the side-split form
-    :func:`cross_corpus_losers` has carried since r10, applied to the
-    self-verify): each side of every pair contributes its distinct
-    shingles as (pair, shingle) rows, the two sides meet in ONE
-    full-outer join on (pair, shingle), and per pair
+    Single-pass shape (r16, guide §2.4): each side of every pair
+    contributes its distinct shingles as (pair, shingle) rows, the two
+    sides meet in ONE full-outer join on (pair, shingle), and per pair
     ``|A∪B| = count(*)``, ``|A∩B| = count(both present)`` — so Jaccard
     falls out of one aggregation. The shingle pipeline is referenced
     TWICE (side a, side b) instead of four times (two intersection
@@ -957,11 +926,18 @@ def jaccard_verify(
     fewer plan subtrees (statusTracker: 4 broadcast-build jobs → 2 on
     the recipe build; plan diff in plans/r16/). The emitted ratio is
     bit-identical: n_inter/n_union and n_inter/(n_a+n_b−n_inter) are
-    the same integer division. Edge-case note: a pair naming an id
-    absent from ``df`` now scores 0.0 when its OTHER side exists (the
-    pre-r16 inner size joins dropped such pairs); candidate generators
-    derive pairs from ``df``, where the behaviors coincide — no
-    declared query's result moves."""
+    the same integer division.
+
+    Absent-id contract (pairs naming ids ``df`` does not hold):
+
+    - ONE id absent: the pair scores 0.0 (its present side's shingles
+      are all union rows, none intersect) — the pre-r16 inner size
+      joins dropped such pairs;
+    - BOTH ids absent: the pair yields no row at all (neither side
+      contributes a shingle row to the full-outer join).
+
+    Candidate generators derive pairs from ``df``, where neither case
+    arises."""
     ids = pairs.select(
         F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias(id_col)
     ).distinct()
@@ -1634,7 +1610,7 @@ def _excise_positions(
     the zero-cost detection; only genuinely-cut docs get rebuilt
     text). Precondition: ``id_col`` is unique in ``df`` — the
     reassembly is per-id, so duplicate ids would interleave their
-    token streams (the cross_corpus_losers id contract).
+    token streams.
 
     Doc-gated projection rebuild (r12, VERDICT r11 #1): ``covered`` is
     consumed EXACTLY ONCE — one groupBy(id) collects each hit doc's cut

@@ -552,11 +552,12 @@ def write_stream_manifest(
     n, "after_near": n, "committed": n}}`` (only the stages configured
     appear) — the "what did my dedup gates drop last night?" audit,
     readable without a Spark job via :func:`ingest_history`. Each
-    recorded stage costs one count() action per batch over the already-
-    materialized batch frame (the gate frames are eagerly checkpointed
-    anyway); default OFF so the bare sink's per-batch job count is
-    unchanged. The drift telemetry riding the semantic index commits
-    (keyindex.semantic_drift_history) is separate and always on.
+    recorded stage costs one count() action per batch over an already-
+    materialized frame (the micro-batch is persisted on entry and every
+    indexed gate materializes its output); default OFF so the bare
+    sink's per-batch job count is unchanged. The drift telemetry riding
+    the semantic index commits (keyindex.semantic_drift_history) is
+    separate and always on.
 
     ``compact_every=N`` runs :func:`manifest.compact` after every Nth
     committed batch — the maintenance a 20-minute-micro-batch table
@@ -703,12 +704,6 @@ def write_stream_manifest(
     if ds is not None:
         stages.append((None, K.GUMBEL, ds))
     indexes = [(spec, cfg) for _, spec, cfg in stages if spec is not None]
-    gated = [spec for _, spec, _ in stages if spec is None or spec.gate]
-    # the gated batch feeds the data commit AND every index commit:
-    # persist it when the last gate leaves it lazy, so the gate plan runs
-    # once (and dropDuplicates can't pick different survivor rows for
-    # different commits); every other gate materializes its output
-    persist = bool(gated) and gated[-1] is not None and gated[-1].lazy_gate
     data_stat_cols = tuple(stat_cols)
     if nd is not None and nd["id_col"] not in data_stat_cols:
         # candidate point-fetch pruning needs id footer stats
@@ -722,9 +717,6 @@ def write_stream_manifest(
             for spec, _ in indexes
         ):
             return  # data and every index committed: pure replay
-        gates: dict | None = {} if telemetry else None
-        if gates is not None:
-            gates["input"] = batch_df.count()
         spark = batch_df.sparkSession
         # Replay with a pending INDEX commit (crash between the data
         # commit and a later index commit): every read below sees the
@@ -737,32 +729,39 @@ def write_stream_manifest(
             # BEFORE the data commit so the snapshot is pre-batch
             K.ensure_index_bootstrap(spec, spark, table, cfg, app,
                                      version=data_version)
-        for label, spec, cfg in stages:
-            if spec is None:
-                from newsmaper_etl_spark.operators.selection import (
-                    classifier_gate,
-                )
-
-                batch_df = classifier_gate(
-                    batch_df, cfg["weights"], bias=cfg["bias"],
-                    threshold=cfg["threshold"], text_col=cfg["text_col"],
-                    id_col=cfg["id_col"], missing=cfg["missing"],
-                    score_col=None,
-                )
-            elif spec.gate is not None:
-                index_version = (
-                    K.replay_version(spec.path(table), app, batch_id)
-                    if main_done else None
-                )
-                batch_df = spec.gate(batch_df, table, cfg, index_version,
-                                     data_version)
-            if gates is not None and label is not None:
-                gates[label] = batch_df.count()
-        if persist:
-            batch_df = batch_df.persist()
-        if gates is not None:
-            gates["committed"] = batch_df.count()
+        # read the micro-batch's source ONCE: every count, gate and commit
+        # below reads the cached rows, and every indexed gate returns its
+        # input or an eagerly materialized frame, so no gate plan re-runs
+        # (and dropDuplicates can't keep different survivors for the data
+        # commit and an index append)
+        src = batch_df = batch_df.persist()
         try:
+            gates: dict | None = {} if telemetry else None
+            if gates is not None:
+                gates["input"] = batch_df.count()
+            for label, spec, cfg in stages:
+                if spec is None:
+                    from newsmaper_etl_spark.operators.selection import (
+                        classifier_gate,
+                    )
+
+                    batch_df = classifier_gate(
+                        batch_df, cfg["weights"], bias=cfg["bias"],
+                        threshold=cfg["threshold"], text_col=cfg["text_col"],
+                        id_col=cfg["id_col"], missing=cfg["missing"],
+                        score_col=None,
+                    )
+                elif spec.gate is not None:
+                    index_version = (
+                        K.replay_version(spec.path(table), app, batch_id)
+                        if main_done else None
+                    )
+                    batch_df = spec.gate(batch_df, table, cfg, index_version,
+                                         data_version)
+                if gates is not None and label is not None:
+                    gates[label] = batch_df.count()
+            if gates is not None:
+                gates["committed"] = batch_df.count()
             if not main_done:
                 meta = {"app": app, "batch_id": batch_id}
                 if gates is not None:
@@ -775,8 +774,7 @@ def write_stream_manifest(
                 K.append_batch_index(spec, batch_df, table, cfg, app,
                                      batch_id)
         finally:
-            if persist:
-                batch_df.unpersist()
+            src.unpersist()
         if compact_every and (batch_id + 1) % int(compact_every) == 0:
             for spec, cfg in indexes:
                 _maintain(lambda: K.compact_index(spec, spark, table, cfg),

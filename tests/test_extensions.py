@@ -1392,14 +1392,102 @@ def test_dedup_review_hardening(spark):
     with pytest.raises(ValueError, match="divide"):
         D.minhash_lsh_candidates(df, num_hashes=16, bands=17)
     # jaccard_verify is a verification primitive: a candidate pair with
-    # ZERO shared shingles gets a 0.0 verdict row, it does not vanish
-    pairs = values_df(spark, [(1, 2), (1, 3)], ["id_a", "id_b"])
+    # ZERO shared shingles gets a 0.0 verdict row, it does not vanish;
+    # a pair naming ONE id absent from df scores 0.0, a pair naming two
+    # absent ids yields no row
+    pairs = values_df(spark, [(1, 2), (1, 3), (1, 8), (9, 2), (8, 9)],
+                      ["id_a", "id_b"])
     got = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in D.jaccard_verify(df, pairs, "doc_id", "text").collect()
     }
-    assert got[(1, 2)] == 1.0
-    assert got[(1, 3)] == 0.0
+    assert got == {(1, 2): 1.0, (1, 3): 0.0, (1, 8): 0.0, (9, 2): 0.0}
+
+
+def _shingle_sets(df, k):
+    """(id, set of distinct hashed shingles) per row of ``df`` — the
+    hashing cross_corpus_losers scores, collected for a Python verify."""
+    rows = df.withColumn("__th", D.token_hashes_col("text")).select(
+        "doc_id",
+        F.array_distinct(D.hashed_shingles_expr("__th", k)).alias("sh"),
+    )
+    return [(r["doc_id"], set(r["sh"])) for r in rows.collect()]
+
+
+@pytest.mark.parametrize("threshold", [0.2, 0.5, 0.8, 1.0])
+def test_cross_corpus_losers_matches_bruteforce_jaccard(spark, threshold):
+    """cross_corpus_losers == a brute-force Python set Jaccard over the
+    same hashed shingles: new rows merged per id (a batch repeating an
+    id scores the union of its texts), each seen row scored as its own
+    version, a new id losing iff ANY candidate version scores >=
+    threshold. Covers docs shorter than k, NULL and empty text, a
+    same-id re-crawl, multi-version seen ids, duplicate new ids, pairs
+    naming absent ids, and an empty candidate set."""
+    k = 3
+    base = "the quick brown fox jumps over the lazy dog near the river"
+    new = values_df(spark, [
+        (1, base + " today"),                 # near base
+        (2, "the quick brown fox jumps high"),  # partial overlap
+        (3, "two words"),                     # shorter than k
+        (4, None),                            # NULL text
+        (5, ""),                              # empty text
+        (6, base),                            # same-id re-crawl of seen 6
+        (7, "a b c d e f"),                   # duplicate new id ...
+        (7, "g h i j k l"),                   # ... merged per id
+        (8, "nothing like anything else at all in here"),
+        (9, "a b c d"),                       # a redelivered row: the
+        (9, "a b c d"),                       # copy adds no shingle
+    ], ["doc_id", "text"])
+    seen = values_df(spark, [
+        (10, base),
+        (11, "the quick brown fox jumps high over walls"),
+        (12, "two words"),
+        (13, None),
+        (14, ""),
+        (6, "an older crawl of doc six with other words"),
+        (15, "a b c d e f"),                  # multi-version seen id:
+        (15, "a b c d e f g h i j k l"),      # the second matches id 7
+        (16, "completely unrelated seen text body"),
+        (17, "a b c d e f g h"),
+    ], ["doc_id", "text"])
+    cands = values_df(spark, [
+        (1, 10), (1, 16), (2, 11), (2, 10), (3, 12), (4, 13), (5, 14),
+        (5, 13), (6, 6), (6, 10), (7, 15), (8, 16), (8, 99), (99, 10),
+        (9, 17),
+    ], ["id_a", "id_b"])
+
+    new_sets: dict = {}
+    for i, s in _shingle_sets(new, k):
+        new_sets.setdefault(i, set()).update(s)
+    seen_sets: dict = {}
+    for i, s in _shingle_sets(seen, k):
+        seen_sets.setdefault(i, []).append(s)
+    want = {
+        a for a, b in cands.collect()
+        if a in new_sets and any(
+            len(new_sets[a] & s) / len(new_sets[a] | s) >= threshold
+            for s in seen_sets.get(b, [])
+        )
+    }
+    got = {
+        r["doc_id"] for r in D.cross_corpus_losers(
+            new, seen, cands, "doc_id", "text", k, threshold).collect()
+    }
+    assert got == want
+    if threshold == 1.0:
+        # exact copies: the short doc, NULL and empty text, and the
+        # same-id re-crawl
+        assert got == {3, 4, 5, 6}
+    if threshold == 0.8:
+        # id 7's merged texts score 8/10 against seen 15's second
+        # version; either text alone would score 4/10
+        assert 7 in got
+    if threshold == 0.5:
+        # id 9 scores 2/6 however often its row is delivered
+        assert 9 not in got
+    empty = cands.limit(0)
+    assert D.cross_corpus_losers(
+        new, seen, empty, "doc_id", "text", k, threshold).count() == 0
 
 
 def test_contamination_same_id_exclusion_is_optional(spark):

@@ -779,6 +779,16 @@ def test_stream_manifest_near_dedup_on_ingest(spark, tmp_path):
     bidx = M.read_table(spark, K.banded_index_path(table))
     assert {r["id"] for r in bidx.collect()} == {1, 2, 12}
     assert bidx.count() == 3 * 4
+    # above max_candidate_ids the seen fetch scans the whole snapshot
+    # instead of pruning files by id: same verdicts
+    probe = spark.createDataFrame(
+        [(20, near), (21, "an unrelated note on garden tools")],
+        "id LONG, text STRING",
+    )
+    for cap in (0, 100_000):
+        kept = K.near_dedup_batch(probe, table, "id", threshold=0.5,
+                                  max_candidate_ids=cap)
+        assert {r["id"] for r in kept.collect()} == {21}
     # parameter drift against the persisted index is refused
     import pytest as _pytest
 
@@ -866,6 +876,98 @@ def test_near_dedup_same_id_recrawl_scores_true_jaccard(spark, tmp_path):
     run(str(tmp_path / "rck1"))
     rows = {(r["id"], r["text"]) for r in M.read_table(spark, table).collect()}
     assert rows == {(1, base), (1, heavy_edit)}  # light edit dropped
+
+
+def test_born_streaming_banded_ids_are_committed_ids(spark, tmp_path):
+    """A born-streaming first batch has no ``_banded`` index yet, so the
+    MinHash gate passes the exact gate's output straight through. With
+    ``dedup_keys`` and no ``dedup_order_col`` the within-batch survivor
+    of each key is arbitrary: the data commit and the ``_banded`` append
+    must see the SAME survivors, so every banded id is a committed id.
+    The batch reads several input files, each holding a copy of every
+    key under its own id, so a re-evaluated dropDuplicates has many
+    survivors to choose from. Local mode fetches shuffle blocks in map
+    order, so a re-evaluation happens to keep the same survivors here;
+    the source read count pins that the gate plan is not re-evaluated
+    (it ran once per consumer before the gates were materialized)."""
+    import json as _json
+
+    from newsmaper_etl_spark import keyindex as K
+    from newsmaper_etl_spark import manifest as M
+    from newsmaper_etl_spark.streaming.pipeline import write_stream_manifest
+
+    src = tmp_path / "bsin"
+    src.mkdir()
+    table = str(tmp_path / "bstable")
+    n_files, n_keys = 8, 40
+    for f in range(n_files):
+        (src / f"b{f}.json").write_text("\n".join(
+            _json.dumps({"id": f * n_keys + i,
+                         "text": f"story {i} about topic {i * 7} and place "
+                                 f"{i * 13} reported by desk {i % 5}"})
+            for i in range(n_keys)
+        ))
+    stream = spark.readStream.schema("id LONG, text STRING").json(str(src))
+    q = write_stream_manifest(
+        stream, table, str(tmp_path / "bsck"), app_id="bsq",
+        dedup_keys=("text",),
+        near_dedup={"id_col": "id", "threshold": 0.9},
+    )
+    q.awaitTermination()
+    assert sum(p["numInputRows"] for p in q.recentProgress) == (
+        n_files * n_keys)
+    data_ids = {r["id"] for r in M.read_table(spark, table).collect()}
+    banded_ids = {
+        r["id"] for r in M.read_table(spark, K.banded_index_path(table))
+        .select("id").distinct().collect()
+    }
+    assert len(data_ids) == n_keys
+    assert banded_ids == data_ids
+
+
+def test_stream_batch_source_read_once(spark, tmp_path):
+    """Every count, gate and commit of a micro-batch reads its source
+    once: with exact + MinHash gates and telemetry (a count per stage)
+    the streaming progress reports each input row read exactly once —
+    on a born-streaming batch and on a batch verified against the
+    index."""
+    import json as _json
+
+    from newsmaper_etl_spark import manifest as M
+    from newsmaper_etl_spark.streaming.pipeline import write_stream_manifest
+
+    base = ("the quick brown fox jumps over the lazy dog while seven "
+            "wizards brew strong coffee at midnight near the harbor")
+    src = tmp_path / "roin"
+    src.mkdir()
+    table = str(tmp_path / "rotable")
+
+    def run(ck) -> int:
+        stream = spark.readStream.schema("id LONG, text STRING").json(str(src))
+        q = write_stream_manifest(
+            stream, table, ck, app_id=f"ro:{ck}",
+            dedup_keys=("text",), dedup_order_col="id",
+            near_dedup={"id_col": "id", "threshold": 0.5},
+            telemetry=True,
+        )
+        q.awaitTermination()
+        return sum(p["numInputRows"] for p in q.recentProgress)
+
+    (src / "b0.json").write_text(
+        _json.dumps({"id": 1, "text": base}) + "\n"
+        + _json.dumps({"id": 2, "text": "a wholly distinct note on bread"})
+        + "\n" + _json.dumps({"id": 3, "text": base})
+    )
+    assert run(str(tmp_path / "rock0")) == 3
+    (src / "b1.json").write_text(
+        _json.dumps({"id": 10, "text": base + " tonight"}) + "\n"
+        + _json.dumps({"id": 11, "text": "orbital mechanics of icy bodies"})
+    )
+    # fresh checkpoint: the batch re-reads both files (5 rows)
+    assert run(str(tmp_path / "rock1")) == 5
+    assert {r["id"] for r in M.read_table(spark, table).collect()} == {
+        1, 2, 11
+    }
 
 
 def test_banded_index_survives_crash_between_key_and_banded_commits(
