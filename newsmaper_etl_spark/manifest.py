@@ -54,6 +54,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections.abc import Callable
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -478,24 +479,53 @@ def overwrite(
     stat_cols: tuple[str, ...] = (),
     base_version: int | None = None,
     partition_by: tuple[str, ...] = (),
-    meta: dict | None = None,
+    meta: dict | Callable[[], dict] | None = None,
+    replaces: list[dict] | None = None,
 ) -> int:
-    """Transactional full rewrite (the atomic form of sinks.rewrite_dedup's
-    rename swap): the new snapshot references ONLY the fresh batch; old
-    files stay on disk for time travel until vacuumed. Safe to compute
-    ``df`` FROM the live table — reads resolve to the old snapshot's
-    explicit file list, which the write never touches. Pass the version
-    the input was read at as ``base_version`` so an interleaved commit
-    fails this write instead of being silently erased. Per-app txn
-    high-water marks are carried forward — a maintenance rewrite must
-    not amnesia the exactly-once state of streaming writers."""
+    """Transactional rewrite (the atomic form of sinks.rewrite_dedup's
+    rename swap): the fresh batch takes the place of the live entries
+    in ``replaces``; old files stay on disk for time travel until
+    vacuumed. Safe to compute ``df`` FROM the live table — reads resolve
+    to the old snapshot's explicit file list, which the write never
+    touches. Pass the version the input was read at as ``base_version``
+    so an interleaved commit fails this write instead of being silently
+    erased. Per-app txn high-water marks are carried forward — a
+    maintenance rewrite must not amnesia the exactly-once state of
+    streaming writers.
+
+    ``replaces=None`` (the default) replaces every entry: a full
+    rewrite, free to change the schema and the layout. A list of live
+    entries of the base snapshot is a PARTIAL replace: only those
+    entries leave the snapshot, every other entry is carried by
+    reference (path, bytes, stats and partition values unchanged), and
+    the write costs only the rows of ``df``. Because the carried files
+    were written under the recorded schema and layout, a partial replace
+    checks the batch against both, as :func:`append` does; an entry that
+    is not live at the base raises.
+
+    ``meta`` may be a zero-argument callable: it is called after the
+    data write and before the commit, so it can record counts observed
+    on the write job itself."""
     create_table(table)
     base = current_version(table) if base_version is None else base_version
     prev = _load_manifest(table, base)
+    if replaces is None:
+        carried, fields = [], _schema_fields(df)
+    else:
+        gone = {e["path"] for e in replaces}
+        missing = gone - {e["path"] for e in prev["files"]}
+        if missing:
+            raise ValueError(
+                f"overwrite of {table} replaces entries that are not live "
+                f"at v{base}: {sorted(missing)}"
+            )
+        fields = _check_schema(df, prev, table)
+        _check_partitioning(prev, partition_by, table)
+        carried = [e for e in prev["files"] if e["path"] not in gone]
     new_files = _write_batch(df, table, list(stat_cols), tuple(partition_by))
     return _commit(
-        table, base, new_files, op="overwrite", meta=meta,
-        schema=_schema_fields(df),
+        table, base, carried + new_files, op="overwrite",
+        meta=meta() if callable(meta) else meta, schema=fields,
         prev_txns=prev.get("txns"), partition_by=tuple(partition_by),
     )
 
@@ -882,9 +912,11 @@ def read_table_changes(
 
 
 def history(table: str) -> list[dict]:
-    """Committed snapshots, oldest first (version/op/file count).
-    Manifests dropped by :func:`vacuum` appear as ``{"vacuumed": True}``
-    placeholders instead of crashing the listing."""
+    """Committed snapshots, oldest first (version/op/file count, plus
+    the commit's ``meta`` when it recorded one — e.g. what a maintenance
+    rewrite replaced and dropped). Manifests dropped by :func:`vacuum`
+    appear as ``{"vacuumed": True}`` placeholders instead of crashing
+    the listing."""
     out = []
     for v in range(1, current_version(table) + 1):
         try:
@@ -892,7 +924,10 @@ def history(table: str) -> list[dict]:
         except FileNotFoundError:
             out.append({"version": v, "vacuumed": True})
             continue
-        out.append({"version": v, "op": m.get("op"), "n_files": len(m["files"])})
+        h = {"version": v, "op": m.get("op"), "n_files": len(m["files"])}
+        if m.get("meta"):
+            h["meta"] = m["meta"]
+        out.append(h)
     return out
 
 

@@ -12,12 +12,18 @@ transactional DELETE/append, so the rebuild's contracts are:
 - ``rewrite_dedup`` the maintenance path (Main.py:28-47): one window per
                     key, overwrite with survivors — set-oriented, no
                     per-row round trips. Two forms: the rename-swap here
-                    (narrow non-atomic window + recover_rewrite), and the
-                    fully atomic ``rewrite_dedup_tx`` /
-                    ``append_news_tx`` on the manifest-committed table
-                    format (newsmaper_etl_spark/manifest.py — snapshot
-                    pointer flip, time travel, footer-stats file
-                    skipping, vacuum).
+                    (whole-table rewrite, narrow non-atomic window +
+                    recover_rewrite), and the fully atomic
+                    ``rewrite_dedup_tx`` / ``append_news_tx`` on the
+                    manifest-committed table format
+                    (newsmaper_etl_spark/manifest.py — snapshot pointer
+                    flip, time travel, footer-stats file skipping,
+                    vacuum). ``rewrite_dedup_tx`` scans only the key
+                    columns to find the files holding a duplicated key,
+                    rewrites just those and carries every other file by
+                    reference; a key-unique table gets no commit, and
+                    the rewrite does not compact (``manifest.compact``
+                    does).
 - ``bootstrap``     creates the warehouse layout: all four tables seeded
                     (the reference *creates* the ``date`` dim but never
                     fills it — Setup.py's gap, SURVEY §3.2 — and its
@@ -312,30 +318,104 @@ def append_news_tx(
 
 
 def rewrite_dedup_tx(spark: SparkSession, table: str) -> int:
-    """Transactional maintenance dedup: survivors are computed FROM the
-    live snapshot (explicit file list — the write can't clobber its own
-    input) and published with :func:`manifest.overwrite` — the atomic
-    form of :func:`rewrite_dedup`'s two-rename swap; no recovery hook
-    needed. Returns the new version."""
+    """Transactional maintenance dedup: the atomic form of
+    :func:`rewrite_dedup`'s two-rename swap, rewriting only the live
+    files that hold a duplicated key. No recovery hook needed.
+
+    Cost model: one scan of the pinned snapshot reads only the key
+    columns and each row's file, and finds the files of every key with
+    more than one row (NULL key components group together, as in the
+    window). A key-unique table gets NO commit: the base version is
+    returned, as :func:`manifest.compact` does. Otherwise only those
+    files are read back, deduped keep-first (same ``__ord`` hash as the
+    full rewrite) and published with :func:`manifest.overwrite` as a
+    partial replace — every other file is carried into the new snapshot
+    by reference. Every row of a duplicated key lies in a rewritten file
+    and every other key already has one row, so the survivors equal a
+    full rewrite's. The rewrite does not compact the table: each call
+    adds the survivors of its rewritten files as new files, and
+    :func:`manifest.compact` is the tool for small files.
+
+    The commit's ``meta`` records ``files_replaced`` and
+    ``rows_dropped`` (observed on the write job; see
+    :func:`manifest.history`). Returns the new version (the base
+    version when there was nothing to drop)."""
     from newsmaper_etl_spark import manifest as M
 
     # pin the base: survivors are computed from THIS snapshot's file
     # list; an interleaved append must fail this rewrite, not vanish
     base = M.current_version(table)
-    # a maintenance rewrite preserves the table's committed Hive layout
-    part_by = tuple(M._load_manifest(table, base).get("partition_by") or ())
-    df = M.read_table(spark, table, version=base)
-    ordered = df.withColumn(
+    manifest = M._load_manifest(table, base)
+    touched = _files_with_duplicate_keys(spark, table, manifest)
+    if not touched:
+        return base
+    df = M._read_entries(spark, table, manifest, touched)
+    seen, kept = Observation(), Observation()
+    ordered = df.observe(seen, F.count(F.lit(1)).alias("n")).withColumn(
         "__ord",
         F.xxhash64(*[
             F.coalesce(F.col(c).cast("string"), F.lit("")) for c in df.columns
         ]),
     )
-    survivors = dedup_keep_first(ordered, NEWS_KEY, order_col="__ord").drop("__ord")
+    survivors = (
+        dedup_keep_first(ordered, NEWS_KEY, order_col="__ord")
+        .drop("__ord")
+        .observe(kept, F.count(F.lit(1)).alias("n"))
+    )
     return M.overwrite(
         survivors, table, stat_cols=("id_date",), base_version=base,
-        partition_by=part_by,
+        # a maintenance rewrite preserves the table's committed Hive layout
+        partition_by=tuple(manifest.get("partition_by") or ()),
+        meta=lambda: {
+            "files_replaced": len(touched),
+            "rows_dropped": int(seen.get["n"]) - int(kept.get["n"]),
+        },
+        replaces=touched,
     )
+
+
+def _files_with_duplicate_keys(
+    spark: SparkSession, table: str, manifest: dict
+) -> list[dict]:
+    """The live entries of ``manifest`` that hold a row of a duplicated
+    :data:`NEWS_KEY` — one scan of the key columns and the file path.
+    Scanned paths are URI-encoded; each is decoded and mapped to its
+    entry exactly, and a path that maps to no entry raises (skipping it
+    would leave its duplicates in place)."""
+    from urllib.parse import unquote, urlparse
+
+    from newsmaper_etl_spark import manifest as M
+
+    if not manifest["files"]:
+        return []
+    # one set of files per duplicated key, merged by a global aggregate:
+    # the driver receives at most one path per live file
+    scanned = (
+        M._read_entries(spark, table, manifest, manifest["files"])
+        .select(*NEWS_KEY, F.col("_metadata.file_path").alias("__file"))
+        .groupBy(*NEWS_KEY)
+        .agg(
+            F.count(F.lit(1)).alias("__n"),
+            F.collect_set("__file").alias("__files"),
+        )
+        .filter(F.col("__n") > 1)
+        .agg(F.array_distinct(F.flatten(F.collect_list("__files"))))
+        .first()[0]
+    )
+    by_path = {
+        os.path.abspath(os.path.join(table, e["path"])): e
+        for e in manifest["files"]
+    }
+    touched = []
+    for uri in scanned:
+        path = os.path.abspath(unquote(urlparse(uri).path))
+        if path not in by_path:
+            raise ValueError(
+                f"scan of {table} read {uri}, which is no live file of "
+                "the snapshot"
+            )
+        touched.append(by_path[path])
+    return sorted(touched, key=lambda e: e["path"])
 
 
 def read_news_tx_for_dates(

@@ -385,6 +385,197 @@ def test_timestamp_stat_cols_do_not_break_commit(spark, tmp_path):
 
 
 # --------------------------------------------------------------------------
+# keep-first maintenance: partial rewrite of the files holding a duplicate
+# --------------------------------------------------------------------------
+
+def _append_news_file(spark, t, rows, partitioned):
+    """Commit ``rows`` (news tuples) as ONE file per day through the raw
+    manifest append, so in-batch duplicates survive into the table."""
+    from newsmaper_etl_spark.sinks import _news_columns, _with_partition
+
+    df = values_df(spark, rows, list(_news_columns())).coalesce(1)
+    if partitioned:
+        df = _with_partition(df)
+    return M.append(
+        df, t, stat_cols=("id_date",),
+        partition_by=(("p_date",) if partitioned else ()),
+    )
+
+
+def _keep_first_rows(df):
+    """The full rewrite's survivors: keep-first over the whole frame with
+    the same ``__ord`` fingerprint as rewrite_dedup_tx."""
+    from collections import Counter
+
+    from newsmaper_etl_spark.operators.newsmaper import NEWS_KEY, dedup_keep_first
+
+    ordered = df.withColumn(
+        "__ord",
+        F.xxhash64(*[
+            F.coalesce(F.col(c).cast("string"), F.lit("")) for c in df.columns
+        ]),
+    )
+    kept = dedup_keep_first(ordered, NEWS_KEY, order_col="__ord").drop("__ord")
+    return Counter(tuple(r) for r in kept.collect())
+
+
+@pytest.mark.parametrize("partitioned", [False, True], ids=["flat", "p_date"])
+def test_rewrite_dedup_tx_rewrites_only_duplicate_files(spark, tmp_path, partitioned):
+    """Equivalence with the full rewrite: the survivors equal keep-first
+    over the whole pre-rewrite snapshot, the file without a duplicate is
+    carried by reference, and time travel still reads every row."""
+    from collections import Counter
+
+    from newsmaper_etl_spark.sinks import rewrite_dedup_tx
+
+    t = str(tmp_path / "news tx" / "t")
+    d = 2023010100
+    # old file: key 1 is duplicated later by the newest append; the NULL-
+    # title key (1, d+99, NULL) is too
+    _append_news_file(spark, t, [
+        (1, 1, d + 0, "t0", "l0", "x", "m"),
+        (1, 1, d + 1, "t1", "l1", "old", "m"),
+        (1, 1, d + 99, None, "ln", "old", "m"),
+    ], partitioned)
+    # clean file: no key of it appears anywhere else (a later day)
+    _append_news_file(spark, t, [
+        (1, 1, d + 110, "t10", "l10", "x", "m"),
+        (1, 2, d + 111, "t11", "l11", "x", "m"),
+    ], partitioned)
+    # newest append: a duplicate inside it (key 20), one across files
+    # (key 1), and the NULL-component key again
+    _append_news_file(spark, t, [
+        (1, 1, d + 1, "t1", "l1b", "new", "m"),
+        (1, 1, d + 20, "t20", "a", "x", "m"),
+        (2, 1, d + 20, "t20", "b", "y", "m"),
+        (1, 1, d + 99, None, "ln2", "new", "m"),
+        (1, 1, d + 21, "t21", "l21", "x", "m"),
+    ], partitioned)
+    base = M.current_version(t)
+    before = M._load_manifest(t, base)
+    clean = [e for e in before["files"] if e["stats"]["id_date"][0] == d + 110]
+    assert len(clean) == 1
+    expected = _keep_first_rows(M.read_table(spark, t, version=base))
+
+    v = rewrite_dedup_tx(spark, t)
+
+    assert v == base + 1
+    after = M._load_manifest(t, v)
+    got = Counter(tuple(r) for r in M.read_table(spark, t).collect())
+    assert got == expected
+    assert sum(got.values()) == 7
+    # the clean file is carried unchanged: path, bytes, stats, partition
+    assert clean[0] in after["files"]
+    replaced = [e for e in before["files"] if e not in clean]
+    assert not [e for e in replaced if e in after["files"]]
+    assert after["partition_by"] == (["p_date"] if partitioned else [])
+    assert after["schema"] == before["schema"]
+    assert after["meta"] == {"files_replaced": len(replaced), "rows_dropped": 3}
+    assert M.history(t)[-1] == {
+        "version": v, "op": "overwrite", "n_files": len(after["files"]),
+        "meta": after["meta"],
+    }
+    # time travel to the pre-rewrite snapshot still reads every row
+    assert M.read_table(spark, t, version=base).count() == 10
+
+
+def test_rewrite_dedup_tx_clean_table_commits_nothing(spark, tmp_path):
+    """A key-unique table gets no commit: the base version comes back and
+    no manifest or data directory is written — and a rewrite right after
+    a rewrite is a no-op too."""
+    from newsmaper_etl_spark.sinks import rewrite_dedup_tx
+
+    t = str(tmp_path / "clean tx")
+
+    def listing():
+        return (
+            sorted(os.listdir(os.path.join(t, "_manifests"))),
+            sorted(os.listdir(os.path.join(t, "data"))),
+        )
+
+    M.append(_news_rows(spark, [0, 1, 2]), t, stat_cols=("id_date",))
+    M.append(_news_rows(spark, [3, 4]), t, stat_cols=("id_date",))
+    snap = listing()
+    assert rewrite_dedup_tx(spark, t) == 2
+    assert listing() == snap
+    M.append(_news_rows(spark, [4, 5]), t, stat_cols=("id_date",))  # dup key 4
+    v = rewrite_dedup_tx(spark, t)
+    assert v == 4
+    assert M.read_table(spark, t).count() == 6
+    snap = listing()
+    assert rewrite_dedup_tx(spark, t) == v
+    assert listing() == snap
+
+
+def test_rewrite_dedup_tx_unmapped_scan_path_raises(spark, tmp_path, monkeypatch):
+    """Scanned file paths are URI-encoded: each must map to a manifest
+    entry exactly, and one that maps to none fails the rewrite instead of
+    being skipped (its duplicates would silently stay live)."""
+    import urllib.parse
+
+    from newsmaper_etl_spark.sinks import rewrite_dedup_tx
+
+    t = str(tmp_path / "space tx")
+    M.append(_news_rows(spark, [0, 1]), t, stat_cols=("id_date",))
+    M.append(_news_rows(spark, [1]), t, stat_cols=("id_date",))
+    # without the decode, "space%20tx" names no live file
+    monkeypatch.setattr(urllib.parse, "unquote", lambda s: s)
+    with pytest.raises(ValueError, match="no live file"):
+        rewrite_dedup_tx(spark, t)
+    assert M.current_version(t) == 2
+
+
+def test_overwrite_partial_replace_guards(spark, tmp_path):
+    """A partial replace carries the other entries by reference, so the
+    batch must match the recorded schema and layout; txn marks and
+    partition_by carry forward; only live entries can be replaced; a
+    moved base fails the commit."""
+    t = str(tmp_path / "partial")
+    cols = ["id", "day", "v"]
+    M.append(values_df(spark, [(1, 20, "a")], cols), t, stat_cols=("id",),
+             partition_by=("day",), txn=("writer", 3))
+    M.append(values_df(spark, [(2, 21, "b")], cols), t, stat_cols=("id",),
+             partition_by=("day",))
+    base = M.current_version(t)
+    first, second = M._load_manifest(t, base)["files"]
+    with pytest.raises(ValueError, match="schema mismatch"):
+        M.overwrite(
+            values_df(spark, [(1, 20, "a", 1)], cols + ["extra"]), t,
+            partition_by=("day",), replaces=[first],
+        )
+    with pytest.raises(ValueError, match="partitioning mismatch"):
+        M.overwrite(values_df(spark, [(1, 20, "a")], cols), t, replaces=[first])
+    with pytest.raises(ValueError, match="not live"):
+        M.overwrite(
+            values_df(spark, [(1, 20, "a")], cols), t, partition_by=("day",),
+            replaces=[dict(first, path="data/day=20/gone.parquet")],
+        )
+    assert M.current_version(t) == base  # every rejection before the commit
+
+    v = M.overwrite(
+        values_df(spark, [(1, 20, "z")], cols), t, stat_cols=("id",),
+        base_version=base, partition_by=("day",), replaces=[first],
+        meta=lambda: {"why": "test"},
+    )
+    m = M._load_manifest(t, v)
+    assert second in m["files"] and first not in m["files"]
+    assert m["partition_by"] == ["day"]
+    assert m["meta"] == {"why": "test"}
+    assert M.last_txn_version(t, "writer") == 3
+    assert sorted(
+        (r["id"], r["day"], r["v"]) for r in M.read_table(spark, t).collect()
+    ) == [(1, 20, "z"), (2, 21, "b")]
+
+    # a commit landed since the caller's base: the rewrite must fail
+    with pytest.raises(M.ConcurrentWriteError):
+        M.overwrite(
+            values_df(spark, [(2, 21, "y")], cols), t, base_version=base,
+            partition_by=("day",), replaces=[second],
+        )
+    assert M.current_version(t) == v
+
+
+# --------------------------------------------------------------------------
 # compact() + additive schema evolution — round 6
 # --------------------------------------------------------------------------
 
