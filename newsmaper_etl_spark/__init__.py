@@ -15,9 +15,9 @@ Layout:
     operators/   — reusable DataFrame→DataFrame operators (reference-domain
                    pipeline ops + scale extensions: dedup, similarity, text)
     sources/     — non-parquet sources (RSS/CSV/JSON) with pinned schemas
-    sinks        — batch parquet sinks + warehouse bootstrap (idempotent
-                   append, maintenance dedup rewrite; _tx variants commit
-                   through the manifest table format)
+    sinks        — the news fact table on the manifest format (idempotent
+                   append, keep-first maintenance, date-ranged reads) +
+                   warehouse bootstrap
     manifest     — manifest-committed tables: atomic snapshot pointer-flip
                    commits, time travel, footer-stats file skipping, vacuum
     streaming/   — Structured Streaming composition of the pipeline

@@ -6,12 +6,16 @@
         --references-json references.json [--strict] [--dedup]
 
 Equivalent to `setup_newsmaper_pipeline` (first run bootstraps the
-warehouse: countries, sources, generated date dim, empty news) followed
-by one `newsmaper_pipeline` run (fetch feeds → transform → idempotent
-append; `--dedup` also runs the maintenance rewrite, Main.py:28-47).
-Re-running is a no-op for already-loaded items (anti-join append).
-Schedule it every 20 minutes for reference cadence, or use
-streaming.pipeline for the Structured Streaming mode.
+warehouse: countries, sources, generated date dim, and an empty
+day-partitioned `news` manifest table) followed by one
+`newsmaper_pipeline` run (fetch feeds → transform → idempotent append,
+one manifest commit). `--dedup` also runs the maintenance (Main.py:28-47):
+the keep-first dedup, then a compaction of the day partitions that hold
+more than one small file, then a vacuum of files older than 24 h that
+the latest snapshot no longer references. Re-running is a no-op for
+already-loaded items (anti-join append). Schedule it every 20 minutes
+for reference cadence, or use streaming.pipeline for the Structured
+Streaming mode.
 """
 
 from __future__ import annotations
@@ -30,13 +34,15 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--strict", action="store_true",
                    help="fix the reference's pinned bugs (L4/L9) instead of reproducing them")
     p.add_argument("--dedup", action="store_true",
-                   help="also run the keep-first maintenance rewrite")
+                   help="also run the maintenance: keep-first dedup, then "
+                        "compact, then vacuum")
     p.add_argument("--permissive", action="store_true",
                    help="skip unfetchable/malformed feeds instead of failing")
     p.add_argument("--date-start", default="2023-01-01 00:00:00")
     p.add_argument("--date-end", default="2023-12-31 23:00:00")
     args = p.parse_args(argv)
 
+    from newsmaper_etl_spark import manifest as M
     from newsmaper_etl_spark import sinks
     from newsmaper_etl_spark.operators.newsmaper import run_pipeline
     from newsmaper_etl_spark.session import get_spark
@@ -46,11 +52,17 @@ def main(argv: list[str] | None = None) -> int:
         read_sources_csv,
     )
 
+    table = sinks.news_path(args.warehouse)
+    if os.path.exists(table) and not os.path.isdir(
+        os.path.join(table, "_manifests")
+    ):
+        p.error(f"{table} exists but is not a manifest table")
+
     spark = get_spark(app_name="newsmaper-pipeline")
     sources = read_sources_csv(spark, args.sources_csv)
     references = read_references_json(spark, args.references_json)
 
-    if not os.path.exists(sinks.news_path(args.warehouse)):
+    if not os.path.exists(table):
         sinks.bootstrap(
             spark,
             args.warehouse,
@@ -63,7 +75,12 @@ def main(argv: list[str] | None = None) -> int:
     articles = read_rss(spark, sources, permissive=args.permissive)
 
     date_dim = spark.read.parquet(os.path.join(args.warehouse, "date"))
-    existing = sinks.read_news(spark, args.warehouse)
+    base = M.current_version(table)
+    existing = (
+        M.read_table(spark, table, version=base)
+        if base > 0
+        else spark.createDataFrame([], sinks.NEWS_DDL)
+    )
     new_rows = run_pipeline(
         articles=articles,
         references=references,
@@ -71,10 +88,12 @@ def main(argv: list[str] | None = None) -> int:
         news_existing=existing,
         strict=args.strict,
     )
-    appended = sinks.append_news(spark, new_rows, args.warehouse)
+    appended = sinks.append_news_tx(spark, new_rows, table, partitioned=True)
     if args.dedup:
-        sinks.rewrite_dedup(spark, args.warehouse)
-    total = sinks.read_news(spark, args.warehouse).count()
+        sinks.rewrite_dedup_tx(spark, table)
+        M.compact(spark, table)
+        M.vacuum(table)
+    total = M.read_table(spark, table).count()
     print(json.dumps({"appended": appended, "news_total": total}))
     return 0
 

@@ -1,11 +1,10 @@
-"""Manifest-committed parquet tables — the transactional upgrade path
-documented at sinks.py (rewrite_dedup: "on object stores the swap
-becomes a manifest/pointer flip"), implemented.
+"""Manifest-committed parquet tables — the one format of the ``news``
+fact table (sinks.py) and of the streaming sink's tables.
 
 Plain directory-of-parquet tables have two failure modes at warehouse
-scale: a crashed overwrite leaves a half-written table (sinks.py's
-rename-swap narrows but cannot close the window), and readers racing an
-append can list a directory mid-write. The fix — the same design Delta
+scale: a crashed overwrite leaves a half-written table (a rename swap
+narrows but cannot close the window), and readers racing an append can
+list a directory mid-write. The fix — the same design Delta
 Lake / Iceberg use, reduced to its load-bearing core — is to make the
 set of live files an immutable, versioned VALUE and commits a single
 atomic pointer flip:
@@ -482,8 +481,8 @@ def overwrite(
     meta: dict | Callable[[], dict] | None = None,
     replaces: list[dict] | None = None,
 ) -> int:
-    """Transactional rewrite (the atomic form of sinks.rewrite_dedup's
-    rename swap): the fresh batch takes the place of the live entries
+    """Transactional rewrite (e.g. sinks.rewrite_dedup_tx's keep-first
+    maintenance): the fresh batch takes the place of the live entries
     in ``replaces``; old files stay on disk for time travel until
     vacuumed. Safe to compute ``df`` FROM the live table — reads resolve
     to the old snapshot's explicit file list, which the write never

@@ -15,6 +15,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, rounded up to whole GB and capped at 48g: in
+    local mode the driver JVM is the whole engine, and a heap cap above
+    the box's memory lets it grow until the host kills it."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, -(-ram // (2 * 1024**3)))}g"
+
+
 def get_spark(
     app_name: str = "newsmaper_etl_spark",
     master: str | None = None,
@@ -68,7 +76,8 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -2,48 +2,46 @@
 
 The reference appends with ``to_sql(if_exists='append')`` (Load.py:28,
 Setup.py:60) onto DDL-created tables (Setup.py:26-53) and repairs
-duplicates with per-row DELETEs (Main.py:43-47). Parquet has no
-transactional DELETE/append, so the rebuild's contracts are:
+duplicates with per-row DELETEs (Main.py:43-47). Here the ``news`` fact
+table has one format, the manifest-committed table
+(newsmaper_etl_spark/manifest.py — snapshot pointer flip, time travel,
+file skipping, vacuum), and every contract is one atomic commit:
 
-- ``append_news``   idempotent append: anti-join against the live table's
-                    keys (the reference's Load semantics, L7) then a
-                    plain parquet append — rerunning the same batch adds
-                    zero rows.
-- ``rewrite_dedup`` the maintenance path (Main.py:28-47): one window per
-                    key, overwrite with survivors — set-oriented, no
-                    per-row round trips. Two forms: the rename-swap here
-                    (whole-table rewrite, narrow non-atomic window +
-                    recover_rewrite), and the fully atomic
-                    ``rewrite_dedup_tx`` / ``append_news_tx`` on the
-                    manifest-committed table format
-                    (newsmaper_etl_spark/manifest.py — snapshot pointer
-                    flip, time travel, footer-stats file skipping,
-                    vacuum). ``rewrite_dedup_tx`` scans only the key
-                    columns to find the files holding a duplicated key,
-                    rewrites just those and carries every other file by
-                    reference; a key-unique table gets no commit, and
-                    the rewrite does not compact (``manifest.compact``
-                    does).
-- ``bootstrap``     creates the warehouse layout: all four tables seeded
-                    (the reference *creates* the ``date`` dim but never
-                    fills it — Setup.py's gap, SURVEY §3.2 — and its
-                    countries seed is syntactically broken after 4 of 12
-                    rows, ledger L8; both closed here).
-
-At scale: ``news`` is written partitioned by ``id_date``'s date prefix so
-star-join queries get partition pruning; appends touch only new
-partitions' files.
+- ``append_news_tx``         idempotent append: anti-join against the
+                             pinned snapshot's keys (the reference's
+                             Load semantics, L7) — rerunning the same
+                             batch adds zero rows. ``partitioned=True``
+                             lays rows out in day-grain ``p_date``
+                             partitions (the CLI's product table).
+- ``rewrite_dedup_tx``       keep-first maintenance (Main.py:28-47): one
+                             window per key, set-oriented, no per-row
+                             round trips. It scans only the key columns
+                             to find the files holding a duplicated key,
+                             rewrites just those and carries every other
+                             file by reference; a key-unique table gets
+                             no commit, and the rewrite does not compact
+                             (``manifest.compact`` does).
+- ``read_news_tx_for_dates`` date-ranged read: files prune on their
+                             recorded ``p_date`` value or footer
+                             ``id_date`` range before Spark plans the
+                             scan.
+- ``bootstrap``              creates the warehouse: the dims seeded (the
+                             reference *creates* the ``date`` dim but
+                             never fills it — Setup.py's gap, SURVEY
+                             §3.2 — and its countries seed is
+                             syntactically broken after 4 of 12 rows,
+                             ledger L8; both closed here) and an empty
+                             ``news`` manifest table.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from newsmaper_etl_spark import manifest as M
 from newsmaper_etl_spark.operators.newsmaper import (
     NEWS_KEY,
     append_new_rows,
@@ -69,15 +67,15 @@ COUNTRIES_SEED = (
     (12, "Venezuela", "Caracas"),
 )
 
-_NEWS_DDL = (
+#: The fact table's columns (the reference's news DDL, Setup.py:43-53).
+NEWS_DDL = (
     "id_country INT, id_source INT, id_date INT, "
     "title STRING, link STRING, description STRING, media STRING"
 )
 #: Partition column: the yyyymmdd prefix of the yyyymmddhh surrogate —
-#: day-grain directories, so appends touch only new days and date-ranged
-#: reads prune at the file listing (see read_news_for_dates).
+#: day-grain directories, so appends touch only the days they carry and
+#: date-ranged reads prune on recorded values (see read_news_tx_for_dates).
 _PART_COL = "p_date"
-_NEWS_DDL_STORED = _NEWS_DDL + f", {_PART_COL} INT"
 
 
 def news_path(warehouse_dir: str) -> str:
@@ -86,106 +84,6 @@ def news_path(warehouse_dir: str) -> str:
 
 def _with_partition(df: DataFrame) -> DataFrame:
     return df.withColumn(_PART_COL, F.expr("id_date div 100").cast("int"))
-
-
-def read_news(spark: SparkSession, warehouse_dir: str) -> DataFrame:
-    return (
-        spark.read.schema(_NEWS_DDL_STORED)
-        .parquet(news_path(warehouse_dir))
-        .drop(_PART_COL)
-    )
-
-
-def read_news_for_dates(
-    spark: SparkSession, warehouse_dir: str, from_key: int, to_key: int
-) -> DataFrame:
-    """Date-ranged read with PARTITION PRUNING: the filter lands on the
-    partition column, so only the covered day directories are listed and
-    scanned (at 100 TB the difference between reading a week and reading
-    the table). Keys are yyyymmddhh surrogates, bounds inclusive."""
-    df = spark.read.schema(_NEWS_DDL_STORED).parquet(news_path(warehouse_dir))
-    return df.filter(
-        (F.col(_PART_COL) >= from_key // 100) & (F.col(_PART_COL) <= to_key // 100)
-    ).filter((F.col("id_date") >= from_key) & (F.col("id_date") <= to_key)).drop(
-        _PART_COL
-    )
-
-
-def append_news(
-    spark: SparkSession, new_rows: DataFrame, warehouse_dir: str
-) -> int:
-    """Idempotent append (Load.py:8-28): anti-join on the composite key
-    against the existing table, append only the novel rows — into
-    day-grain partitions, so an append only creates/extends the days it
-    carries. Returns the appended count (the reference logs it,
-    Load.py:27)."""
-    path = news_path(warehouse_dir)
-    existing = read_news(spark, warehouse_dir)
-    novel = append_new_rows(new_rows.select(*_news_columns()), existing, NEWS_KEY)
-    # observe() counts the appended rows ON the write job itself — one
-    # pass, no post-write re-listing of the table (a before/after count
-    # is a full file listing per micro-append at warehouse scale)
-    obs = Observation()
-    staged = _with_partition(novel).observe(obs, F.count(F.lit(1)).alias("n"))
-    staged.write.partitionBy(_PART_COL).mode("append").parquet(path)
-    return int(obs.get["n"])
-
-
-def rewrite_dedup(spark: SparkSession, warehouse_dir: str) -> None:
-    """Maintenance dedup (Main.py:28-47): keep-first per composite key,
-    rewrite the table with survivors. The window orders by a stable row
-    fingerprint of the full tuple (parquet rows carry no SERIAL id), so
-    the survivor choice is deterministic.
-
-    Crash-safe two-phase rewrite: survivors stream into a STAGING
-    directory (so the job never overwrites the path it is reading — no
-    whole-table localCheckpoint materialization either), then the swap is
-    two directory renames. A crash anywhere during the write leaves the
-    live table untouched; only the rename pair itself is a non-atomic
-    window, and :func:`recover_rewrite` rolls a half-swap back. On a
-    transactional table format this is a single ``DELETE WHERE``; on
-    object stores the swap becomes a manifest/pointer flip."""
-    path = news_path(warehouse_dir)
-    staging = _write_survivors_staged(spark, warehouse_dir)
-    _swap_table_dir(path, staging)
-
-
-def _write_survivors_staged(spark: SparkSession, warehouse_dir: str) -> str:
-    """Phase 1: compute keep-first survivors and write them to a staging
-    dir next to the live table. Returns the staging path; the live table
-    is not touched."""
-    df = read_news(spark, warehouse_dir)
-    ordered = df.withColumn(
-        "__ord", F.xxhash64(*[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in df.columns])
-    )
-    survivors = dedup_keep_first(ordered, NEWS_KEY, order_col="__ord").drop("__ord")
-    staging = news_path(warehouse_dir) + f".staging-{uuid.uuid4().hex[:8]}"
-    _with_partition(survivors).write.partitionBy(_PART_COL).mode("overwrite").parquet(staging)
-    return staging
-
-
-def _swap_table_dir(path: str, staging: str) -> None:
-    """Phase 2: retire the live dir and promote staging via two renames."""
-    retired = path + ".old"
-    if os.path.exists(retired):
-        shutil.rmtree(retired)
-    os.rename(path, retired)
-    os.rename(staging, path)
-    shutil.rmtree(retired)
-
-
-def recover_rewrite(warehouse_dir: str) -> None:
-    """Roll back a crash inside :func:`_swap_table_dir`'s rename window:
-    if the live dir is missing, restore the retired copy; drop any
-    leftover staging dirs (safe to re-run anytime)."""
-    path = news_path(warehouse_dir)
-    retired = path + ".old"
-    if not os.path.exists(path) and os.path.exists(retired):
-        os.rename(retired, path)
-    parent, base = os.path.dirname(path), os.path.basename(path)
-    for d in os.listdir(parent):
-        if d.startswith(base + ".staging-"):
-            shutil.rmtree(os.path.join(parent, d))
 
 
 def bootstrap(
@@ -200,7 +98,8 @@ def bootstrap(
 
     Writes countries (full 12-row seed — L8), sources (caller-provided or
     the fixture registry), the GENERATED hour-grain date dim, an optional
-    references dictionary, and an empty news table. Returns table→path.
+    references dictionary, and an empty ``news`` manifest table (version
+    0: directories only, no Spark job). Returns table→path.
     """
     from newsmaper_etl_spark import fixtures as FX
 
@@ -226,9 +125,8 @@ def bootstrap(
         paths["references"] = os.path.join(warehouse_dir, "references")
         references.write.mode("overwrite").parquet(paths["references"])
 
-    empty_news = spark.createDataFrame([], _NEWS_DDL_STORED)
     paths["news"] = news_path(warehouse_dir)
-    empty_news.write.partitionBy(_PART_COL).mode("overwrite").parquet(paths["news"])
+    M.create_table(paths["news"])
     return paths
 
 
@@ -268,19 +166,15 @@ def _news_columns() -> tuple[str, ...]:
     )
 
 
-# --------------------------------------------------------------------------
-# Manifest-committed variants (transactional upgrade of the paths above —
-# see newsmaper_etl_spark/manifest.py for the protocol)
-# --------------------------------------------------------------------------
-
 def append_news_tx(
     spark: SparkSession, new_rows: DataFrame, table: str,
     partitioned: bool = False,
 ) -> int:
-    """Transactional idempotent append: same anti-join contract as
-    :func:`append_news`, committed as one manifest pointer flip instead
-    of bare directory appends — a crash mid-write leaves the previous
-    snapshot fully intact and readers never see a half-batch. Per-file
+    """Transactional idempotent append (Load.py:8-28): anti-join on the
+    composite key against the pinned snapshot, then only the novel rows
+    are committed as one manifest pointer flip — a crash mid-write leaves
+    the previous snapshot fully intact and readers never see a
+    half-batch. Per-file
     ``id_date`` min/max land in the manifest, so date-ranged reads prune
     files without partition directories. Returns the appended count.
 
@@ -288,10 +182,8 @@ def append_news_tx(
     Hive subdirs (``p_date=yyyymmdd/``) and records each file's exact
     partition value on its manifest entry — date-ranged reads then prune
     on recorded values, no footer stats needed, and appends only create
-    the days they carry (the manifest analog of :func:`append_news`'s
-    partitionBy; the layout choice is committed and enforced table-wide)."""
-    from newsmaper_etl_spark import manifest as M
-
+    the days they carry (the layout choice is committed and enforced
+    table-wide)."""
     novel = new_rows.select(*_news_columns())
     # pin the base: the anti-join decides novelty against THIS snapshot,
     # so the commit must fail (ConcurrentWriteError) if another writer
@@ -318,30 +210,32 @@ def append_news_tx(
 
 
 def rewrite_dedup_tx(spark: SparkSession, table: str) -> int:
-    """Transactional maintenance dedup: the atomic form of
-    :func:`rewrite_dedup`'s two-rename swap, rewriting only the live
-    files that hold a duplicated key. No recovery hook needed.
+    """Transactional maintenance dedup (Main.py:28-47): keep-first per
+    composite key, rewriting only the live files that hold a duplicated
+    key. The window orders by a stable fingerprint of the full row
+    (parquet rows carry no SERIAL id), so the survivor choice is
+    deterministic. A crash before the pointer flip leaves the base
+    snapshot live; the orphaned survivor files are reclaimed by
+    :func:`manifest.vacuum`.
 
     Cost model: one scan of the pinned snapshot reads only the key
     columns and each row's file, and finds the files of every key with
     more than one row (NULL key components group together, as in the
     window). A key-unique table gets NO commit: the base version is
     returned, as :func:`manifest.compact` does. Otherwise only those
-    files are read back, deduped keep-first (same ``__ord`` hash as the
-    full rewrite) and published with :func:`manifest.overwrite` as a
-    partial replace — every other file is carried into the new snapshot
-    by reference. Every row of a duplicated key lies in a rewritten file
-    and every other key already has one row, so the survivors equal a
-    full rewrite's. The rewrite does not compact the table: each call
-    adds the survivors of its rewritten files as new files, and
+    files are read back, deduped keep-first and published with
+    :func:`manifest.overwrite` as a partial replace — every other file
+    is carried into the new snapshot by reference. Every row of a
+    duplicated key lies in a rewritten file and every other key already
+    has one row, so the survivors equal a whole-table keep-first
+    rewrite's. The rewrite does not compact the table: each call adds
+    the survivors of its rewritten files as new files, and
     :func:`manifest.compact` is the tool for small files.
 
     The commit's ``meta`` records ``files_replaced`` and
     ``rows_dropped`` (observed on the write job; see
     :func:`manifest.history`). Returns the new version (the base
     version when there was nothing to drop)."""
-    from newsmaper_etl_spark import manifest as M
-
     # pin the base: survivors are computed from THIS snapshot's file
     # list; an interleaved append must fail this rewrite, not vanish
     base = M.current_version(table)
@@ -384,8 +278,6 @@ def _files_with_duplicate_keys(
     would leave its duplicates in place)."""
     from urllib.parse import unquote, urlparse
 
-    from newsmaper_etl_spark import manifest as M
-
     if not manifest["files"]:
         return []
     # one set of files per duplicated key, merged by a global aggregate:
@@ -425,10 +317,7 @@ def read_news_tx_for_dates(
     day-partitioned table (append_news_tx partitioned=True) files prune
     by their RECORDED partition value — exact, no footer read; otherwise
     by footer id_date min/max. Either way the skip happens before Spark
-    plans the scan (the tx analog of :func:`read_news_for_dates`'s
-    partition pruning, at file grain)."""
-    from newsmaper_etl_spark import manifest as M
-
+    plans the scan: partition pruning at file grain."""
     # pin the layout probe and the read to ONE version: a commit landing
     # between two separate current_version() calls could make the layout
     # decision and the snapshot disagree (and read_table would re-load

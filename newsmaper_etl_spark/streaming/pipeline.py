@@ -8,7 +8,9 @@ three mechanisms natively:
 - trigger: ``processingTime='20 minutes'`` (or ``availableNow`` for
   catch-up runs — the analog of ``catchup=False``);
 - exactly-once: ``dropDuplicatesWithinWatermark`` on the composite key
-  (L7) + an idempotent sink — no target anti-join scan per batch;
+  (L7) + the manifest sink (:func:`write_stream_manifest`: per-writer
+  txn marks make each batch land once, its ``_keys`` index admits each
+  key once) — no target anti-join scan per batch;
 - late/duplicate repair: subsumed by the watermark; the batch
   ``dedup_keep_first`` remains available as a repair job.
 
@@ -110,42 +112,6 @@ def transform_stream(
     )
 
 
-def write_stream(
-    df: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-):
-    """Parquet append sink with checkpointing. Idempotence: the sink is
-    append-only parquet + the dedup state guarantees each key once within
-    the watermark; exactly-once file commit comes from the streaming
-    file-sink log."""
-    writer = (
-        df.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    trigger = trigger or {"availableNow": True}
-    return writer.trigger(**trigger).start()
-
-
-def run_once(
-    spark: SparkSession,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    references: DataFrame,
-    date_dim: DataFrame,
-) -> None:
-    """availableNow catch-up run: process whatever article files exist,
-    then stop — the streaming analog of one reference DAG run."""
-    articles = read_article_stream(spark, source_dir)
-    result = transform_stream(articles, references, date_dim)
-    q = write_stream(result, out_dir, checkpoint_dir)
-    q.awaitTermination()
-
-
 def run_rss_stream(
     spark: SparkSession,
     sources: DataFrame,
@@ -158,10 +124,15 @@ def run_rss_stream(
 ):
     """The COMPLETE streaming replacement for the reference's scheduler:
     rss polling stream (one fetch per feed per micro-batch) → transform
-    chain → watermarked dedup → parquet sink. With
+    chain → watermarked dedup → :func:`write_stream_manifest` onto the
+    manifest table ``out_dir``. With
     ``trigger={'processingTime': '20 minutes'}`` this IS the reference's
-    cadence (Main.py:23) minus Airflow; each poll re-emits current feed
-    items and the dedup state admits each composite key once.
+    cadence (Main.py:23) minus Airflow. Each poll re-emits current feed
+    items: the watermark state drops repeats within the lateness window,
+    and the sink's ``_keys`` index on :data:`NEWS_KEY` admits each
+    composite key at most once across the table's history — also after
+    a restart on a fresh checkpoint. Per-file ``id_date`` stats are
+    recorded for date-ranged reads.
 
     Returns the StreamingQuery (caller stops/awaits). Default trigger is
     one micro-batch (``once``) — a single poll, the test/catch-up shape.
@@ -183,8 +154,9 @@ def run_rss_stream(
         .load()
     )
     result = transform_stream(articles, references, date_dim)
-    return write_stream(
-        result, out_dir, checkpoint_dir, trigger=trigger or {"once": True}
+    return write_stream_manifest(
+        result, out_dir, checkpoint_dir, trigger=trigger or {"once": True},
+        stat_cols=("id_date",), dedup_keys=NEWS_KEY,
     )
 
 

@@ -135,6 +135,47 @@ def test_rewrite_dedup_tx_atomic(spark, tmp_path):
     assert M.read_table(spark, t, version=v - 1).count() == 4  # old snapshot intact
 
 
+def test_rewrite_dedup_tx_crash_before_commit_leaves_table_readable(
+    spark, tmp_path, monkeypatch
+):
+    """Dying after the survivors are written and before the pointer flip
+    leaves the base snapshot live; a rerun drops the duplicate, and vacuum
+    reclaims the orphaned survivor files."""
+    from newsmaper_etl_spark.sinks import rewrite_dedup_tx
+
+    t = str(tmp_path / "news_crash")
+    M.append(_news_rows(spark, [0, 1]), t, stat_cols=("id_date",))
+    M.append(_news_rows(spark, [1, 2]), t, stat_cols=("id_date",))  # dup key 1
+
+    def data_files():
+        return {
+            os.path.join(d, n)
+            for d, _, names in os.walk(os.path.join(t, "data"))
+            for n in names if n.endswith(".parquet")
+        }
+
+    before = data_files()
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("crash before the pointer flip")
+
+    monkeypatch.setattr(M, "_commit", crash)
+    with pytest.raises(RuntimeError, match="pointer flip"):
+        rewrite_dedup_tx(spark, t)
+    monkeypatch.undo()
+    orphans = data_files() - before
+    assert orphans  # the survivors were written, never referenced
+    assert M.current_version(t) == 2
+    assert M.read_table(spark, t).count() == 4  # the base version's rows
+
+    v = rewrite_dedup_tx(spark, t)
+    assert v == 3
+    assert M.read_table(spark, t).count() == 3
+    M.vacuum(t, retain_seconds=0)
+    assert not orphans & data_files()
+    assert M.read_table(spark, t).count() == 3
+
+
 def test_read_news_tx_for_dates_prunes(spark, tmp_path):
     from newsmaper_etl_spark.sinks import append_news_tx, read_news_tx_for_dates
 

@@ -1,24 +1,15 @@
-"""Batch sink + bootstrap tests (S6/S7/S8): bootstrap → pipeline → append
-→ re-append adds zero rows; maintenance rewrite dedups in place."""
+"""Warehouse bootstrap test (S8). The news sink's contracts (idempotent
+append, keep-first maintenance, date-ranged reads) are pinned on the
+manifest table in tests/test_manifest.py and through the CLI in
+tests/test_sources.py."""
 
 from __future__ import annotations
 
+import os
+
 from newsmaper_etl_spark import fixtures as FX
+from newsmaper_etl_spark import manifest as M
 from newsmaper_etl_spark import sinks
-from newsmaper_etl_spark.operators.newsmaper import run_pipeline
-
-
-def _pipeline_rows(spark, warehouse):
-    articles = FX.articles_df(spark)
-    references = FX.references_df(spark)
-    date_dim = spark.read.parquet(warehouse["date"])
-    existing = sinks.read_news(spark, warehouse["__dir"])
-    return run_pipeline(
-        articles=articles,
-        references=references,
-        date_dim=date_dim,
-        news_existing=existing,
-    )
 
 
 def test_bootstrap_seeds_all_tables(spark, tmp_path):
@@ -28,93 +19,8 @@ def test_bootstrap_seeds_all_tables(spark, tmp_path):
     assert countries.count() == 12  # L8: reference seed breaks after 4
     dim = spark.read.parquet(paths["date"])
     assert dim.count() == 365 * 24  # generated, not left empty (§3.2 gap)
-    assert sinks.read_news(spark, wd).count() == 0
+    # news: an empty manifest table, no commit and no data file yet
+    assert M.current_version(paths["news"]) == 0
+    assert os.path.isdir(os.path.join(paths["news"], "_manifests"))
+    assert not os.listdir(os.path.join(paths["news"], "data"))
     assert spark.read.parquet(paths["sources"]).count() > 0
-
-
-def test_append_is_idempotent(spark, tmp_path):
-    wd = str(tmp_path / "wh")
-    paths = sinks.bootstrap(spark, wd)
-    paths["__dir"] = wd
-
-    first = sinks.append_news(spark, _pipeline_rows(spark, paths), wd)
-    assert first > 0
-    # identical batch again: the anti-join filter keeps nothing
-    second = sinks.append_news(spark, _pipeline_rows(spark, paths), wd)
-    assert second == 0
-    assert sinks.read_news(spark, wd).count() == first
-
-
-def test_date_range_read_prunes_partitions(spark, tmp_path):
-    """read_news_for_dates must push its bounds into PartitionFilters —
-    only the covered day directories get scanned."""
-    wd = str(tmp_path / "wh")
-    paths = sinks.bootstrap(spark, wd)
-    paths["__dir"] = wd
-    assert sinks.append_news(spark, _pipeline_rows(spark, paths), wd) > 0
-
-    ranged = sinks.read_news_for_dates(spark, wd, 2023010200, 2023010223)
-    jvm = spark._jvm
-    plan = jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-        ranged._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters: [" in plan
-    assert "p_date" in plan.split("PartitionFilters")[1][:200]
-    # and the rows really are the jan-2 ones only
-    assert all(
-        2023010200 <= r["id_date"] <= 2023010223 for r in ranged.collect()
-    )
-    assert ranged.count() > 0
-
-
-def test_rewrite_dedup_keeps_one_per_key(spark, tmp_path):
-    wd = str(tmp_path / "wh")
-    sinks.bootstrap(spark, wd)
-    # seed the fact table with known duplicates (fixture news has a dup
-    # group on (9, 2023010216, 'evening brief')) — written through the
-    # module's day-partitioned layout
-    dup_rows = FX.news_existing_df(spark).drop("id")
-    sinks._with_partition(dup_rows).write.partitionBy(
-        sinks._PART_COL
-    ).mode("append").parquet(sinks.news_path(wd))
-    before = sinks.read_news(spark, wd).count()
-    sinks.rewrite_dedup(spark, wd)
-    after_df = sinks.read_news(spark, wd)
-    after = after_df.count()
-    assert after == before - 1  # exactly the one dup victim removed
-    assert after_df.select("id_source", "id_date", "title").distinct().count() == after
-
-
-def test_rewrite_crash_before_swap_leaves_table_readable(spark, tmp_path):
-    """The two-phase rewrite's crash contract: dying anywhere during the
-    survivor WRITE (i.e. before the swap) must leave the live table
-    bit-identical; recover_rewrite then clears the orphan staging dir."""
-    import os
-
-    wd = str(tmp_path / "wh")
-    sinks.bootstrap(spark, wd)
-    dup_rows = FX.news_existing_df(spark).drop("id")
-    sinks._with_partition(dup_rows).write.partitionBy(
-        sinks._PART_COL
-    ).mode("append").parquet(sinks.news_path(wd))
-    before = sinks.read_news(spark, wd).count()
-
-    # phase 1 only — simulate a crash between write and swap
-    staging = sinks._write_survivors_staged(spark, wd)
-    assert os.path.exists(staging)
-    assert sinks.read_news(spark, wd).count() == before  # live table intact
-
-    sinks.recover_rewrite(wd)
-    assert not os.path.exists(staging)
-    assert sinks.read_news(spark, wd).count() == before
-
-    # a half-swap (live dir retired, staging not yet promoted) also rolls back
-    staging2 = sinks._write_survivors_staged(spark, wd)
-    os.rename(sinks.news_path(wd), sinks.news_path(wd) + ".old")
-    sinks.recover_rewrite(wd)
-    assert sinks.read_news(spark, wd).count() == before
-    assert not os.path.exists(staging2)
-
-    # and the full rewrite still works end-to-end after recovery
-    sinks.rewrite_dedup(spark, wd)
-    assert sinks.read_news(spark, wd).count() == before - 1

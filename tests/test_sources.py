@@ -194,18 +194,31 @@ def test_rss_stream_polls_feed(spark, tmp_path):
     assert all(r["id_source"] == 5 for r in rows)
 
 
-def test_cli_end_to_end_idempotent(spark, tmp_path):
+def test_cli_end_to_end_idempotent(spark, tmp_path, capsys):
     """python -m newsmaper_etl_spark: bootstrap + fetch + transform +
-    append in one command; a second run appends nothing (anti-join)."""
+    append onto a day-partitioned manifest table in one command; a replay
+    appends nothing (anti-join), and --dedup drops the in-feed syndicated
+    copy, compacts each day to one file and vacuums the old manifests."""
+    import json
+    import os
+    from collections import Counter
+
+    from newsmaper_etl_spark import manifest as M
     from newsmaper_etl_spark.__main__ import main
 
+    alpha = _FEED_XML[_FEED_XML.index("    <item>"):_FEED_XML.index("    </item>") + 12]
+    copy = alpha.replace("https://example.test/a<", "https://syndic.test/a<")
+    fresh = (alpha.replace("alpha", "delta")
+             .replace("15:04:05 +0100", "18:00:00 +0100"))  # same day, new key
+    round1 = _FEED_XML.replace(alpha, alpha + copy)
+    round2 = round1.replace(alpha, alpha + fresh, 1)
     feed = tmp_path / "feed.xml"
-    feed.write_text(_FEED_XML)
     csv = tmp_path / "sources.csv"
     csv.write_text(f"name,website,rss\nLocal,https://l.test,{feed}\n")
     refs = tmp_path / "references.json"
     refs.write_text('[{"id": 7, "name": "Espagne", "words": ["madrid"]}]')
     wh = str(tmp_path / "wh")
+    table = os.path.join(wh, "news")
     argv = [
         "--warehouse", wh,
         "--sources-csv", str(csv),
@@ -213,13 +226,50 @@ def test_cli_end_to_end_idempotent(spark, tmp_path):
         "--date-start", "2023-01-01 00:00:00",
         "--date-end", "2023-01-07 23:00:00",
     ]
-    assert main(argv) == 0
-    from newsmaper_etl_spark import sinks
 
-    after_first = sinks.read_news(spark, wh).count()
-    assert after_first == 3  # the three canned items
-    assert main(argv) == 0  # rerun: idempotent
-    assert sinks.read_news(spark, wh).count() == after_first
+    def run(xml, *extra):
+        feed.write_text(xml)
+        capsys.readouterr()
+        assert main(argv + list(extra)) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    # the three canned items plus the syndicated copy of alpha
+    assert run(round1) == {"appended": 4, "news_total": 4}
+    assert run(round1) == {"appended": 0, "news_total": 4}  # replay
+    assert run(round2) == {"appended": 1, "news_total": 5}
+
+    assert os.path.exists(os.path.join(table, "_LATEST"))
+    assert not [n for _, _, names in os.walk(table) for n in names
+                if n == "_SUCCESS"]
+    assert M._load_manifest(table, M.current_version(table))["partition_by"] == [
+        "p_date"
+    ]
+
+    out = run(round2, "--dedup")
+    keys = ("id_source", "id_date", "title")
+    rows = M.read_table(spark, table)
+    distinct = rows.select(*keys).distinct().count()
+    assert out == {"appended": 0, "news_total": distinct}
+    assert distinct == rows.count() == 4
+    live = M._load_manifest(table, M.current_version(table))["files"]
+    assert set(Counter(e["partition"]["p_date"] for e in live).values()) == {1}
+    hist = M.history(table)
+    assert hist[-1]["op"] == "compact"
+    assert all(h == {"version": h["version"], "vacuumed": True}
+               for h in hist[:-1])
+
+
+def test_cli_refuses_plain_parquet_news(tmp_path):
+    """A warehouse whose news directory is not a manifest table is
+    refused before any Spark work: appending there would mix formats."""
+    import pytest
+
+    from newsmaper_etl_spark.__main__ import main
+
+    (tmp_path / "wh" / "news" / "p_date=20230102").mkdir(parents=True)
+    with pytest.raises(SystemExit):
+        main(["--warehouse", str(tmp_path / "wh"), "--sources-csv", "s.csv",
+              "--references-json", "r.json"])
 
 
 def test_read_sources_csv_assigns_serial_ids(spark, tmp_path):
