@@ -200,14 +200,11 @@ def _json_safe(v):
     return isinstance(v, (int, float, str)) and not isinstance(v, bool)
 
 
-def _file_stats(path: str, stat_cols: list[str]) -> dict[str, list]:
+def _file_stats(md, stat_cols: list[str]) -> dict[str, list]:
     """Per-file min/max for the stat columns, read from the parquet
-    FOOTER (row-group statistics) — no data pages touched. Columns whose
-    stats aren't JSON-safe (timestamps, decimals, binary) are skipped:
-    the file is then conservatively kept by every prune."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
+    FOOTER ``md`` (row-group statistics) — no data pages touched. Columns
+    whose stats aren't JSON-safe (timestamps, decimals, binary) are
+    skipped: the file is then conservatively kept by every prune."""
     idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
     out: dict[str, list] = {}
     for col in stat_cols:
@@ -266,7 +263,16 @@ def _write_batch(
     pruning at manifest granularity; VERDICT r04 'do this' #7). The
     relocation is crash-safe: destination names are batch-unique, and
     a file is only ever referenced after the commit flip — a crash
-    mid-relocate leaves unreferenced orphans for vacuum."""
+    mid-relocate leaves unreferenced orphans for vacuum.
+
+    A file whose footer counts 0 rows (an empty task's output, or the
+    schema-only file Spark writes for an empty frame) is deleted and gets
+    no entry: the commit records the schema, so a zero-row batch commits
+    no file (and leaves no batch directory)."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
     bid = f"b-{uuid.uuid4().hex[:12]}"
     batch = os.path.join(table, _DATA, bid)
     writer = df.write.mode("errorifexists")
@@ -279,6 +285,13 @@ def _write_batch(
             if not name.endswith(".parquet"):
                 continue
             full = os.path.join(dirpath, name)
+            md = pq.ParquetFile(full).metadata
+            if md.num_rows == 0:
+                os.remove(full)
+                crc = os.path.join(dirpath, f".{name}.crc")
+                if os.path.exists(crc):
+                    os.remove(crc)
+                continue
             entry = {"bytes": os.path.getsize(full)}
             if partition_by:
                 kv_rel = os.path.relpath(dirpath, batch)
@@ -288,14 +301,30 @@ def _write_batch(
                 os.rename(full, dest)
                 full = dest
             entry["path"] = os.path.relpath(full, table)
-            entry["stats"] = _file_stats(full, stat_cols)
+            entry["stats"] = _file_stats(md, stat_cols)
             entries.append(entry)
-    if partition_by:
+    if partition_by or not entries:
         # the emptied staging dir (and Spark's _SUCCESS marker)
-        import shutil
-
         shutil.rmtree(batch, ignore_errors=True)
     return sorted(entries, key=lambda e: e["path"])
+
+
+def _discard_batch(table: str, entries: list[dict]) -> None:
+    """Delete the files :func:`_write_batch` wrote for a commit that is
+    abandoned, with the directories they leave behind: a flat batch's
+    own directory, and each partition directory left empty."""
+    import shutil
+
+    for e in entries:
+        full = os.path.join(table, e["path"])
+        if "partition" in e:
+            os.remove(full)
+            try:
+                os.rmdir(os.path.dirname(full))
+            except OSError:
+                pass  # the partition still holds other files
+        else:
+            shutil.rmtree(os.path.dirname(full), ignore_errors=True)
 
 
 def _commit(
@@ -431,7 +460,7 @@ def append(
     df,
     table: str,
     stat_cols: tuple[str, ...] = (),
-    meta: dict | None = None,
+    meta: dict | Callable[[], dict] | None = None,
     txn: tuple[str, int] | None = None,
     base_version: int | None = None,
     partition_by: tuple[str, ...] = (),
@@ -439,7 +468,9 @@ def append(
 ) -> int:
     """Transactional append: new files + manifest, one pointer flip.
 
-    ``meta`` is recorded verbatim on the commit; ``txn=(app_id,
+    ``meta`` is recorded verbatim on the commit (a zero-argument
+    callable is called after the data write and before the commit, so
+    it can record counts observed on the write job); ``txn=(app_id,
     txn_version)`` additionally advances the per-app exactly-once
     high-water mark (see :func:`last_txn_version`). ``base_version``
     pins the commit to the snapshot the CALLER's content was computed
@@ -466,7 +497,8 @@ def append(
     _check_partitioning(prev, partition_by, table)
     new_files = _write_batch(df, table, list(stat_cols), tuple(partition_by))
     return _commit(
-        table, base, prev["files"] + new_files, op="append", meta=meta,
+        table, base, prev["files"] + new_files, op="append",
+        meta=meta() if callable(meta) else meta,
         schema=fields, txn=txn, prev_txns=prev.get("txns"),
         partition_by=tuple(partition_by),
     )
@@ -504,7 +536,10 @@ def overwrite(
 
     ``meta`` may be a zero-argument callable: it is called after the
     data write and before the commit, so it can record counts observed
-    on the write job itself."""
+    on the write job itself. When it returns None the rewrite is
+    abandoned — the written files are deleted, nothing is committed and
+    the base version is returned — for a caller that learns from those
+    counts that the rewrite would change nothing."""
     create_table(table)
     base = current_version(table) if base_version is None else base_version
     prev = _load_manifest(table, base)
@@ -522,10 +557,15 @@ def overwrite(
         _check_partitioning(prev, partition_by, table)
         carried = [e for e in prev["files"] if e["path"] not in gone]
     new_files = _write_batch(df, table, list(stat_cols), tuple(partition_by))
+    if callable(meta):
+        meta = meta()
+        if meta is None:
+            _discard_batch(table, new_files)
+            return base
     return _commit(
-        table, base, carried + new_files, op="overwrite",
-        meta=meta() if callable(meta) else meta, schema=fields,
-        prev_txns=prev.get("txns"), partition_by=tuple(partition_by),
+        table, base, carried + new_files, op="overwrite", meta=meta,
+        schema=fields, prev_txns=prev.get("txns"),
+        partition_by=tuple(partition_by),
     )
 
 

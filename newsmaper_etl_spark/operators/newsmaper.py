@@ -200,9 +200,23 @@ def reference_keyword_map(references: DataFrame, strict: bool = False) -> dict[s
     """Collect the (tiny, broadcast-sized by contract) keyword dictionary
     to a driver dict with the L2 rule applied (lowest id per keyword).
     The one sanctioned collect in the pipeline: the reference loads this
-    same dictionary into worker memory at import (Transform.py:11)."""
-    flat = flatten_references(references, strict=strict)
-    return {r["kw"]: r["ref_id"] for r in flat.collect()}
+    same dictionary into worker memory at import (Transform.py:11).
+
+    The ``(id, words)`` rows are collected as they are and flattened on
+    the driver — the same map as :func:`flatten_references` (NULL and
+    empty ``words`` contribute nothing, NULL ids lose to any id,
+    ``strict`` lowercases), without its explode + groupBy jobs: a
+    ``VALUES`` dictionary collects with no Spark job at all."""
+    out: dict = {}
+    for rid, words in references.select("id", "words").collect():
+        for kw in words or ():
+            if strict and kw is not None:
+                kw = kw.lower()
+            if kw not in out or out[kw] is None or (
+                rid is not None and rid < out[kw]
+            ):
+                out[kw] = rid
+    return out
 
 
 def tag_country_expr(

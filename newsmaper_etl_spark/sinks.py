@@ -15,12 +15,15 @@ file skipping, vacuum), and every contract is one atomic commit:
                              partitions (the CLI's product table).
 - ``rewrite_dedup_tx``       keep-first maintenance (Main.py:28-47): one
                              window per key, set-oriented, no per-row
-                             round trips. It scans only the key columns
-                             to find the files holding a duplicated key,
-                             rewrites just those and carries every other
-                             file by reference; a key-unique table gets
-                             no commit, and the rewrite does not compact
-                             (``manifest.compact`` does).
+                             round trips. After its own last commit and
+                             only ``append_news_tx`` appends it reads
+                             just the files those appends added; after
+                             any other history it scans the key columns
+                             to find the files holding a duplicated key.
+                             It rewrites just those files and carries
+                             every other by reference; a key-unique
+                             table gets no commit, and the rewrite does
+                             not compact (``manifest.compact`` does).
 - ``read_news_tx_for_dates`` date-ranged read: files prune on their
                              recorded ``p_date`` value or footer
                              ``id_date`` range before Spark plans the
@@ -37,6 +40,7 @@ file skipping, vacuum), and every contract is one atomic commit:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -76,6 +80,9 @@ NEWS_DDL = (
 #: day-grain directories, so appends touch only the days they carry and
 #: date-ranged reads prune on recorded values (see read_news_tx_for_dates).
 _PART_COL = "p_date"
+#: ``meta`` key of an :func:`append_news_tx` commit: the version its
+#: anti-join read (see rewrite_dedup_tx's window path)
+_ANTI_JOIN_BASE = "anti_join_base"
 
 
 def news_path(warehouse_dir: str) -> str:
@@ -183,7 +190,15 @@ def append_news_tx(
     partition value on its manifest entry — date-ranged reads then prune
     on recorded values, no footer stats needed, and appends only create
     the days they carry (the layout choice is committed and enforced
-    table-wide)."""
+    table-wide).
+
+    The commit's ``meta`` records ``anti_join_base``, the version the
+    anti-join read (the commit's own base): no row of such an append
+    shares a key with a row committed before it, which is what lets
+    :func:`rewrite_dedup_tx` read only the files these appends added.
+    Rows that share a key within the batch (in-feed copies) are all
+    appended; the keep-first rewrite removes them. A batch with no novel
+    row (a replay) still commits, with no data file."""
     novel = new_rows.select(*_news_columns())
     # pin the base: the anti-join decides novelty against THIS snapshot,
     # so the commit must fail (ConcurrentWriteError) if another writer
@@ -205,32 +220,55 @@ def append_news_tx(
     M.append(
         staged, table, stat_cols=("id_date",), base_version=base,
         partition_by=((_PART_COL,) if partitioned else ()),
+        meta={_ANTI_JOIN_BASE: base},
     )
     return int(obs.get["n"])
 
 
 def rewrite_dedup_tx(spark: SparkSession, table: str) -> int:
     """Transactional maintenance dedup (Main.py:28-47): keep-first per
-    composite key, rewriting only the live files that hold a duplicated
-    key. The window orders by a stable fingerprint of the full row
-    (parquet rows carry no SERIAL id), so the survivor choice is
+    composite key, rewriting only live files that can hold a duplicated
+    key. The keep-first ranking orders by a stable fingerprint of the
+    full row (parquet rows carry no SERIAL id), so the survivor choice is
     deterministic. A crash before the pointer flip leaves the base
     snapshot live; the orphaned survivor files are reclaimed by
     :func:`manifest.vacuum`.
 
-    Cost model: one scan of the pinned snapshot reads only the key
-    columns and each row's file, and finds the files of every key with
-    more than one row (NULL key components group together, as in the
-    window). A key-unique table gets NO commit: the base version is
-    returned, as :func:`manifest.compact` does. Otherwise only those
-    files are read back, deduped keep-first and published with
-    :func:`manifest.overwrite` as a partial replace — every other file
-    is carried into the new snapshot by reference. Every row of a
-    duplicated key lies in a rewritten file and every other key already
-    has one row, so the survivors equal a whole-table keep-first
-    rewrite's. The rewrite does not compact the table: each call adds
-    the survivors of its rewritten files as new files, and
-    :func:`manifest.compact` is the tool for small files.
+    Cost model — which files are read depends on the commits since the
+    table was last known key-unique:
+
+    - **Window path.** The *anchor* is the latest commit this function
+      made (its ``meta`` carries ``files_replaced`` and
+      ``rows_dropped``); its snapshot is key-unique. When every commit
+      after it is an :func:`append_news_tx` append (``meta`` carries
+      ``anti_join_base``, its commit's base), each of those appends
+      anti-joined against the whole snapshot before it, so no row
+      appended since the anchor shares a key with a row committed before
+      it. Every row of a duplicated key then lies in the *window*: the
+      entries live at the pinned base and not at the anchor. Only the
+      window is read (one pass, no key scan), deduped keep-first and
+      written as a partial replace of the window entries — 2 Spark
+      jobs, against 5 on the fallback (3 for its key scan). When the
+      counts observed on the write show that nothing was dropped, the
+      written files are deleted and nothing is committed. A base that
+      is the anchor itself has an empty window: no job.
+    - **Fallback.** Any other history — no anchor (the table was never
+      rewritten), any other commit after the anchor (a compaction, a
+      stream batch, a foreign :func:`manifest.append`, an overwrite), or
+      a manifest :func:`manifest.vacuum` dropped — takes the whole-table
+      path: one scan of the key columns and each row's file finds the
+      files of every key with more than one row (NULL key components
+      group together, as in the keep-first ranking); only those files
+      are read back, deduped keep-first and published as a partial
+      replace.
+
+    Either way every other file is carried into the new snapshot by
+    reference, a key-unique table gets NO commit (the base version is
+    returned, as :func:`manifest.compact` does) and the survivors equal
+    a whole-table keep-first rewrite's. The rewrite does not compact the
+    table: each call adds the survivors of its rewritten files as new
+    files, and :func:`manifest.compact` is the tool for small files
+    (after which the next rewrite takes the fallback).
 
     The commit's ``meta`` records ``files_replaced`` and
     ``rows_dropped`` (observed on the write job; see
@@ -240,10 +278,53 @@ def rewrite_dedup_tx(spark: SparkSession, table: str) -> int:
     # list; an interleaved append must fail this rewrite, not vanish
     base = M.current_version(table)
     manifest = M._load_manifest(table, base)
-    touched = _files_with_duplicate_keys(spark, table, manifest)
-    if not touched:
+    window = _dedup_window(table, manifest)
+    entries = (
+        window if window is not None
+        else _files_with_duplicate_keys(spark, table, manifest)
+    )
+    if not entries:
         return base
-    df = M._read_entries(spark, table, manifest, touched)
+    survivors, meta = _keep_first(spark, table, manifest, entries)
+    return M.overwrite(
+        survivors, table, stat_cols=("id_date",), base_version=base,
+        # a maintenance rewrite preserves the table's committed Hive layout
+        partition_by=tuple(manifest.get("partition_by") or ()),
+        meta=meta, replaces=entries,
+    )
+
+
+def _dedup_window(table: str, manifest: dict) -> list[dict] | None:
+    """The live entries of ``manifest`` that were not live at the
+    anchor (see :func:`rewrite_dedup_tx`), or None when the commits
+    since the anchor do not prove that every duplicated key lies among
+    them. Walks the manifests back from ``manifest``: driver-side, no
+    Spark job."""
+    m = manifest
+    while m["version"] > 0:
+        v, meta = m["version"], m.get("meta") or {}
+        if m.get("op") == "overwrite" and {
+            "files_replaced", "rows_dropped"
+        } <= meta.keys():
+            anchored = {e["path"] for e in m["files"]}
+            return [e for e in manifest["files"] if e["path"] not in anchored]
+        if m.get("op") != "append" or meta.get(_ANTI_JOIN_BASE) != v - 1:
+            return None
+        try:
+            m = M._load_manifest(table, v - 1)
+        except FileNotFoundError:
+            return None  # vacuumed
+    return None
+
+
+def _keep_first(
+    spark: SparkSession, table: str, manifest: dict, entries: list[dict]
+) -> tuple[DataFrame, Callable[[], dict | None]]:
+    """The keep-first survivors of the rows of ``entries``, and the
+    rewrite's commit ``meta`` for :func:`manifest.overwrite` — a callable,
+    as the rows read and kept are observed on the write job. It returns
+    None (abandon the rewrite) when no row was dropped."""
+    df = M._read_entries(spark, table, manifest, entries)
     seen, kept = Observation(), Observation()
     ordered = df.observe(seen, F.count(F.lit(1)).alias("n")).withColumn(
         "__ord",
@@ -256,16 +337,14 @@ def rewrite_dedup_tx(spark: SparkSession, table: str) -> int:
         .drop("__ord")
         .observe(kept, F.count(F.lit(1)).alias("n"))
     )
-    return M.overwrite(
-        survivors, table, stat_cols=("id_date",), base_version=base,
-        # a maintenance rewrite preserves the table's committed Hive layout
-        partition_by=tuple(manifest.get("partition_by") or ()),
-        meta=lambda: {
-            "files_replaced": len(touched),
-            "rows_dropped": int(seen.get["n"]) - int(kept.get["n"]),
-        },
-        replaces=touched,
-    )
+
+    def meta() -> dict | None:
+        dropped = int(seen.get["n"]) - int(kept.get["n"])
+        if not dropped:
+            return None
+        return {"files_replaced": len(entries), "rows_dropped": dropped}
+
+    return survivors, meta
 
 
 def _files_with_duplicate_keys(

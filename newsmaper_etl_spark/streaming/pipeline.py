@@ -26,7 +26,7 @@ window.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -523,13 +523,16 @@ def write_stream_manifest(
     commit's manifest meta — ``{"gates": {"input": n, "after_exact":
     n, "after_near": n, "committed": n}}`` (only the stages configured
     appear) — the "what did my dedup gates drop last night?" audit,
-    readable without a Spark job via :func:`ingest_history`. Each
-    recorded stage costs one count() action per batch over an already-
-    materialized frame (the micro-batch is persisted on entry and every
-    indexed gate materializes its output); default OFF so the bare
-    sink's per-batch job count is unchanged. The drift telemetry riding
-    the semantic index commits (keyindex.semantic_drift_history) is
-    separate and always on.
+    readable without a Spark job via :func:`ingest_history`. The counts
+    cost no Spark job: each stage's output (the persisted input, a lazy
+    classifier filter, an indexed gate's materialized frame) is counted
+    by an ``Observation`` on the next job that reads it — the next
+    indexed gate's eager ``localCheckpoint``, or the data commit's
+    write, which also counts ``committed``; a gate that returns its
+    input unchanged carries the previous count. A replayed batch whose
+    data commit already landed records nothing. The drift telemetry
+    riding the semantic index commits (keyindex.semantic_drift_history)
+    is separate and always on.
 
     ``compact_every=N`` runs :func:`manifest.compact` after every Nth
     committed batch — the maintenance a 20-minute-micro-batch table
@@ -707,10 +710,18 @@ def write_stream_manifest(
         # (and dropDuplicates can't keep different survivors for the data
         # commit and an index append)
         src = batch_df = batch_df.persist()
+        # telemetry: each stage's row count, observed on the next job
+        # that reads the stage (no count() job of its own)
+        counts: dict[str, Observation] = {}
+
+        def observed(df: DataFrame, label: str | None) -> DataFrame:
+            if not telemetry or main_done or label is None:
+                return df
+            counts[label] = Observation()
+            return df.observe(counts[label], F.count(F.lit(1)).alias("n"))
+
         try:
-            gates: dict | None = {} if telemetry else None
-            if gates is not None:
-                gates["input"] = batch_df.count()
+            batch_df = observed(batch_df, "input")
             for label, spec, cfg in stages:
                 if spec is None:
                     from newsmaper_etl_spark.operators.selection import (
@@ -730,16 +741,17 @@ def write_stream_manifest(
                     )
                     batch_df = spec.gate(batch_df, table, cfg, index_version,
                                          data_version)
-                if gates is not None and label is not None:
-                    gates[label] = batch_df.count()
-            if gates is not None:
-                gates["committed"] = batch_df.count()
+                batch_df = observed(batch_df, label)
             if not main_done:
-                meta = {"app": app, "batch_id": batch_id}
-                if gates is not None:
-                    meta["gates"] = gates
-                K.txn_append(batch_df, table, app, batch_id,
-                             stat_cols=data_stat_cols, meta=meta,
+                def meta() -> dict:
+                    out = {"app": app, "batch_id": batch_id}
+                    if counts:
+                        out["gates"] = {label: int(o.get["n"])
+                                        for label, o in counts.items()}
+                    return out
+
+                K.txn_append(observed(batch_df, "committed"), table, app,
+                             batch_id, stat_cols=data_stat_cols, meta=meta,
                              merge_schema=merge_schema)
             for spec, cfg in indexes:
                 # index rows of the batch AS COMMITTED (post every gate)

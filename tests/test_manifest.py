@@ -566,6 +566,203 @@ def test_rewrite_dedup_tx_unmapped_scan_path_raises(spark, tmp_path, monkeypatch
     assert M.current_version(t) == 2
 
 
+# --------------------------------------------------------------------------
+# keep-first maintenance: the window path and the whole-table fallback
+# --------------------------------------------------------------------------
+
+def _round_rows(rng, history, n_new, n_reserved, n_copies, null_titles=0):
+    """One seeded feed round as news tuples: ``n_new`` fresh keys (plus
+    ``null_titles`` fresh NULL-title keys), ``n_reserved`` rows re-served
+    from ``history`` (the anti-join drops them) and ``n_copies`` in-feed
+    copies of fresh keys under another link (the anti-join keeps every
+    copy). Fresh rows join ``history``."""
+    fresh = []
+    for i in range(n_new + null_titles):
+        day = rng.randrange(1, 28)
+        title = None if i >= n_new else f"t{len(history) + i}"
+        fresh.append((rng.randrange(1, 12), rng.randrange(1, 4),
+                      2023010000 + day * 100 + rng.randrange(24), title,
+                      f"l{len(history) + i}", f"d{rng.random():.6f}", "m"))
+    rows = fresh + rng.sample(history, min(n_reserved, len(history)))
+    for r in rng.sample(fresh, n_copies):
+        rows.append(r[:4] + (r[4] + "-copy", "syndicated", r[6]))
+    history.extend(fresh)
+    rng.shuffle(rows)
+    return rows
+
+
+def _news_df(spark, rows):
+    from newsmaper_etl_spark.sinks import _news_columns
+
+    return values_df(spark, rows, list(_news_columns()))
+
+
+def _rows(spark, t):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in M.read_table(spark, t).collect())
+
+
+def _no_key_scan(*_args):
+    raise AssertionError("the window path scanned the table's keys")
+
+
+def test_rewrite_dedup_tx_window_path_equals_whole_table_path(
+    spark, tmp_path, monkeypatch
+):
+    """Both sides of the maintenance fork on the same input: after each
+    seeded append_news_tx round (re-served history, in-feed copies, NULL
+    titles, a clean round, then a dirty one) the window path and a copy
+    forced down the whole-table path leave the same rows. Once an anchor
+    exists the window path never scans the table's keys; a clean window
+    commits nothing and leaves no file behind."""
+    import random
+    import shutil
+
+    from newsmaper_etl_spark import sinks
+
+    rng = random.Random(11)
+    history: list[tuple] = []
+    t = str(tmp_path / "news")
+    rounds = [
+        (12, 0, 3, 1),   # no anchor yet: both sides take the fallback
+        (6, 5, 2, 1),
+        (5, 4, 0, 0),    # clean round
+        (6, 6, 3, 1),    # dirty round after the clean one
+    ]
+
+    for i, (n_new, n_reserved, n_copies, nulls) in enumerate(rounds):
+        rows = _round_rows(rng, history, n_new, n_reserved, n_copies, nulls)
+        sinks.append_news_tx(spark, _news_df(spark, rows), t)
+        twin = str(tmp_path / f"twin{i}")
+        shutil.copytree(t, twin)
+        base = M.current_version(t)
+        listing = sorted(os.listdir(os.path.join(t, "data")))
+        with monkeypatch.context() as mp:
+            if i > 0:
+                mp.setattr(sinks, "_files_with_duplicate_keys", _no_key_scan)
+            v = sinks.rewrite_dedup_tx(spark, t)
+        with monkeypatch.context() as mp:
+            mp.setattr(sinks, "_dedup_window", lambda *_a: None)
+            v_twin = sinks.rewrite_dedup_tx(spark, twin)
+        assert _rows(spark, t) == _rows(spark, twin)
+        assert (v > base) == (v_twin > base) == (n_copies > 0)
+        if v > base:
+            assert (M._load_manifest(t, v)["meta"]["rows_dropped"]
+                    == M._load_manifest(twin, v_twin)["meta"]["rows_dropped"])
+        else:
+            assert sorted(os.listdir(os.path.join(t, "data"))) == listing
+        got = _rows(spark, t)
+        assert sum(got.values()) == len(history)  # one row per key
+
+
+@pytest.mark.parametrize("after_anchor", ["foreign_append", "compact", "vacuum"])
+def test_rewrite_dedup_tx_falls_back_to_whole_table(
+    spark, tmp_path, monkeypatch, after_anchor
+):
+    """Only append_news_tx appends may follow the anchor for the window
+    path: a foreign ``M.append`` (here one that re-adds a key committed
+    before the anchor — outside any window), a compaction, or a
+    manifest dropped by vacuum sends the rewrite down the whole-table
+    path, which still leaves one row per key."""
+    import random
+
+    from newsmaper_etl_spark import sinks
+
+    rng = random.Random(5)
+    history: list[tuple] = []
+    t = str(tmp_path / "news")
+    sinks.append_news_tx(
+        spark, _news_df(spark, _round_rows(rng, history, 8, 0, 2)), t)
+    sinks.rewrite_dedup_tx(spark, t)  # the anchor
+    if after_anchor == "foreign_append":
+        M.append(_news_df(spark, [history[0][:4] + ("lx", "dx", "m")]), t,
+                 stat_cols=("id_date",))
+    elif after_anchor == "compact":
+        M.compact(spark, t)
+    sinks.append_news_tx(
+        spark, _news_df(spark, _round_rows(rng, history, 5, 3, 2)), t)
+    if after_anchor == "vacuum":
+        M.vacuum(t, keep_versions=1)
+    scans = []
+    scan = sinks._files_with_duplicate_keys
+    monkeypatch.setattr(sinks, "_files_with_duplicate_keys",
+                        lambda *a: scans.append(1) or scan(*a))
+    base = M.current_version(t)
+    assert sinks.rewrite_dedup_tx(spark, t) == base + 1
+    assert scans == [1]
+    got = _rows(spark, t)
+    assert sum(got.values()) == len(history)
+    assert len({r[1:4] for r in got}) == len(history)
+
+
+def test_rewrite_dedup_tx_window_crash_before_commit(spark, tmp_path,
+                                                     monkeypatch):
+    """A crash between the window path's survivor write and its pointer
+    flip leaves the base snapshot readable; the rerun takes the window
+    path again and drops the duplicates."""
+    import random
+
+    from newsmaper_etl_spark import sinks
+
+    rng = random.Random(3)
+    history: list[tuple] = []
+    t = str(tmp_path / "news")
+    sinks.append_news_tx(
+        spark, _news_df(spark, _round_rows(rng, history, 6, 0, 1)), t)
+    sinks.rewrite_dedup_tx(spark, t)
+    sinks.append_news_tx(
+        spark, _news_df(spark, _round_rows(rng, history, 6, 2, 2)), t)
+    base = M.current_version(t)
+    before = _rows(spark, t)
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("crash before the pointer flip")
+
+    monkeypatch.setattr(M, "_commit", crash)
+    with pytest.raises(RuntimeError, match="pointer flip"):
+        sinks.rewrite_dedup_tx(spark, t)
+    monkeypatch.undo()
+    assert M.current_version(t) == base
+    assert _rows(spark, t) == before
+    monkeypatch.setattr(sinks, "_files_with_duplicate_keys", _no_key_scan)
+    assert sinks.rewrite_dedup_tx(spark, t) == base + 1
+    assert sum(_rows(spark, t).values()) == len(history)
+
+
+def test_zero_row_commits_add_no_file(spark, tmp_path):
+    """A commit of zero rows lands (version and txn mark) but adds no
+    data file and no batch directory: an empty frame, an append_news_tx
+    replay, and a table whose only commit is empty still reads as a
+    typed frame. A 1-row append over 4 partitions adds one file."""
+    from newsmaper_etl_spark.sinks import append_news_tx
+
+    t = str(tmp_path / "news")
+
+    def live():
+        return M._load_manifest(t, M.current_version(t))["files"]
+
+    def listing():
+        return sorted(os.listdir(os.path.join(t, "data")))
+
+    empty = _news_rows(spark, [0]).limit(0)
+    M.append(empty, t, stat_cols=("id_date",), txn=("w", 0))
+    assert M.current_version(t) == 1 and live() == [] and listing() == []
+    assert M.last_txn_version(t, "w") == 0
+    read = M.read_table(spark, t)
+    assert read.count() == 0 and read.dtypes == empty.dtypes
+
+    assert append_news_tx(spark, _news_rows(spark, [0, 1]), t) == 2
+    files, dirs = live(), listing()
+    assert append_news_tx(spark, _news_rows(spark, [0, 1]), t) == 0  # replay
+    assert M.current_version(t) == 3
+    assert live() == files and listing() == dirs
+
+    M.append(_news_rows(spark, [7]).repartition(4), t, stat_cols=("id_date",))
+    assert len(live()) == len(files) + 1
+    assert M.read_table(spark, t).count() == 3
+
+
 def test_overwrite_partial_replace_guards(spark, tmp_path):
     """A partial replace carries the other entries by reference, so the
     batch must match the recorded schema and layout; txn marks and

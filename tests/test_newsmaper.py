@@ -20,6 +20,7 @@ from newsmaper_etl_spark.operators.newsmaper import (
     tag_country_expr,
     tokenize_text,
     explode_date_parts,
+    flatten_references,
 )
 
 
@@ -74,6 +75,34 @@ def test_join_and_expr_taggers_agree(spark):
     kw_map = reference_keyword_map(refs)
     exprd = tag_country_expr(arts, kw_map).select("article_id", "id_country")
     assert sorted(map(tuple, joined.collect())) == sorted(map(tuple, exprd.collect()))
+
+
+@pytest.mark.parametrize("strict", [False, True], ids=["oracle", "strict"])
+def test_reference_keyword_map_matches_flattened_dictionary(spark, strict):
+    """The driver-built keyword map equals the explode + groupBy form
+    (``flatten_references``): a keyword claimed by two countries goes to
+    the lowest id (L2), mixed case stays apart unless ``strict``
+    lowercases it, and NULL or empty ``words`` arrays add nothing."""
+    refs = spark.sql(
+        "SELECT * FROM VALUES "
+        "(5, 'b', array('europe', 'Roma', 'rome')), "
+        "(2, 'a', array('europe', 'roma', 'berlin')), "
+        "(9, 'c', CAST(NULL AS ARRAY<STRING>)), "
+        "(11, 'd', CAST(array() AS ARRAY<STRING>)), "
+        "(3, 'e', array('ROME', 'lisbon')) "
+        "AS t(id, name, words)"
+    )
+    old = {
+        r["kw"]: r["ref_id"]
+        for r in flatten_references(refs, strict=strict).collect()
+    }
+    got = reference_keyword_map(refs, strict=strict)
+    assert got == old
+    assert got["europe"] == 2
+    if strict:
+        assert got["roma"] == 2 and got["rome"] == 3 and "Roma" not in got
+    else:
+        assert got["Roma"] == 5 and got["roma"] == 2 and got["ROME"] == 3
 
 
 def test_append_idempotent(spark):

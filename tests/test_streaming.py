@@ -149,12 +149,24 @@ def test_rss_stream_pipeline_end_to_end(spark, tmp_path):
     assert rows["alpha story"]["media"] == "https://example.test/a.jpg"
     # the same items polled again: the same checkpoint, then a fresh one
     # (a new writer with empty watermark state) — the key index admits
-    # each composite key at most once, so both polls commit 0 rows
+    # each composite key at most once, so both polls commit 0 rows, and
+    # a zero-row commit adds no file to the table or to its key index
+    from newsmaper_etl_spark import keyindex as K
+
+    def live_files():
+        return [
+            M._load_manifest(t, M.current_version(t))["files"]
+            for t in (out, K.key_index_path(out))
+        ]
+
     for checkpoint in (ckpt, str(tmp_path / "ckpt2")):
-        version = M.current_version(out)
+        version, files = M.current_version(out), live_files()
         assert poll(checkpoint).count() == 3
         assert M.current_version(out) == version + 1  # the poll committed
-        assert M.read_table_changes(spark, out, version).count() == 0
+        assert live_files() == files
+        added = M.read_table_changes(spark, out, version)
+        assert added.count() == 0
+        assert added.dtypes == M.read_table(spark, out).dtypes
 
 
 def test_stream_stream_correlation_join(spark, tmp_path):
