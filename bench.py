@@ -66,6 +66,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -213,10 +214,12 @@ def main() -> None:
         _preflight(sf_dir) if sf_dir.rstrip("/").endswith("sf0.1")
         else {"probes": [], "ratio": None, "contended": None}
     )
-    from newsmaper_etl_spark.io import parse_sf
+    from newsmaper_etl_spark.io import is_toy
 
-    sf = parse_sf(sf_dir)
-    sf = -1.0 if sf is None else sf
+    # the scale factor is a record label only (prior-record matching and
+    # the written record); every physical choice below follows is_toy
+    m = re.search(r"sf([0-9]+(?:\.[0-9]+)?)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
     repeat = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "3"))
 
     _ensure_loaded()
@@ -227,7 +230,7 @@ def main() -> None:
     # each other at sf0.1 — the per-query floor is planning+scheduling,
     # not task width — so the only conf pinned here is the partition
     # count; executor width stays at the machine's.
-    small = 0 < sf <= 0.2
+    small = is_toy(sf_dir)
     spark = get_spark(
         app_name="newsmaper-bench",
         shuffle_partitions=4 if small else cpus,

@@ -44,7 +44,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from newsmaper_etl_spark import manifest as M
     from newsmaper_etl_spark import sinks
-    from newsmaper_etl_spark.operators.newsmaper import run_pipeline
+    from newsmaper_etl_spark.operators.newsmaper import DATE_DIM_DDL, run_pipeline
     from newsmaper_etl_spark.session import get_spark
     from newsmaper_etl_spark.sources import (
         read_references_json,
@@ -74,7 +74,9 @@ def main(argv: list[str] | None = None) -> int:
 
     articles = read_rss(spark, sources, permissive=args.permissive)
 
-    date_dim = spark.read.parquet(os.path.join(args.warehouse, "date"))
+    date_dim = spark.read.schema(DATE_DIM_DDL).parquet(
+        os.path.join(args.warehouse, "date")
+    )
     base = M.current_version(table)
     existing = (
         M.read_table(spark, table, version=base)

@@ -1,4 +1,6 @@
-"""Table loaders for the driver testdata and registered temp views.
+"""Table loaders for the driver testdata and registered temp views, and
+the one scale posture the plans branch on (:func:`is_toy`), read from
+bytes on disk, never from a directory's name.
 
 The testdata (TESTDATA.md) is one parquet file per table. At 100 TB the
 same code path holds: ``spark.read.parquet`` over a partitioned directory
@@ -8,6 +10,7 @@ free — nothing here materializes or collects.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,24 +40,6 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def parse_sf(sf_dir: str) -> float | None:
-    """Scale factor from a ``.../sfN.NN`` path component, or None when
-    the path carries no parseable scale (including degenerate matches
-    like ``sf.old`` — float('.') must not crash a query build; unknown
-    is unknown). The single shared parse: _tune_session, is_toy and
-    bench.py all route through here so the no-match behavior cannot
-    drift between call sites."""
-    import re
-
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    if not m:
-        return None
-    try:
-        return float(m.group(1))
-    except ValueError:
-        return None
-
-
 def _tune_session(spark: SparkSession, sf_dir: str) -> None:
     """Right-size runtime-settable SQL conf for the data scale.
 
@@ -62,21 +47,22 @@ def _tune_session(spark: SparkSession, sf_dir: str) -> None:
     (shuffle.partitions=200); at sf0.01 that is 200 near-empty shuffle
     tasks per exchange — pure scheduling overhead. Partition count is a
     per-scale tuning knob, not a session property, so set it where the
-    scale is known: 4 tasks up to sf0.2 (correctness AND bench scales —
-    the largest exchange there is tens of MB), one per core beyond. On a
+    scale is known: 4 tasks when :func:`is_toy` holds (every table at
+    most :data:`SMALL_TABLE_BYTES` — the correctness and bench corpora,
+    whose largest exchange is tens of MB), one per core beyond. On a
     real cluster this maps to AQE's coalesce decisions; here the
     *initial* number matters because each task costs ~1ms of scheduler
     time regardless of data.
 
     Tuned ONCE per session (first load wins — no flip-flopping when one
-    session mixes scale dirs), and only when the conf still holds Spark's
-    200 default: a value set by get_spark() or the user is theirs to keep.
+    session mixes corpora of both postures), and only when the conf
+    still holds Spark's 200 default: a value set by get_spark() or the
+    user is theirs to keep.
     """
     if getattr(spark, "_newsmaper_tuned", False):
         return
-    sf = parse_sf(sf_dir)
-    sf = 1.0 if sf is None else sf
-    if sf <= 0.2:
+    small = is_toy(sf_dir)
+    if small:
         # Bench/correctness scales: the largest single exchange is a few
         # tens of MB, so even 32 shuffle tasks are pure scheduling
         # overhead — measured ~10% total going 32→8 and another ~20%
@@ -90,7 +76,7 @@ def _tune_session(spark: SparkSession, sf_dir: str) -> None:
     try:
         if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
             spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        if sf <= 0.2:
+        if small:
             # At toy SF every table (lineitem is 10.8 MB at sf0.1) plus
             # any plausible intermediate fits executor memory with room
             # to spare, so let the STATIC planner broadcast everything
@@ -113,7 +99,8 @@ def _tune_session(spark: SparkSession, sf_dir: str) -> None:
             if spark.conf.get(
                 "spark.sql.autoBroadcastJoinThreshold", "10485760b"
             ) in ("10485760b", "10485760", "10MB", "8m"):
-                spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "32m")
+                spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                               f"{SMALL_TABLE_BYTES // 2**20}m")
             if _table_cache_on():
                 # With tables cached at a known 16-partition layout,
                 # nothing is left for AQE's runtime re-planning to earn
@@ -196,18 +183,64 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+#: The largest table size, in bytes, that still counts as small. It is
+#: also the broadcast threshold _tune_session sets for a small corpus, so
+#: "small" means "every table is broadcastable". Read at call time.
+SMALL_TABLE_BYTES = 32 * 2**20
+
+
+@functools.lru_cache(maxsize=None)
+def _largest_table_bytes(abs_dir: str) -> int | None:
+    """Size on disk of the largest ``<table>.parquet`` (a file, or a
+    directory of part files) in ``abs_dir``; None when it holds none.
+    ``os.stat`` only, no Spark job. Memoized per absolute path: the
+    corpus directories are immutable, as load_table's memo assumes."""
+    try:
+        with os.scandir(abs_dir) as it:
+            tables = [e for e in it if e.name.endswith(".parquet")]
+    except OSError:
+        return None
+    sizes = []
+    for e in tables:
+        if e.is_dir():
+            sizes.append(sum(os.stat(os.path.join(d, f)).st_size
+                             for d, _, files in os.walk(e.path) for f in files))
+        else:
+            sizes.append(e.stat().st_size)
+    return max(sizes, default=None)
+
+
 def is_toy(sf_dir: str) -> bool:
-    """True when ``sf_dir`` names a toy scale (sf ≤ 0.2) — the gate for
-    small-data-only physical choices (fan_out, table caching,
-    interpreted-vs-unrolled expression forms). Unknown dirs count as
-    real scale: the conservative default is the 100 TB posture."""
-    sf = parse_sf(sf_dir)
-    return sf is not None and sf <= 0.2
+    """True when every ``<table>.parquet`` under ``sf_dir`` holds at most
+    :data:`SMALL_TABLE_BYTES` on disk — the gate for small-data-only
+    physical choices (table caching, session tuning, broadcast hints,
+    kernel_narrow). The answer depends on bytes, never on the path's
+    name, so a renamed or symlinked copy gets the same posture. A
+    directory with no table counts as real scale: the conservative
+    default is the 100 TB posture."""
+    largest = _largest_table_bytes(os.path.abspath(sf_dir))
+    return largest is not None and largest <= SMALL_TABLE_BYTES
 
 
-#: Partition count for toy-scale cached tables and fan_out. 16 ≈ half
-#: the rig's cores: enough task-parallelism for the per-row-heavy
-#: kernels, small enough that floor queries don't drown in task launch.
+@functools.lru_cache(maxsize=None)
+def _footer_rows(abs_path: str) -> int:
+    import pyarrow.parquet as pq
+
+    files = ([os.path.join(d, f) for d, _, fs in os.walk(abs_path)
+              for f in fs if f.endswith(".parquet")]
+             if os.path.isdir(abs_path) else [abs_path])
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
+def table_rows(sf_dir: str, name: str) -> int:
+    """Row count of one table from its parquet footers: no Spark job,
+    memoized per absolute path like :func:`is_toy`'s sizes."""
+    return _footer_rows(os.path.abspath(os.path.join(sf_dir, f"{name}.parquet")))
+
+
+#: Partition count for toy-scale cached tables. 16 ≈ half the rig's
+#: cores: enough task-parallelism for the per-row-heavy kernels, small
+#: enough that floor queries don't drown in task launch.
 TOY_PARTS = 16
 
 
@@ -220,31 +253,6 @@ def _table_cache_on() -> bool:
     return os.environ.get("SPARK_GRAFT_TABLE_CACHE", "1") != "0"
 
 
-def fan_out(df: DataFrame, sf_dir: str, parts: int = TOY_PARTS) -> DataFrame:
-    """Round-robin repartition of a small, CPU-heavy input at toy SF.
-
-    The toy parquet files are single row groups, so a scan is ONE task no
-    matter how many cores exist — and every downstream per-row expression
-    (explode, tokenize, regex) runs single-threaded while DuckDB
-    vectorizes the same file across all cores. Fanning a 600 KB documents
-    scan out to 16 partitions costs a trivial shuffle and buys ~2× on
-    every text/curation kernel (measured: contamination 1.29→0.65 s,
-    repetition_stats 1.01→0.54 s, lang_id 0.50→0.26 s at sf0.1).
-
-    When the toy table cache is on (the default), load_table frames are
-    ALREADY stored at TOY_PARTS partitions and this is a no-op — a
-    second repartition would be a pure extra shuffle.
-
-    At real SF this returns ``df`` unchanged — a 100 TB table scans as
-    thousands of splits and already fills the cluster; the repartition
-    would be a pure full-data shuffle. NOT for cheap-per-row inputs
-    (lineitem aggregates measured a regression: the shuffle outweighs
-    the parallelism — 0.79→0.93 s for percentile_approx)."""
-    if not is_toy(sf_dir) or _table_cache_on():
-        return df
-    return df.repartition(parts)
-
-
 def kernel_narrow(df: DataFrame, sf_dir: str, parts: int = 2) -> DataFrame:
     """Coalesce a SMALL frame ahead of an Arrow (mapInPandas) kernel at
     toy SF. Every Arrow task pays a fixed Python-worker round-trip
@@ -252,9 +260,8 @@ def kernel_narrow(df: DataFrame, sf_dir: str, parts: int = 2) -> DataFrame:
     mapInPandas vs 0.06 s for the JVM noop floor), so fanning 5,000
     header-parse rows across 16 cached partitions buys nothing and costs
     ~40 ms/query in task machinery (interleaved A/B at sf0.1: 0.25 s at
-    16 parts → 0.21 s at 2). The inverse of :func:`fan_out`, for kernels
-    whose per-row work is microseconds rather than the text family's
-    regex/tokenize load.
+    16 parts → 0.21 s at 2). For kernels whose per-row work is
+    microseconds rather than the text family's regex/tokenize load.
 
     At real SF this returns ``df`` unchanged — a data-scaled media
     column NEEDS every core decoding in parallel, and coalesce would

@@ -288,9 +288,6 @@ def _write_batch(
             md = pq.ParquetFile(full).metadata
             if md.num_rows == 0:
                 os.remove(full)
-                crc = os.path.join(dirpath, f".{name}.crc")
-                if os.path.exists(crc):
-                    os.remove(crc)
                 continue
             entry = {"bytes": os.path.getsize(full)}
             if partition_by:
@@ -306,6 +303,13 @@ def _write_batch(
     if partition_by or not entries:
         # the emptied staging dir (and Spark's _SUCCESS marker)
         shutil.rmtree(batch, ignore_errors=True)
+    else:
+        # Spark's _SUCCESS marker and the .<name>.crc side files: no
+        # entry references them, so they would only count as disk bytes
+        kept = {os.path.basename(e["path"]) for e in entries}
+        for name in os.listdir(batch):
+            if name not in kept:
+                os.remove(os.path.join(batch, name))
     return sorted(entries, key=lambda e: e["path"])
 
 

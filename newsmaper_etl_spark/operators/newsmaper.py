@@ -335,6 +335,11 @@ def dedup_keep_first(
     )
 
 
+#: The schema generate_date_dim emits. Readers of the written dim pass
+#: it to ``spark.read.schema`` so no parquet schema-inference job runs.
+DATE_DIM_DDL = "id INT, hours INT, day INT, month INT, year INT"
+
+
 def generate_date_dim(
     spark: SparkSession, start: str, end: str
 ) -> DataFrame:

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from newsmaper_etl_spark.localrel import literal_df
 
-from newsmaper_etl_spark.io import fan_out, load_table
+from newsmaper_etl_spark.io import load_table
 from newsmaper_etl_spark.operators import dedup as D
 from newsmaper_etl_spark.operators import sampling as SP
 from newsmaper_etl_spark.operators import text as TX
@@ -75,7 +75,7 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction) — the Gopher-style repetition gate, computed entirely
     within-row (sorted-array run-length fold, no explode, no shuffle);
     the oracle re-derives it via the portable explode+agg SQL."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return TX.repetition_stats(docs)
 
 
@@ -144,7 +144,7 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Email/phone scrub with per-kind counts over deterministically
     injected payloads (patterns restricted to Java-regex ∩ RE2 so the
     oracle runs them verbatim)."""
-    docs = _pii_injected(fan_out(load_table(spark, sf_dir, "documents"), sf_dir))
+    docs = _pii_injected(load_table(spark, sf_dir, "documents"))
     return TX.pii_redact(docs).select("doc_id", "n_email", "n_phone", "redacted")
 
 
@@ -191,13 +191,9 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-20-token slice of every 97th doc, under fresh ids) that were
     scraped into the training corpus — so every eval doc's source is
     flagged with its shared-gram count, plus any coincidental overlaps."""
-    raw = load_table(spark, sf_dir, "documents")
-    docs = fan_out(raw, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ", -1)
-    # eval side from the RAW scan, not the fanned frame: the broadcast
-    # subtree would otherwise re-run the full-corpus repartition just to
-    # keep 1/97th of the rows (lineage is duplicated, not shared)
-    eval_df = raw.filter(F.col("doc_id") % 97 == 0).select(
+    eval_df = docs.filter(F.col("doc_id") % 97 == 0).select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"),
         F.array_join(F.slice(toks, 1, 20), " ").alias("text"),
     )
@@ -225,10 +221,9 @@ def q_contamination_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     fast path flags the same docs with the same counts as the exact
     string path. q_contamination_parity additionally pins per-row
     equality of both paths inside one plan."""
-    raw = load_table(spark, sf_dir, "documents")
-    docs = fan_out(raw, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ", -1)
-    eval_df = raw.filter(F.col("doc_id") % 97 == 0).select(
+    eval_df = docs.filter(F.col("doc_id") % 97 == 0).select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"),
         F.array_join(F.slice(toks, 1, 20), " ").alias("text"),
     )
@@ -278,11 +273,7 @@ def q_contamination_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     produces a row-count or hash mismatch at the driver. This upgrades
     the builder-side parity test (tests/test_curation.py) into a
     driver-recorded contract; the slice keeps both passes bench-cheap."""
-    docs = fan_out(
-        load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 250),
-        sf_dir,
-        8,
-    )
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 250)
     toks = F.split(F.col("text"), " ", -1)
     eval_df = docs.filter(F.col("doc_id") % 97 == 0).select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"),
@@ -695,8 +686,6 @@ def q_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-window chunking: fixed 50-token windows, one output row
     per chunk (generator projection — no shuffle)."""
-    # no fan_out here: chunking is a pure generator projection and its
-    # zero-shuffle plan shape is asserted (test_chunking_plan_has_no_shuffle)
     docs = load_table(spark, sf_dir, "documents")
     return SP.chunk_documents(docs, chunk_tokens=50)
 
@@ -766,7 +755,7 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary: top-50 tokens by frequency (explode → count →
     TakeOrderedAndProject; deterministic (count DESC, token ASC) order).
     The first step of any tokenizer/vocab build over a corpus."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(F.explode(F.split("text", " ", -1)).alias("w"))
         .filter(F.col("w") != "")

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from newsmaper_etl_spark.localrel import literal_df
 
-from newsmaper_etl_spark.io import fan_out, is_toy, kernel_narrow, load_table
+from newsmaper_etl_spark.io import is_toy, kernel_narrow, load_table, table_rows
 from newsmaper_etl_spark.operators import dedup as D
 from newsmaper_etl_spark.operators import multimodal as M
 from newsmaper_etl_spark.operators import sampling as SP
@@ -47,6 +47,21 @@ _STOP_SQL = "[" + ", ".join(f"'{w}'" for w in TX._ALL_STOPWORDS) + "]"
 #: testdata embeddings are fixed 64-dim float vectors (TESTDATA.md); the
 #: known dim lets every dot/norm unroll to whole-stage-codegen arithmetic
 EMB_DIM = 64
+
+#: Pairs past which the unrolled 64-dim dot's fixed parse+analyze+compile
+#: (a multi-KB expression, ~0.4 s per invocation) amortizes — at 10^5
+#: pairs the compile cost alone was most of q_knn_cosine's 3.2× (r07).
+UNROLL_PAIRS = 10**6
+
+
+def knn_unroll(sf_dir: str) -> bool:
+    """Cost-based expression form for the 5-query top-k lines
+    (q_knn_cosine, q_ann_lsh, q_ann_ivf): unroll when 5 queries ×
+    corpus rows ≥ :data:`UNROLL_PAIRS`, the corpus rows read from the
+    ``embeddings`` parquet footers (no Spark job). Below the cutover the
+    compact interpreted HOF form wins; see operators/similarity.py module
+    invariants for the per-element ~50× unroll advantage above it."""
+    return 5 * table_rows(sf_dir, "embeddings") >= UNROLL_PAIRS
 
 
 # --------------------------------------------------------------------------
@@ -77,7 +92,7 @@ def q_doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token statistics per document (oracle uses the identity
     sum(len(tokens)) == len(text) - (n_tokens - 1) for single-space
     splits)."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return TX.token_stats(docs).select(
         "doc_id", "n_tokens", "avg_token_len", "stopword_ratio"
     )
@@ -111,7 +126,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-vote language ID with pinned tie-break (count DESC, lang
     ASC) — the oracle's CASE chain evaluates languages alphabetically so
     the first max wins, matching the engine's sort_array argmax."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return TX.language_id(docs).select("doc_id", "lang_pred")
 
 
@@ -303,7 +318,7 @@ def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-aware position-weighted fingerprint (engine-portable — the
     reason it's hash-checkable while minhash/simhash are rows-only)."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return TX.fingerprint(docs).select("doc_id", "fp")
 
 
@@ -358,7 +373,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document quality heuristics (length band + punctuation density +
     stopword ratio). Floor-scaled outputs per the oracle convention —
     ROUND on decimal ties diverges between engines."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return TX.quality_score(docs).select(
         "doc_id", "punct_ratio", "stopword_ratio", "quality"
     )
@@ -2318,20 +2333,7 @@ def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    # Cost-based expression form, cut on ESTIMATED PAIRS, not is_toy:
-    # the workload is 5 × corpus pairs, so the unrolled 64-dim dot's
-    # fixed parse+analyze+compile (a multi-KB expression, ~0.4 s per
-    # invocation) only amortizes past ~10^6 pairs ≈ sf 10 — at sf 1.0
-    # (10^5 pairs) the compile cost alone was most of the query's 3.2×
-    # (r07). Compact interpreted HOF below the cutover; unknown dirs
-    # take the 100 TB posture (unroll). See operators/similarity.py
-    # module invariants for the per-element ~50× unroll advantage.
-    from newsmaper_etl_spark.io import parse_sf
-
-    sf = parse_sf(sf_dir)
-    out = S.cosine_topk(
-        queries, emb, k=3, dim=EMB_DIM, unroll=sf is None or sf >= 10
-    )
+    out = S.cosine_topk(queries, emb, k=3, dim=EMB_DIM, unroll=knn_unroll(sf_dir))
     return out.select("qid", "neighbor_id", "sim", F.col("rank").alias("rnk"))
 
 

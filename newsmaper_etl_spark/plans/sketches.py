@@ -15,9 +15,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from newsmaper_etl_spark.io import fan_out, load_table, parse_sf
+from newsmaper_etl_spark.io import load_table
 from newsmaper_etl_spark.operators import dedup as D
 from newsmaper_etl_spark.operators import similarity as S
+from newsmaper_etl_spark.plans.extensions import knn_unroll
 from newsmaper_etl_spark.plans.fixture_cache import (
     cached_fixture,
     cached_plan,
@@ -35,14 +36,14 @@ def q_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs (rows-only: xxhash64 signatures are not
     portable to the oracle engine; accuracy is property-tested against
     planted near-duplicates in tests/test_extensions.py)."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return D.minhash_lsh_candidates(docs, "doc_id", "text")
 
 
 @query("q_minhash_dedup", oracle=None, statistical=True, tags=("DEDUP", "LSH"))
 def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus after MinHash near-dup removal (rows-only; see above)."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return D.minhash_dedup(docs, "doc_id", "text", threshold=0.8).select(
         "doc_id", "source"
     )
@@ -52,7 +53,7 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-pairs, hamming ≤ 3 via 16-bit chunk buckets
     (rows-only: xxhash64-based signature; property-tested)."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return D.simhash_near_pairs(docs, "doc_id", "text", max_hamming=3)
 
 
@@ -65,13 +66,8 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    # pair-estimate unroll cutover (the q_knn_cosine rule): in-bucket
-    # pairs ≈ 5 queries × corpus/2^planes — the unrolled dot's fixed
-    # compile only amortizes at real corpus scale; unknown dirs take
-    # the 100 TB posture
-    sf = parse_sf(sf_dir)
     return S.lsh_cosine_topk(
-        queries, emb, dim=64, k=3, n_planes=8, unroll=sf is None or sf >= 10
+        queries, emb, dim=64, k=3, n_planes=8, unroll=knn_unroll(sf_dir)
     )
 
 
@@ -83,7 +79,7 @@ def q_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked or property-tested."""
     from newsmaper_etl_spark.operators.curate import curate_corpus
 
-    docs = fan_out(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return curate_corpus(docs).select(
         "doc_id", "source", "lang_pred", "n_tokens", "n_bpe", "quality"
     )
@@ -173,7 +169,7 @@ def q_curate_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from newsmaper_etl_spark.operators.curate import curate_corpus
 
     def _build():
-        docs = fan_out(load_table(spark, sf_dir, "documents"), sf_dir)
+        docs = load_table(spark, sf_dir, "documents")
         base = docs.select("doc_id", "text")
         tenth = base.filter(F.col("doc_id") % 10 == 0)
         return base.unionByName(
@@ -1160,7 +1156,7 @@ def q_curate_corpus_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from newsmaper_etl_spark.operators.curate import curate_corpus
 
     def _fixture():
-        docs = fan_out(load_table(spark, sf_dir, "documents"), sf_dir)
+        docs = load_table(spark, sf_dir, "documents")
         base = docs.select("doc_id", "text")
         tenth = base.filter(F.col("doc_id") % 10 == 0)
         return base.unionByName(
@@ -1283,7 +1279,7 @@ def q_curate_incremental_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _docs():
         return (
-            fan_out(load_table(spark, sf_dir, "documents"), sf_dir)
+            load_table(spark, sf_dir, "documents")
             .select("doc_id", "text")
             # bounded contract corpus (the q_ann_ivf_planted precedent):
             # the row pins stage CHAINING, not scale — the scale curve for
@@ -1379,11 +1375,9 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    # pair-estimate unroll cutover, as in q_ann_lsh
-    sf = parse_sf(sf_dir)
     return S.ivf_cosine_topk(
         queries, emb, k=3, n_centroids=8, nprobe=2, sample_n=512, dim=64,
-        cache_key=sf_dir + ":embeddings", unroll=sf is None or sf >= 10,
+        cache_key=sf_dir + ":embeddings", unroll=knn_unroll(sf_dir),
     )
 
 
@@ -1603,7 +1597,7 @@ def q_curate_selected_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from newsmaper_etl_spark.plans.curation import _DSIR_MISS, _DSIR_W
 
     def _build():
-        docs = fan_out(load_table(spark, sf_dir, "documents"), sf_dir)
+        docs = load_table(spark, sf_dir, "documents")
         base = docs.select("doc_id", "text")
         tenth = base.filter(F.col("doc_id") % 10 == 0)
         return base.unionByName(

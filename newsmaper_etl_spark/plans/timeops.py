@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from newsmaper_etl_spark.io import fan_out, load_table
+from newsmaper_etl_spark.io import load_table
 from newsmaper_etl_spark.registry import query
 
 from newsmaper_etl_spark.workerpatch import install as _workerpatch_install
@@ -228,9 +228,7 @@ def q_math_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row JSON path extraction over the events.props string column
     (the reference only reads JSON wholesale at import — S5)."""
-    # fan_out: per-row JSON parsing over a single-row-group toy scan
-    # (measured 0.32 -> 0.23 s; no-op at real SF)
-    ev = fan_out(load_table(spark, sf_dir, "events"), sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return ev.select(
         "event_id", F.get_json_object("props", "$.k").alias("k_val")
     )
@@ -287,8 +285,7 @@ def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     map_keys/element_at access, and a (k, v) -> bool map_filter — all
     JVM expressions. The oracle mirrors the map through DuckDB's JSON
     functions (json_keys / ->> extraction)."""
-    # fan_out: per-row map construction + filtering (0.50 -> 0.33 s)
-    ev = fan_out(load_table(spark, sf_dir, "events"), sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     m = F.map_concat(
         F.from_json("props", "map<string,int>"),
         F.create_map(F.lit("type_len"), F.length("event_type")),

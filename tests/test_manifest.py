@@ -763,6 +763,28 @@ def test_zero_row_commits_add_no_file(spark, tmp_path):
     assert M.read_table(spark, t).count() == 3
 
 
+def test_flat_batches_hold_only_manifest_entries(spark, tmp_path):
+    """Every file under ``data/`` of a flat table and of its ``_keys``
+    side table is a manifest entry: the batch write deletes Spark's
+    ``_SUCCESS`` marker and the ``.<name>.crc`` side files, as it deletes
+    zero-row files."""
+    from newsmaper_etl_spark import keyindex as K
+
+    t = str(tmp_path / "flat")
+    for i, keys in enumerate(([0, 1], [2, 3, 4], [5])):
+        batch = _news_rows(spark, keys).repartition(2)
+        M.append(batch, t, stat_cols=("id_date",))
+        assert K.append_batch_index(K.KEYS, batch, t, {"cols": ["link"]}, "w", i)
+    for path in (t, K.key_index_path(t)):
+        live = M._load_manifest(path, M.current_version(path))["files"]
+        on_disk = {
+            os.path.relpath(os.path.join(d, f), path)
+            for d, _, files in os.walk(os.path.join(path, "data"))
+            for f in files
+        }
+        assert live and on_disk == {e["path"] for e in live}
+
+
 def test_overwrite_partial_replace_guards(spark, tmp_path):
     """A partial replace carries the other entries by reference, so the
     batch must match the recorded schema and layout; txn marks and

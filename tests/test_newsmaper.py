@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from newsmaper_etl_spark import fixtures as FX
 from newsmaper_etl_spark.operators.newsmaper import (
+    DATE_DIM_DDL,
     append_new_rows,
     dedup_keep_first,
     generate_date_dim,
@@ -166,3 +167,16 @@ def test_generate_date_dim(spark):
     full_dim = generate_date_dim(spark, "2023-01-01 00:00:00", "2023-01-07 23:00:00")
     resolved = resolve_date_key(arts, full_dim)
     assert resolved.count() == 7
+
+
+def test_date_dim_ddl_matches_generated_schema(spark):
+    """The CLI reads the written date dim with DATE_DIM_DDL instead of
+    inferring its schema; the constant must name the generated columns
+    and types, in order."""
+    from pyspark.sql.types import StructType
+
+    dim = generate_date_dim(spark, "2023-01-01 00:00:00", "2023-01-01 01:00:00")
+    want = StructType.fromDDL(DATE_DIM_DDL)
+    assert [(f.name, f.dataType) for f in want] == [
+        (f.name, f.dataType) for f in dim.schema
+    ]

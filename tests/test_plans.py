@@ -9,6 +9,7 @@ want on a 1000-executor cluster, not just a plan that passes at sf0.01.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from newsmaper_etl_spark.registry import QUERIES, _ensure_loaded
@@ -378,17 +379,21 @@ def test_multimodal_queries_are_map_only(spark, sf_dir):
         assert "ArrowEvalPython" in plan or "MapInPandas" in plan, name
 
 
-def test_tpch_no_forced_broadcast_of_data_scaled_sides(spark, sf_dir, tmp_path):
+def test_tpch_no_forced_broadcast_of_data_scaled_sides(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """The 100×-scale broadcast contract (VERDICT r06 #1): supplier/part
     (and anything derived from them) scale with data, and ``F.broadcast``
     is a directive AQE cannot override — so the explicit hints those
-    sides carry at toy SF must VANISH at real scale, leaving only the
-    fixed-cardinality hints (nation = 25 rows, region = 5, one-row
-    scalar cutoffs). Exercised against a symlinked copy of the testdata
-    under a path with NO parseable sf component: ``is_toy`` treats
-    unknown dirs as real scale (the conservative 100 TB posture), so the
-    same query functions must emit exactly the fixed-side hint count."""
+    sides carry on a small corpus must VANISH at real scale, leaving only
+    the fixed-cardinality hints (nation = 25 rows, region = 5, one-row
+    scalar cutoffs). The large posture is reached by lowering
+    ``io.SMALL_TABLE_BYTES`` below every table's size; a symlinked copy
+    of the corpus under an unrelated name gets the same hints as the
+    original in both postures, since the posture reads bytes, not names."""
     import os
+
+    from newsmaper_etl_spark import io as io_mod
 
     prod = tmp_path / "production"
     prod.mkdir()
@@ -411,12 +416,57 @@ def test_tpch_no_forced_broadcast_of_data_scaled_sides(spark, sf_dir, tmp_path):
         "q_tpch_q20": 0,
         "q_tpch_q21": 0,
     }
+    small = {name: hint_count(name, sf_dir) for name in expected}
     for name, fixed in expected.items():
-        at_scale = hint_count(name, prod)
+        # the small posture really does add hints on top of the fixed set
+        assert small[name] > fixed or fixed == 0 and small[name] >= 1, name
+        assert hint_count(name, prod) == small[name], name
+    monkeypatch.setattr(io_mod, "SMALL_TABLE_BYTES", 0)
+    for name, fixed in expected.items():
+        at_scale = hint_count(name, sf_dir)
         assert at_scale == fixed, f"{name}: {at_scale} hints at scale, want {fixed}"
-        # and the toy path really does add hints on top of the fixed set
-        assert hint_count(name, sf_dir) > fixed or fixed == 0 and \
-            hint_count(name, sf_dir) >= 1, name
+        assert hint_count(name, prod) == at_scale, name
+
+
+#: Every registered query whose plan still branches on the scale posture
+#: (``io.is_toy``) or on the top-k unroll cutover (``knn_unroll``).
+POSTURE_FORKS = (
+    "q_tfidf_topterms",       # tf histogram checkpoint at scale
+    "q_shuffle_rank",         # two-level rank at scale
+    "q_decontaminate_spans",  # broadcast_cov
+    "q_paragraph_dedup",      # broadcast_cov
+    "q_media_features",       # kernel_narrow
+    "q_tpch_q4",              # orders broadcast hint
+    "q_tpch_q2",              # _bc hints
+    "q_knn_cosine",           # unrolled vs compact dot
+)
+
+
+@pytest.mark.parametrize("name", POSTURE_FORKS)
+def test_posture_forks_agree(spark, sf_dir, monkeypatch, name):
+    """Both sides of each posture fork, on the same corpus: forced small
+    (every table under ``io.SMALL_TABLE_BYTES``, compact dots) and forced
+    large (no table under it, unrolled dots). The two plans differ, and
+    each side matches the query's DuckDB oracle."""
+    from newsmaper_etl_spark import io as io_mod
+    from newsmaper_etl_spark.oracle import compare
+    from newsmaper_etl_spark.plans import extensions as X
+    from newsmaper_etl_spark.plans import fixture_cache
+
+    spec = QUERIES[name]
+    assert spec.oracle, name
+    plans = {}
+    for posture, limit in (("small", 2**62), ("large", 0)):
+        monkeypatch.setattr(io_mod, "SMALL_TABLE_BYTES", limit)
+        monkeypatch.setattr(X, "UNROLL_PAIRS", limit)
+        assert io_mod.is_toy(sf_dir) == (posture == "small")
+        fixture_cache.clear()  # frames and plans built under the other side
+        df = spec.fn(spark, sf_dir)
+        plans[posture] = _plan(df, "simple")
+        res = compare(name, df, spec.oracle, sf_dir)
+        assert res.ok, f"{posture}: {res.detail}"
+    fixture_cache.clear()
+    assert plans["small"] != plans["large"], name
 
 
 def test_semantic_dedup_plans_hash_joins_only(spark, sf_dir):
