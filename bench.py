@@ -11,7 +11,9 @@ Methodology:
   prune the work. collect()/toPandas() were measured and rejected:
   collect row-pickles large results (q_math_round 0.70→5.1 s), toPandas
   hits slow Arrow conversions on map/struct outputs, and the matching
-  DuckDB .df() methodology speeds the denominator more (ROUND5_NOTES §1);
+  DuckDB .df() methodology speeds the denominator more (corpus totals:
+  noop write 49.2 s, collect 61.6 s, toPandas 56.3 s; DuckDB fetchall
+  10.9 → df 8.8 s — ``git show f59449b:ROUND5_NOTES.md`` §1);
 - one untimed FULL-CORPUS warmup pass precedes timing (JMH-style): C2
   keeps compiling for minutes, and alphabetically-early queries were
   otherwise absorbing the warm-up tax (0.26 vs 0.08 s for the same
@@ -143,12 +145,27 @@ def _best(fn, repeat: int) -> float | None:
 #: (bounded) before starting; the attempts are recorded in the box
 #: block either way.
 _PREFLIGHT_BASELINE_SEC = 0.0121  # the r8-record healthy-box probe
+#: ``lineitem`` rows of the corpus that baseline was taken on (sf0.1):
+#: the probe scans lineitem, so only that corpus can be compared to it
+_PREFLIGHT_LINEITEM_ROWS = 600_000
 _PREFLIGHT_MAX_RATIO = 1.35
 _PREFLIGHT_RETRIES = 4
 _PREFLIGHT_SLEEP_SEC = 45
 
 
 def _preflight(sf_dir: str) -> dict:
+    """The pre-flight on the baseline's own corpus, recognized by its
+    ``lineitem`` footer row count (no Spark job), whatever the directory
+    is called. Any other corpus skips it: its probe scales with the data
+    and would always (or never) read "contended"."""
+    from newsmaper_etl_spark.io import table_rows
+
+    if table_rows(sf_dir, "lineitem") != _PREFLIGHT_LINEITEM_ROWS:
+        return {"probes": [], "ratio": None, "contended": None}
+    return _probe_box(sf_dir)
+
+
+def _probe_box(sf_dir: str) -> dict:
     from newsmaper_etl_spark.oracle import duckdb_conn
 
     con = duckdb_conn(sf_dir)
@@ -207,13 +224,7 @@ def _load_prior(sf: float, here: str) -> dict[str, float]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # the pre-flight baseline is calibrated on the sf0.1 gate corpus;
-    # rehearsal SFs skip it (their probe scales with the data and would
-    # always read "contended")
-    preflight = (
-        _preflight(sf_dir) if sf_dir.rstrip("/").endswith("sf0.1")
-        else {"probes": [], "ratio": None, "contended": None}
-    )
+    preflight = _preflight(sf_dir)
     from newsmaper_etl_spark.io import is_toy
 
     # the scale factor is a record label only (prior-record matching and
@@ -282,8 +293,9 @@ def main() -> None:
     # DAG scheduling, task launch, V2 write commit. DuckDB's equivalent
     # is ~1 ms in-process. Reported alongside the raw ratio as
     # ratio_excl_floor = (shared − n·floor)/duck so the machinery-vs-
-    # compute split is visible in the record (full decomposition:
-    # tools/profile_floor.py + ROUND5_NOTES.md §1). The raw
+    # compute split is visible in the record (tools/profile_floor.py
+    # decomposes it: ~0.04 s py4j plan building + ~0.03 s job round-trip
+    # + ~0.04 s V2-write/AQE stage per query at sf0.1). The raw
     # ratio_vs_duckdb remains the headline gate number.
     tiny = spark.range(1)
     floor_sec = _best(lambda: evaluate(tiny), 7) or 0.0

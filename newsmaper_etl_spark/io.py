@@ -17,11 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from newsmaper_etl_spark.workerpatch import install as _workerpatch_install
 
-# Lazy zip-directory invalidation for every process that imports this
-# module — on a Spark worker that is the moment an engine UDF is
-# unpickled, after which every later task on that worker skips the
-# per-task zip central-directory re-parse (workerpatch.py has the
-# measured decomposition; guide §4).
+# Lazy zip-directory invalidation for every process that imports any
+# engine module: the package __init__ imports this module first. On a
+# Spark worker that is the moment an engine UDF is unpickled, after
+# which every later task on that worker skips the per-task zip
+# central-directory re-parse (workerpatch.py has the measured
+# decomposition; guide §4).
 _workerpatch_install()
 
 TABLE_NAMES = (

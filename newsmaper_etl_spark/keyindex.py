@@ -21,13 +21,18 @@ dir (``<table>/<subdir>`` — it travels with the table on a move, and
 - ``_domains``: per-batch per-domain stat deltas for the domain gate;
 - ``_gumbel``: per-batch local top-k DSIR Gumbel partials.
 
-Every kind is one :class:`SideIndex` spec — subdir, stamp columns and
-the stamp values a gate configuration implies, the function that
-derives index rows from a frame, the gate, the bootstrap ``op_detail``
-tag and the compaction — run by one set of generic functions:
-:func:`read_index` (optionally at a pinned version), :func:`check_stamp`,
-:func:`ensure_index_bootstrap`, :func:`append_batch_index` and
-:func:`compact_index`, all committing through :func:`txn_append`.
+Every kind is one :class:`SideIndex` spec, and so is the stateless
+classifier gate: the :func:`streaming.pipeline.write_stream_manifest`
+keyword that configures it with its defaults, required keys and
+telemetry label, the subdir, stamp columns and the stamp values a
+configuration implies, the function that derives index rows from a
+frame, the gate, the bootstrap ``op_detail`` tag and the compaction.
+Each spec's comment documents its keyword's keys; :data:`CHAIN` is the
+run order. One set of generic functions runs them: :func:`gate_chain`
+(normalize every keyword), :func:`read_index` (optionally at a pinned
+version), :func:`check_stamp`, :func:`ensure_index_bootstrap`,
+:func:`append_batch_index` and :func:`compact_index`, all committing
+through :func:`txn_append`.
 
 Crash-safety invariant (single writer, as documented on the sink): an
 index never runs AHEAD of the data table. Data commits first, each
@@ -53,7 +58,7 @@ from __future__ import annotations
 import os
 import zlib
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,35 +72,57 @@ from newsmaper_etl_spark.operators import web as W
 _BOOT_APP_SUFFIX = "#keyindex-bootstrap"
 
 
-@dataclass(frozen=True)
+@dataclass(frozen=True, eq=False)
 class SideIndex:
-    """One kind of persisted side index. ``cfg`` below is the gate's
-    configuration dict as :func:`streaming.pipeline.write_stream_manifest`
+    """One stage of the streaming ingest chain (:data:`CHAIN`) and the
+    persisted side index it keeps, if any: the whole contract of one
+    :func:`streaming.pipeline.write_stream_manifest` gate keyword (or of
+    one ``method`` of it).
+    ``cfg`` below is that keyword's dict as :func:`gate_config`
     normalizes it."""
 
-    #: subdir under the table
-    sub: str
+    #: the ``write_stream_manifest`` keyword whose dict configures it
+    keyword: str
+    #: subdir under the table; None for a stateless stage with no side
+    #: table (no bootstrap, replay pin, index append or compaction)
+    sub: str | None = None
+    #: cfg defaults. A ``"method"`` default names this spec among the
+    #: specs that share its keyword (the first in :data:`CHAIN` is the
+    #: keyword's default method)
+    defaults: dict = field(default_factory=dict)
+    #: cfg keys with no default
+    required: tuple[str, ...] = ()
+    #: cfg → None, raising ValueError on a config the gate can't honour
+    check: Callable[[dict], None] | None = None
+    #: gate-count telemetry label of the stage's output (None: uncounted)
+    label: str | None = None
+    #: cfg key naming a column whose footer stats every data commit
+    #: records (the candidate point fetch of :func:`_seen_rows` prunes
+    #: files on it)
+    data_stat_col: str | None = None
+    #: name of the module-level gate ``(batch_df, table, cfg,
+    #: index_version, data_version) → gated batch``, looked up on this
+    #: module at call time. It reads its index at ``index_version`` and
+    #: the data table at ``data_version`` (the :func:`replay_version`
+    #: pins; None = current) and returns its input unchanged or an
+    #: eagerly materialized frame: the gated batch feeds the data commit
+    #: AND every index append, which must see identical rows (the
+    #: classifier's lazy filter is deterministic). None for a side
+    #: output that gates nothing
+    gate: str | None = None
     #: ``op_detail`` of the bootstrap commit
-    boot_tag: str
+    boot_tag: str = ""
     #: constant stamp columns (their footer min=max stats ride the
     #: manifest, so the stamp survives parquet round-trips, compaction
     #: and vacuum, and is validated driver-side with no Spark job —
     #: column METADATA would not survive the manifest's recorded-DDL read)
-    stamp: tuple[str, ...]
+    stamp: tuple[str, ...] = ()
     #: cfg → stamp values
-    stamp_of: Callable[[dict], tuple]
+    stamp_of: Callable[[dict], tuple] = lambda cfg: ()
     #: (frame, cfg) → unstamped index rows for that frame
-    rows: Callable[[DataFrame, dict], DataFrame]
+    rows: Callable[[DataFrame, dict], DataFrame] | None = None
     #: what a drifted stamp breaks, for the drift error
     basis: str = ""
-    #: (batch_df, table, cfg, index_version, data_version) → gated batch,
-    #: reading this index at ``index_version`` and the data table at
-    #: ``data_version`` (the :func:`replay_version` pins; None = current).
-    #: A gate returns its input unchanged or an eagerly materialized
-    #: frame: the gated batch feeds the data commit AND every index
-    #: append, which must see identical rows. None for a side output
-    #: that gates nothing
-    gate: Callable | None = None
     #: columns the stored rows are a set over: new rows are anti-joined
     #: against the index on them before each append
     set_on: tuple[str, ...] = ()
@@ -108,6 +135,39 @@ class SideIndex:
 
     def path(self, table: str) -> str:
         return os.path.join(table, self.sub)
+
+
+def gate_config(spec: SideIndex, raw: dict) -> dict:
+    """``raw`` over the spec's defaults; raises ValueError naming the
+    keyword and the key when a required key is missing."""
+    cfg = {**spec.defaults, **raw}
+    for key in spec.required:
+        if key not in cfg:
+            raise ValueError(f"{spec.keyword} requires a {key!r} entry")
+    if spec.check is not None:
+        spec.check(cfg)
+    return cfg
+
+
+def gate_chain(**configs: dict | None) -> list[tuple[SideIndex, dict]]:
+    """The stages ``configs`` (``write_stream_manifest`` keyword → raw
+    dict) configure, in :data:`CHAIN` order, each with its normalized
+    cfg. A None or empty dict configures nothing; a keyword that several
+    specs share picks one by its ``"method"`` entry."""
+    chosen: dict[SideIndex, dict] = {}
+    for kw, raw in configs.items():
+        if not raw:
+            continue
+        specs = [s for s in CHAIN if s.keyword == kw]
+        if len(specs) > 1:
+            methods = [s.defaults["method"] for s in specs]
+            method = raw.get("method", methods[0])
+            if method not in methods:
+                raise ValueError(
+                    f"{kw} method={method!r} ({', '.join(methods)})")
+            specs = [specs[methods.index(method)]]
+        chosen[specs[0]] = gate_config(specs[0], raw)
+    return [(s, chosen[s]) for s in CHAIN if s in chosen]
 
 
 # --------------------------------------------------------------------------
@@ -318,8 +378,8 @@ def anti_join_index(
 
 
 def exact_dedup_batch(
-    batch_df: DataFrame, table: str, cols: list[str],
-    order_col: str | None = None, index_version: int | None = None,
+    batch_df: DataFrame, table: str, cfg: dict,
+    index_version: int | None = None, data_version: int | None = None,
 ) -> DataFrame:
     """Keep one row per key within the batch (the first by ``order_col``
     — the deterministic contract; an arbitrary survivor without it),
@@ -327,6 +387,7 @@ def exact_dedup_batch(
     an eagerly materialized frame: without ``order_col`` every
     evaluation of a lazy ``dropDuplicates`` may keep a different
     survivor."""
+    cols, order_col = cfg["cols"], cfg["order_col"]
     if order_col:
         batch_df = D.exact_dedup(batch_df, cols, order_col, hash_keys=True)
     else:
@@ -337,14 +398,26 @@ def exact_dedup_batch(
     return batch_df.localCheckpoint(eager=True)
 
 
+#: ``dedup_keys``: exact-key corpus dedup (the incremental_exact_dedup
+#: composition). cfg ``{"cols": [...], "order_col": None}`` carries the
+#: sink's ``dedup_keys`` and ``dedup_order_col``. Batch keys are
+#: anti-joined on the 128-bit hashed basis against ``_keys``, an
+#: EVER-SEEN registry that survives maintenance rewrites of the data
+#: table: the txn marks make each BATCH exactly-once, this makes each
+#: KEY at-most-once across the table's whole history, whichever feed,
+#: restart or re-crawl redelivers it. Per-batch dedup I/O is 16 bytes
+#: per seen key, never the corpus (a table predating the index pays one
+#: bootstrap scan). Single writer: two pipelines appending the same key
+#: in the same instant can both pass the check — the manifest claim
+#: serializes commits, not reads. Third in the chain, after the two
+#: filters.
 KEYS = SideIndex(
-    sub="_keys", boot_tag="keyindex-bootstrap", stamp=(),
-    stamp_of=lambda c: (),
+    keyword="dedup_keys", sub="_keys", label="after_exact",
+    required=("cols",), defaults={"order_col": None},
+    gate="exact_dedup_batch", boot_tag="keyindex-bootstrap",
     rows=lambda df, c: (
         with_hashed_keys(df, c["cols"]).select("__hk1", "__hk2").distinct()
     ),
-    gate=lambda b, t, c, iv, dv: exact_dedup_batch(
-        b, t, c["cols"], c["order_col"], index_version=iv),
 )
 key_index_path = KEYS.path
 
@@ -433,18 +506,8 @@ def _drop_verified(
 # --------------------------------------------------------------------------
 
 def near_dedup_batch(
-    batch_df: DataFrame,
-    table: str,
-    id_col: str,
-    text_col: str = "text",
-    threshold: float = 0.8,
-    num_hashes: int = 16,
-    bands: int = 4,
-    k: int = 3,
-    within_batch: bool = False,
-    max_candidate_ids: int = 100_000,
-    data_version: int | None = None,
-    index_version: int | None = None,
+    batch_df: DataFrame, table: str, cfg: dict,
+    index_version: int | None = None, data_version: int | None = None,
 ) -> DataFrame:
     """Drop batch docs that near-duplicate ANY already-ingested doc,
     using the persisted banded index — the batch-scaled streaming form
@@ -459,33 +522,46 @@ def near_dedup_batch(
     Parameter drift between the index and this batch's signing raises.
     Returns ``batch_df`` itself when there is nothing to gate (no index,
     no within-batch pass), else an eagerly materialized frame."""
-    spark = batch_df.sparkSession
+    id_col, text_col, k = cfg["id_col"], cfg["text_col"], cfg["k"]
     within = (
-        (lambda df: D.minhash_dedup(df, id_col, text_col, threshold,
-                                    num_hashes, bands, k))
-        if within_batch else None
+        (lambda df: D.minhash_dedup(df, id_col, text_col, cfg["threshold"],
+                                    cfg["num_hashes"], cfg["bands"], k))
+        if cfg["within_batch"] else None
     )
-    idx = read_index(BANDED, spark, table, index_version)
+    idx = read_index(BANDED, batch_df.sparkSession, table, index_version)
     if idx is None:
         if within is None:
             return batch_df
         return within(batch_df).localCheckpoint(eager=True)
-    check_banded_stamp(table, num_hashes, bands, k)
-    nb = D.banded_signatures(
-        batch_df.select(id_col, text_col), id_col, text_col,
-        num_hashes, bands, k,
-    )
+    check_stamp(BANDED, table, BANDED.stamp_of(cfg))
+    nb = BANDED.rows(batch_df, cfg)
     return _drop_verified(
         batch_df, table, nb, idx, ["band", "bh"], id_col, text_col,
-        max_candidate_ids, data_version,
+        cfg["max_candidate_ids"], data_version,
         lambda seen, cands: D.cross_corpus_losers(
-            batch_df, seen, cands, id_col, text_col, k, threshold),
+            batch_df, seen, cands, id_col, text_col, k, cfg["threshold"]),
         within,
     )
 
 
+#: ``near_dedup`` (``method: "minhash"``, the default): near-duplicate
+#: corpus dedup by token-set overlap (the incremental_minhash_dedup
+#: composition, batch-scaled) — robust to reordering and small edits,
+#: exact-Jaccard verified. ``id_col`` is required; ``k`` is the shingle
+#: width. The ``_banded`` index holds three longs per doc per band,
+#: stamped with (num_hashes, bands, k); candidates are batch band keys ⋈
+#: the index and the verify fetches only candidate docs from the data
+#: table (:func:`near_dedup_batch` has the cost contract and the
+#: disclosed over-cap fallback), which is why data commits record
+#: ``id_col`` stats. Every near_dedup method runs right after
+#: ``dedup_keys``: cheap exact-key drops first shrink the signing work.
 BANDED = SideIndex(
-    sub="_banded", boot_tag="bandedindex-bootstrap",
+    keyword="near_dedup", sub="_banded", label="after_near",
+    required=("id_col",), data_stat_col="id_col",
+    defaults={"method": "minhash", "text_col": "text", "within_batch": False,
+              "threshold": 0.8, "num_hashes": 16, "bands": 4, "k": 3,
+              "max_candidate_ids": 100_000},
+    gate="near_dedup_batch", boot_tag="bandedindex-bootstrap",
     stamp=("__nh", "__nb", "__k"),
     stamp_of=lambda c: (c["num_hashes"], c["bands"], c["k"]),
     rows=lambda df, c: D.banded_signatures(
@@ -493,16 +569,8 @@ BANDED = SideIndex(
         c["num_hashes"], c["bands"], c["k"]),
     basis="band keys from different (num_hashes, bands, k) "
           "parameterizations",
-    gate=lambda b, t, c, iv, dv: near_dedup_batch(
-        b, t, c["id_col"], c["text_col"], c["threshold"], c["num_hashes"],
-        c["bands"], c["k"], c["within_batch"], c["max_candidate_ids"],
-        data_version=dv, index_version=iv),
 )
 banded_index_path = BANDED.path
-
-
-def check_banded_stamp(table: str, num_hashes: int, bands: int, k: int) -> None:
-    check_stamp(BANDED, table, (num_hashes, bands, k))
 
 
 # --------------------------------------------------------------------------
@@ -510,14 +578,8 @@ def check_banded_stamp(table: str, num_hashes: int, bands: int, k: int) -> None:
 # --------------------------------------------------------------------------
 
 def simhash_dedup_batch(
-    batch_df: DataFrame,
-    table: str,
-    id_col: str,
-    text_col: str = "text",
-    max_hamming: int = 3,
-    bits: int = 64,
-    within_batch: bool = False,
-    index_version: int | None = None,
+    batch_df: DataFrame, table: str, cfg: dict,
+    index_version: int | None = None, data_version: int | None = None,
 ) -> DataFrame:
     """Drop batch docs within SimHash hamming radius of ANY ingested
     doc, via the persisted chunk index — the streaming form of
@@ -527,36 +589,43 @@ def simhash_dedup_batch(
     narrow rows per seen doc. Parameter drift raises. Returns
     ``batch_df`` itself when there is nothing to gate (no index, no
     within-batch pass), else an eagerly materialized frame."""
+    id_col, text_col = cfg["id_col"], cfg["text_col"]
+    max_hamming, bits = cfg["max_hamming"], cfg["bits"]
     idx = read_index(CHUNKS, batch_df.sparkSession, table, index_version)
     if idx is None:
-        if not within_batch:
+        if not cfg["within_batch"]:
             return batch_df
         return D.simhash_dedup(batch_df, id_col, text_col, max_hamming,
                                bits).localCheckpoint(eager=True)
-    check_chunks_stamp(table, max_hamming, bits)
+    check_stamp(CHUNKS, table, CHUNKS.stamp_of(cfg))
     out = D.incremental_simhash_dedup(
         batch_df, None, id_col, text_col, max_hamming, bits,
-        within_batch=within_batch, seen_chunks=idx,
+        within_batch=cfg["within_batch"], seen_chunks=idx,
     )
     return out.localCheckpoint(eager=True)
 
 
+#: ``near_dedup`` with ``method: "simhash"``: near-duplicates within a
+#: SimHash hamming radius ``max_hamming`` of ``bits``-bit fingerprints
+#: (frequency-vector similarity at a fixed bar) over the ``_chunks``
+#: pigeonhole index. The index carries the fingerprints, so the verify
+#: runs off the candidate join and a batch never reads corpus text or
+#: the data table: h+1 narrow rows per seen doc is the whole per-batch
+#: dedup read — the smallest of the three methods.
 CHUNKS = SideIndex(
-    sub="_chunks", boot_tag="chunkindex-bootstrap", stamp=("__mh", "__bits"),
+    keyword="near_dedup", sub="_chunks", label="after_near",
+    required=("id_col",), data_stat_col="id_col",
+    defaults={"method": "simhash", "text_col": "text", "within_batch": False,
+              "max_hamming": 3, "bits": 64},
+    gate="simhash_dedup_batch", boot_tag="chunkindex-bootstrap",
+    stamp=("__mh", "__bits"),
     stamp_of=lambda c: (c["max_hamming"], c["bits"]),
     rows=lambda df, c: D.simhash_chunks(
         df.select(c["id_col"], c["text_col"]), c["id_col"], c["text_col"],
         c["max_hamming"], c["bits"]),
     basis="chunk keys from different (max_hamming, bits) parameterizations",
-    gate=lambda b, t, c, iv, dv: simhash_dedup_batch(
-        b, t, c["id_col"], c["text_col"], c["max_hamming"], c["bits"],
-        c["within_batch"], index_version=iv),
 )
 chunks_index_path = CHUNKS.path
-
-
-def check_chunks_stamp(table: str, max_hamming: int, bits: int) -> None:
-    check_stamp(CHUNKS, table, (max_hamming, bits))
 
 
 # --------------------------------------------------------------------------
@@ -701,19 +770,8 @@ def _semantic_prepare(src: DataFrame, table: str, cfg: dict,
 
 
 def semantic_dedup_batch(
-    batch_df: DataFrame,
-    table: str,
-    id_col: str,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    threshold: float = 0.9,
-    within_batch: bool = False,
-    max_candidate_ids: int = 100_000,
-    data_version: int | None = None,
-    n_centroids: int | None = None,
-    n_tables: int | None = None,
-    seed: int | None = None,
-    index_version: int | None = None,
+    batch_df: DataFrame, table: str, cfg: dict,
+    index_version: int | None = None, data_version: int | None = None,
 ) -> DataFrame:
     """Drop batch docs that semantically duplicate ANY already-ingested
     doc (exact cosine ≥ threshold within the same frozen k-means cell),
@@ -734,12 +792,14 @@ def semantic_dedup_batch(
     correctness (every assignment uses the same centroids); re-cluster
     by rebuilding the index offline when drift warrants it. Returns
     ``batch_df`` itself when there is nothing to gate (no index, no
-    within-batch pass), else an eagerly materialized frame."""
+    within-batch pass), else an eagerly materialized frame. A None
+    ``n_centroids``, ``n_tables`` or ``seed`` adopts the index's."""
     _raise_if_stale(table)
+    id_col, vec_col, dim = cfg["id_col"], cfg["vec_col"], cfg["dim"]
     within = (
-        (lambda df: S.semantic_dedup(df, dim, id_col, vec_col, threshold,
-                                     keep="min_id"))
-        if within_batch else None
+        (lambda df: S.semantic_dedup(df, dim, id_col, vec_col,
+                                     cfg["threshold"], keep="min_id"))
+        if cfg["within_batch"] else None
     )
     spark = batch_df.sparkSession
     idx = read_index(SEMCELLS, spark, table, index_version)
@@ -747,7 +807,8 @@ def semantic_dedup_batch(
         if within is None:
             return batch_df
         return within(batch_df).localCheckpoint(eager=True)
-    params = check_semantic_stamp(table, dim, n_centroids, n_tables, seed)
+    params = check_semantic_stamp(table, dim, cfg["n_centroids"],
+                                  cfg["n_tables"], cfg["seed"])
     nb = S.semantic_cell_keys(
         batch_df.select(id_col, vec_col), dim, id_col, vec_col,
         read_centroids(spark, table), params["n_planes"],
@@ -755,26 +816,38 @@ def semantic_dedup_batch(
     )
     return _drop_verified(
         batch_df, table, nb, idx, ["cell", "t", "b"], id_col, vec_col,
-        max_candidate_ids, data_version,
+        cfg["max_candidate_ids"], data_version,
         lambda seen, cands: S.semantic_losers_vs_seen(
-            batch_df, seen, cands, id_col, vec_col, dim, threshold),
+            batch_df, seen, cands, id_col, vec_col, dim, cfg["threshold"]),
         within,
     )
 
 
+#: ``near_dedup`` with ``method: "semantic"``: embedding-cosine SemDeDup
+#: for same-meaning content that shares no tokens (translations,
+#: paraphrases, template re-renders; embeddings in ``vec_col``
+#: required). The ``_semcells`` index holds (cell, LSH table, bucket)
+#: keys under k-means centroids frozen at ``_semcentroids`` when the
+#: index is born (trained on ``sample_n`` rows of the bootstrap snapshot
+#: or of a born-streaming table's first batch); ``n_planes`` None is
+#: sized from occupancy then and read back from the stamp.
+#: :func:`semantic_dedup_batch` has the cost contract; every cells
+#: commit carries drift telemetry (:func:`semantic_drift_history`).
 SEMCELLS = SideIndex(
-    sub="_semcells", boot_tag="semcells-bootstrap", stamp=_SSTAMP,
+    keyword="near_dedup", sub="_semcells", label="after_near",
+    required=("id_col",), data_stat_col="id_col",
+    defaults={"method": "semantic", "text_col": "text", "within_batch": False,
+              "vec_col": "embedding", "dim": 64, "threshold": 0.9,
+              "n_centroids": 64, "n_planes": None, "n_tables": 8,
+              "sample_n": 2048, "seed": 42, "max_candidate_ids": 100_000},
+    gate="semantic_dedup_batch", boot_tag="semcells-bootstrap",
+    stamp=_SSTAMP,
     stamp_of=lambda c: (c["n_centroids"], c["n_planes"], c["n_tables"],
                         c["dim"], c["seed"]),
     rows=lambda df, c: S.semantic_cell_keys(
         df.select(c["id_col"], c["vec_col"]), c["dim"], c["id_col"],
         c["vec_col"], c["cents"], c["n_planes"], c["n_tables"], c["seed"]),
     basis="cells from different centroids, planes or seeds",
-    gate=lambda b, t, c, iv, dv: semantic_dedup_batch(
-        b, t, c["id_col"], c["vec_col"], c["dim"], c["threshold"],
-        c["within_batch"], c["max_candidate_ids"], data_version=dv,
-        n_centroids=c["n_centroids"], n_tables=c["n_tables"],
-        seed=c["seed"], index_version=iv),
     prepare=_semantic_prepare,
     # drift telemetry riding every cells commit (the bootstrap's entry
     # is the baseline) — see semantic_drift_history
@@ -782,37 +855,6 @@ SEMCELLS = SideIndex(
         "drift": _affinity_stats(df, c["vec_col"], c["cents"], c["dim"])},
 )
 semcells_index_path = SEMCELLS.path
-
-
-def _semantic_cfg(id_col, vec_col, dim, n_centroids, n_planes, n_tables,
-                  sample_n, seed) -> dict:
-    return {"id_col": id_col, "vec_col": vec_col, "dim": dim,
-            "n_centroids": n_centroids, "n_planes": n_planes,
-            "n_tables": n_tables, "sample_n": sample_n, "seed": seed}
-
-
-def ensure_semantic_bootstrap(
-    spark: SparkSession, table: str, id_col: str, vec_col: str, dim: int,
-    n_centroids: int, n_planes: int | None, n_tables: int, sample_n: int,
-    seed: int, app: str, version: int | None = None,
-) -> bool:
-    """:func:`ensure_index_bootstrap` of the semantic index: train +
-    commit the frozen centroids, then commit every snapshot row's
-    (cell, t, b) keys."""
-    cfg = _semantic_cfg(id_col, vec_col, dim, n_centroids, n_planes,
-                        n_tables, sample_n, seed)
-    return ensure_index_bootstrap(SEMCELLS, spark, table, cfg, app, version)
-
-
-def append_batch_cells(
-    batch_df: DataFrame, table: str, id_col: str, vec_col: str, dim: int,
-    n_centroids: int, n_planes: int | None, n_tables: int, sample_n: int,
-    seed: int, app: str, batch_id: int,
-) -> bool:
-    """:func:`append_batch_index` of the semantic index."""
-    cfg = _semantic_cfg(id_col, vec_col, dim, n_centroids, n_planes,
-                        n_tables, sample_n, seed)
-    return append_batch_index(SEMCELLS, batch_df, table, cfg, app, batch_id)
 
 
 # --------------------------------------------------------------------------
@@ -838,12 +880,8 @@ def _rejoin_edited(batch_df: DataFrame, edited: DataFrame, id_col: str,
 
 
 def span_dedup_batch(
-    batch_df: DataFrame,
-    table: str,
-    id_col: str,
-    text_col: str = "text",
-    k: int = 8,
-    index_version: int | None = None,
+    batch_df: DataFrame, table: str, cfg: dict,
+    index_version: int | None = None, data_version: int | None = None,
 ) -> DataFrame:
     """EDIT the batch against the persisted gram index: every span the
     corpus already holds (and every within-batch non-first repeat) is
@@ -859,12 +897,13 @@ def span_dedup_batch(
     reason); at 100 TB it shards by hash range, and per-batch cost is
     still batch grams ⋈ index instead of re-gramming the corpus."""
     spark = batch_df.sparkSession
-    check_grams_stamp(table, k)
+    id_col, text_col = cfg["id_col"], cfg["text_col"]
+    check_stamp(GRAMS, table, GRAMS.stamp_of(cfg))
     idx = read_index(GRAMS, spark, table, index_version)
     if idx is None:
         idx = spark.range(0).select(F.col("id").alias("g"))
     covered = D.incremental_duplicate_span_positions(
-        batch_df, None, id_col, text_col, k, seen_grams=idx,
+        batch_df, None, id_col, text_col, cfg["k"], seen_grams=idx,
         distinct=False,
     )
     # one edited row per id BEFORE the join-back: a duplicate-id batch
@@ -878,22 +917,27 @@ def span_dedup_batch(
     return _rejoin_edited(batch_df, edited, id_col, text_col)
 
 
+#: ``span_dedup``: substring-level excision (the
+#: incremental_remove_duplicate_spans composition, Lee et al. 2021):
+#: every ≥``k``-token span the corpus already holds is cut from the
+#: batch's text; rows are edited, never dropped. ``id_col`` is
+#: required. The ``_grams`` index holds the distinct gram hashes of the
+#: text AS COMMITTED, the induction every later batch's cut relies on.
+#: LAST content gate: span excision only pays for rows that will
+#: actually commit.
 GRAMS = SideIndex(
-    sub="_grams", boot_tag="gramsindex-bootstrap", stamp=("__gk",),
+    keyword="span_dedup", sub="_grams", required=("id_col",),
+    defaults={"text_col": "text", "k": 8},
+    gate="span_dedup_batch", boot_tag="gramsindex-bootstrap",
+    stamp=("__gk",),
     stamp_of=lambda c: (c["k"],),
     rows=lambda df, c: D.corpus_gram_index(
         df.select(c["id_col"], c["text_col"]), c["id_col"], c["text_col"],
         c["k"]),
     basis="gram hashes from different window widths",
-    gate=lambda b, t, c, iv, dv: span_dedup_batch(
-        b, t, c["id_col"], c["text_col"], c["k"], index_version=iv),
     set_on=("g",),
 )
 grams_index_path = GRAMS.path
-
-
-def check_grams_stamp(table: str, k: int) -> None:
-    check_stamp(GRAMS, table, (k,))
 
 
 def _sep_fingerprint(sep: str) -> int:
@@ -904,12 +948,8 @@ def _sep_fingerprint(sep: str) -> int:
 
 
 def paragraph_dedup_batch(
-    batch_df: DataFrame,
-    table: str,
-    id_col: str,
-    text_col: str = "text",
-    sep: str = "\n\n",
-    index_version: int | None = None,
+    batch_df: DataFrame, table: str, cfg: dict,
+    index_version: int | None = None, data_version: int | None = None,
 ) -> DataFrame:
     """EDIT the batch against the persisted paragraph index: every
     paragraph the corpus already holds (and every within-batch
@@ -921,32 +961,38 @@ def paragraph_dedup_batch(
     applies. The ``_paras`` index is a few 8-byte rows per DOC — the
     lightest side table."""
     spark = batch_df.sparkSession
-    check_paras_stamp(table, sep)
+    id_col, text_col = cfg["id_col"], cfg["text_col"]
+    check_stamp(PARAS, table, PARAS.stamp_of(cfg))
     idx = read_index(PARAS, spark, table, index_version)
     if idx is None:
         idx = spark.range(0).select(F.col("id").alias("ph"))
     edited = D.incremental_paragraph_dedup(
-        batch_df, None, id_col, text_col, sep, seen_paras=idx
+        batch_df, None, id_col, text_col, cfg["sep"], seen_paras=idx
     ).dropDuplicates([id_col])
     return _rejoin_edited(batch_df, edited, id_col, text_col)
 
 
+#: ``para_dedup``: paragraph-level excision (the
+#: incremental_paragraph_dedup composition — the C4/FineWeb keep-first
+#: boilerplate pass): paragraphs split on ``sep`` that the corpus
+#: already holds are cut from the batch's text; rows are edited, never
+#: dropped. ``id_col`` is required. Runs after the row-level gates and
+#: BEFORE ``span_dedup``: whole repeated paragraphs are cheap per-doc
+#: hash cuts, so the span stage's per-token gram pass only sees what
+#: survives them.
 PARAS = SideIndex(
-    sub="_paras", boot_tag="parasindex-bootstrap", stamp=("__psep",),
+    keyword="para_dedup", sub="_paras", label="after_para",
+    required=("id_col",), defaults={"text_col": "text", "sep": "\n\n"},
+    gate="paragraph_dedup_batch", boot_tag="parasindex-bootstrap",
+    stamp=("__psep",),
     stamp_of=lambda c: (_sep_fingerprint(c["sep"]),),
     rows=lambda df, c: D.corpus_paragraph_index(
         df.select(c["id_col"], c["text_col"]), c["id_col"], c["text_col"],
         c["sep"]),
     basis="paragraph hashes split under different separators",
-    gate=lambda b, t, c, iv, dv: paragraph_dedup_batch(
-        b, t, c["id_col"], c["text_col"], c["sep"], index_version=iv),
     set_on=("ph",),
 )
 paras_index_path = PARAS.path
-
-
-def check_paras_stamp(table: str, sep: str) -> None:
-    check_stamp(PARAS, table, (_sep_fingerprint(sep),))
 
 
 # --------------------------------------------------------------------------
@@ -980,14 +1026,8 @@ def read_domains_index(
 
 
 def domain_gate_batch(
-    batch_df: DataFrame,
-    table: str,
-    url_col: str,
-    tokens_col: str | None = None,
-    min_docs: int | None = None,
-    max_docs: int | None = None,
-    min_sum_tokens: int | None = None,
-    index_version: int | None = None,
+    batch_df: DataFrame, table: str, cfg: dict,
+    index_version: int | None = None, data_version: int | None = None,
 ) -> DataFrame:
     """GATE the batch against the accumulated per-domain statistics
     (:func:`operators.web.domain_gate_incremental` on the streaming
@@ -996,7 +1036,8 @@ def domain_gate_batch(
     index yet (born-streaming first batch), the batch's own stats
     gate it. Eagerly materialized."""
     spark = batch_df.sparkSession
-    check_domains_stamp(table, tokens_col is not None)
+    tokens_col = cfg["tokens_col"]
+    check_stamp(DOMAINS, table, DOMAINS.stamp_of(cfg))
     idx = read_domains_index(spark, table, version=index_version)
     if idx is None:
         cols = [F.lit("").alias("domain"),
@@ -1005,28 +1046,43 @@ def domain_gate_batch(
             cols.append(F.lit(0).cast("long").alias("sum_tokens"))
         idx = spark.range(0).select(*cols)
     out = W.domain_gate_incremental(
-        batch_df, idx, url_col=url_col, tokens_col=tokens_col,
-        min_docs=min_docs, max_docs=max_docs,
-        min_sum_tokens=min_sum_tokens,
+        batch_df, idx, url_col=cfg["url_col"], tokens_col=tokens_col,
+        min_docs=cfg["min_docs"], max_docs=cfg["max_docs"],
+        min_sum_tokens=cfg["min_sum_tokens"],
     )
     return out.localCheckpoint(eager=True)
 
 
+def _need_threshold(cfg: dict) -> None:
+    if (cfg["min_docs"] is None and cfg["max_docs"] is None
+            and cfg["min_sum_tokens"] is None):
+        raise ValueError("domain_gate: pass at least one threshold")
+
+
+#: ``domain_gate``: the domain-level aggregate gate (the
+#: :func:`operators.web.domain_gate_incremental` composition): rows whose
+#: domain's accumulated stats fail ``min_docs`` / ``max_docs`` /
+#: ``min_sum_tokens`` (at least one is required) are dropped. ``url_col``
+#: is required; ``tokens_col`` carries token sums. The ``_domains``
+#: index holds per-batch (domain, n_docs[, sum_tokens]) partials —
+#: counts are decomposable, so each commit is a tiny delta and reads
+#: merge with one groupBy — stamped with the PSL snapshot and token
+#: basis. ``max_docs`` across nights is an ever-seen ledger, not a
+#: retroactive cap. FIRST in the chain: a dropped domain skips every
+#: hash and shuffle downstream (the batch recipe's order).
 DOMAINS = SideIndex(
-    sub="_domains", boot_tag="domainsindex-bootstrap", stamp=("__dpsl",),
+    keyword="domain_gate", sub="_domains", label="after_domain",
+    required=("url_col",), check=_need_threshold,
+    defaults={"tokens_col": None, "min_docs": None, "max_docs": None,
+              "min_sum_tokens": None},
+    gate="domain_gate_batch", boot_tag="domainsindex-bootstrap",
+    stamp=("__dpsl",),
     stamp_of=lambda c: (_domains_fingerprint(c["tokens_col"] is not None),),
     rows=lambda df, c: W.domain_stats(df, url_col=c["url_col"],
                                       tokens_col=c["tokens_col"]),
     basis="per-domain stats from a different PSL snapshot or token basis",
-    gate=lambda b, t, c, iv, dv: domain_gate_batch(
-        b, t, c["url_col"], c["tokens_col"], c["min_docs"], c["max_docs"],
-        c["min_sum_tokens"], index_version=iv),
 )
 domains_index_path = DOMAINS.path
-
-
-def check_domains_stamp(table: str, tokens: bool) -> None:
-    check_stamp(DOMAINS, table, (_domains_fingerprint(tokens),))
 
 
 # --------------------------------------------------------------------------
@@ -1080,11 +1136,6 @@ def read_gumbel_index(
     return None if raw is None else _top_k(raw, k)
 
 
-def squash_gumbel_index(spark: SparkSession, table: str, k: int) -> int:
-    """:func:`compact_index` of the ``_gumbel`` selection."""
-    return _squash_gumbel(spark, table, {"k": k})
-
-
 def _squash_gumbel(spark: SparkSession, table: str, cfg: dict) -> int:
     """SEMANTIC compaction of the running selection: the per-batch
     partials are only ever read through one global top-k, so rows
@@ -1106,8 +1157,19 @@ def _squash_gumbel(spark: SparkSession, table: str, cfg: dict) -> int:
     )
 
 
+#: ``dsir``: a running DSIR selection, a SIDE OUTPUT with no gate — the
+#: batch's rows commit unfiltered, and the global Gumbel top-``k`` over
+#: everything committed is read back with :func:`read_gumbel_index`.
+#: ``weights`` (token → log-weight) and ``k`` are required. Exact under
+#: batching because the Gumbel key is a pure per-row function
+#: (:func:`operators.selection.dsir_topk_state`); compaction squashes
+#: the partials to the current winners. Last in the chain, so it scores
+#: the rows as committed.
 GUMBEL = SideIndex(
-    sub="_gumbel", boot_tag="gumbelindex-bootstrap", stamp=("__gfp",),
+    keyword="dsir", sub="_gumbel", required=("weights", "k"),
+    defaults={"seed": 0, "missing": 0.0, "text_col": "text",
+              "id_col": "doc_id"},
+    boot_tag="gumbelindex-bootstrap", stamp=("__gfp",),
     stamp_of=lambda c: (_gumbel_fingerprint(c["weights"], c["missing"],
                                             c["seed"], c["k"]),),
     rows=_batch_gumbel_topk,
@@ -1118,21 +1180,40 @@ GUMBEL = SideIndex(
 gumbel_index_path = GUMBEL.path
 
 
-def check_gumbel_stamp(
-    table: str, weights, missing: float, seed: int, k: int
-) -> None:
-    check_stamp(GUMBEL, table, (_gumbel_fingerprint(weights, missing, seed, k),))
+# --------------------------------------------------------------------------
+# The stateless classifier gate and the chain
+# --------------------------------------------------------------------------
+
+def classifier_batch(
+    batch_df: DataFrame, table: str, cfg: dict,
+    index_version: int | None = None, data_version: int | None = None,
+) -> DataFrame:
+    """:func:`operators.selection.classifier_gate` as a chain stage: a
+    lazy projection + filter over its (already materialized) input, so
+    a replayed batch recomputes the identical verdicts."""
+    return SEL.classifier_gate(
+        batch_df, cfg["weights"], bias=cfg["bias"],
+        threshold=cfg["threshold"], text_col=cfg["text_col"],
+        id_col=cfg["id_col"], missing=cfg["missing"], score_col=None,
+    )
 
 
-def append_batch_gumbel(
-    batch_df: DataFrame, table: str, weights, k: int, seed: int,
-    text_col: str, id_col: str, missing: float, app: str, batch_id: int,
-) -> bool:
-    """:func:`append_batch_index` of the ``_gumbel`` selection: the
-    batch's LOCAL top-k Gumbel partial."""
-    cfg = {"weights": weights, "k": k, "seed": seed, "text_col": text_col,
-           "id_col": id_col, "missing": missing}
-    return append_batch_index(GUMBEL, batch_df, table, cfg, app, batch_id)
+#: ``classifier``: the model-quality gate (fastText-style linear scoring
+#: in logit space). ``weights`` (a mapping or a (token, logw) DataFrame)
+#: is required. STATELESS: no side table, replay pin or txn coupling.
+#: Right after the domain gate: one codegen filter shields all
+#: downstream content hashing (the batch recipe's order).
+CLASSIFIER = SideIndex(
+    keyword="classifier", label="after_classifier", required=("weights",),
+    defaults={"bias": 0.0, "threshold": 0.5, "missing": 0.0,
+              "text_col": "text", "id_col": "doc_id"},
+    gate="classifier_batch",
+)
+
+#: Run order of the ingest stages. The three ``near_dedup`` methods
+#: share one place; the first of them is the keyword's default method.
+CHAIN = (DOMAINS, CLASSIFIER, KEYS, BANDED, CHUNKS, SEMCELLS, PARAS, GRAMS,
+         GUMBEL)
 
 
 # --------------------------------------------------------------------------
@@ -1239,7 +1320,8 @@ def rebuild_semantic_index(
     old = read_semantic_params(table)
     if old is None:
         raise ValueError(f"no semantic index at {table} to rebuild; use "
-                         "ensure_semantic_bootstrap for first signing")
+                         "ensure_index_bootstrap(SEMCELLS, ...) for the "
+                         "first signing")
     stale = semantic_index_stale(table)
     if seed is None:
         # crash replay adopts the already-flipped centroid stamp (the

@@ -4,7 +4,7 @@ work out of the Python boundary).
 ``spark.createDataFrame(rows)`` backs the frame with a parallelized RDD
 of PICKLED Python rows: every evaluation re-runs a Python-deserializing
 scan stage — measured **0.27–0.34 s per evaluation for a 1-row frame**
-on this rig (OPTIMIZATION_r15.md §literal-frames), i.e. a full
+on this rig (f59449b:OPTIMIZATION_r15.md §literal-frames), i.e. a full
 Python-task handshake to produce one literal row, paid per bench repeat
 and per broadcast build. The same rows as ONE parsed
 ``inline(array(named_struct(…)…))`` expression build in ~0.04 s and

@@ -24,15 +24,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from newsmaper_etl_spark.workerpatch import install as _workerpatch_install
-
-# Lazy zip-directory invalidation for every process that imports this
-# module — on a Spark worker that is the moment an engine UDF is
-# unpickled, after which every later task on that worker skips the
-# per-task zip central-directory re-parse (workerpatch.py has the
-# measured decomposition; guide §4).
-_workerpatch_install()
-
 
 def asof_join(
     left: DataFrame,

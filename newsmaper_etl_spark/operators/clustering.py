@@ -69,10 +69,10 @@ def _qcol(name: str) -> str:
 
 def _argmin_sql(vec_col: str, centers: list[list[float]]) -> str:
     """The literal-centers argmin as ONE SQL string (r16, the r15
-    'single-parse expression assembly' technique — OPTIMIZATION_r15.md
+    'single-parse expression assembly' technique — f59449b:OPTIMIZATION_r15.md
     Fix 5): the Column-algebra form built k·dim ``F.lit`` py4j round
     trips PER INVOCATION (~0.2 s per assignment build at k=3, dim=64 —
-    measured in OPTIMIZATION_r16.md; kmeans_fit pays it once per
+    measured in f59449b:OPTIMIZATION_r16.md; kmeans_fit pays it once per
     iteration because the centers change), where one parsed string is
     ~6 ms. The tree is term-for-term the Column-algebra form it
     replaces (zip_with-fold dist² + struct-least + NULL guard):

@@ -161,7 +161,7 @@ def hashed_shingles_pow2(d: DataFrame, th_col: str, k: int) -> tuple[DataFrame, 
         raise ValueError(f"k={k} (need a power of two in [2, 16])")
     # each level as ONE parsed SQL string (r16, the Fix-5 technique):
     # the Column-algebra form cost ~0.14 s of py4j round trips per call
-    # (HOF lambdas are ~20 ms each to BUILD — OPTIMIZATION_r16.md),
+    # (HOF lambdas are ~20 ms each to BUILD — f59449b:OPTIMIZATION_r16.md),
     # where one parse is ~2 ms; the tree (slices, greatest clamp,
     # xxhash64 pair, level binding) is term-for-term identical
     cur, s, out = th_col, 1, d
@@ -275,7 +275,7 @@ def _validate_banded_params(
     and the ``__nh``/``__nb``/``__k`` STAMP COLUMNS that the persisted
     index (``keyindex.BANDED``) carries — so a frame loaded straight
     through ``manifest.read_table`` is guarded too, not only callers
-    going through ``keyindex.check_banded_stamp``. The column check
+    going through ``keyindex.check_stamp(BANDED, …)``. The column check
     reads one row (column-pruned to three RLE constants — a
     millisecond job, and only on the manifest-loaded path); the frame
     is returned with the stamp columns dropped so they never ride the
@@ -391,7 +391,7 @@ def connected_components(
     count-job + collect-job pair collapses to a single job and the
     persist/unpersist churn disappears (guide §1.2: remove passes;
     measured as one fewer full verify execution per recipe build —
-    OPTIMIZATION_r15.md). Only an over-threshold graph pays the probe
+    f59449b:OPTIMIZATION_r15.md). Only an over-threshold graph pays the probe
     as pure sizing and falls through to the distributed path. The
     distributed path is the semantics-defining one; the driver path
     must match it bit-for-bit (both are tested against each other).
@@ -401,7 +401,7 @@ def connected_components(
     take, which starts at ONE partition of the final stage and scales
     up per attempt — 4-6 scheduler round-trip JOBS per probe on a
     multi-partition edge frame (statusTracker decomposition in
-    OPTIMIZATION_r16.md), while the upstream shuffles have already
+    f59449b:OPTIMIZATION_r16.md), while the upstream shuffles have already
     materialized EVERY partition, so the retries save nothing but the
     final stage's tasks. With coalesce on top the limit is no longer
     the root: one ordinary job runs LocalLimit → single-partition
@@ -924,7 +924,7 @@ def jaccard_verify(
     (every doc, even empty/NULL text, carries ≥1 shingle hash), so it
     scores 0.0 instead of vanishing — same verdict contract, four
     fewer plan subtrees (statusTracker: 4 broadcast-build jobs → 2 on
-    the recipe build; plan diff in plans/r16/). The emitted ratio is
+    the recipe build; plan diff in f59449b:plans/r16/). The emitted ratio is
     bit-identical: n_inter/n_union and n_inter/(n_a+n_b−n_inter) are
     the same integer division.
 
@@ -1733,7 +1733,7 @@ def _validate_gram_params(seen_grams: DataFrame, k: int) -> DataFrame:
     window width than this batch's signing — mismatched k (or gram
     basis) never errors on its own, it just matches NOTHING and
     silently disables all corpus-side excision (code review r11; the
-    streaming path already guards via keyindex.check_grams_stamp —
+    streaming path already guards via keyindex.check_stamp(GRAMS, …) —
     this covers the library/curate/SQL seams). Frames carrying the
     persisted ``__gk`` stamp column are checked with one pruned
     one-row read and returned without it; unstamped frames (fresh

@@ -259,7 +259,7 @@ def dsir_learn_weights(
     corpus-scale shuffle carrying the same bytes the r15.0 two-groupBy
     form shuffled, with the vocab-sized full-outer join (and its sorts)
     gone entirely (guide §2.4: two operations keyed the same way share
-    one exchange; OPTIMIZATION_r15.md has the plan diff — 3 Exchange +
+    one exchange; f59449b:OPTIMIZATION_r15.md has the plan diff — 3 Exchange +
     SortMergeJoin → 1 Exchange). Totals ride a broadcast cross-join of
     the 1-row aggregate (no driver collect), then a pure projection.
     Counts are exact integers either way, so the emitted values are
@@ -417,7 +417,7 @@ def dsir_select_incremental(
     NEW state — exactly ``dsir_topk_state`` of everything seen so far,
     by the decomposability argument in its docstring. Ids must be
     unique across batches (redelivery is the txn layer's job —
-    keyindex.append_batch_gumbel)."""
+    keyindex.append_batch_index of the GUMBEL spec)."""
     cand = dsir_topk_state(
         batch, k, logw_col=logw_col, id_col=id_col, seed=seed
     )

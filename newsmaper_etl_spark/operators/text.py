@@ -33,15 +33,6 @@ from collections.abc import Iterable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from newsmaper_etl_spark.workerpatch import install as _workerpatch_install
-
-# Lazy zip-directory invalidation for every process that imports this
-# module — on a Spark worker that is the moment an engine UDF is
-# unpickled, after which every later task on that worker skips the
-# per-task zip central-directory re-parse (workerpatch.py has the
-# measured decomposition; guide §4).
-_workerpatch_install()
-
 #: Tiny per-language stopword lists for the vote heuristic. Deliberately
 #: small + lowercase; extend per deployment. Order-free: the vote uses a
 #: pinned tie-break (count DESC, lang ASC).
@@ -63,7 +54,7 @@ def tokens_col(col: str | Column) -> Column:
 
 def _qcol(col: str) -> str:
     """Backtick-quoted column reference for SQL-string expression
-    assembly (the one-parse py4j-latency fix, OPTIMIZATION_r15.md
+    assembly (the one-parse py4j-latency fix, f59449b:OPTIMIZATION_r15.md
     Fix 5). The expr-built operators take column NAMES, as every
     in-repo caller already does."""
     if not isinstance(col, str):
@@ -131,7 +122,7 @@ def language_id(
     # Assembled as ONE SQL string parsed JVM-side: the per-language
     # Column-algebra form cost ~80 py4j round trips per call (~0.2 s of
     # plan-construction latency paid by every recipe build —
-    # OPTIMIZATION_r15.md Fix 5); the parsed expression tree, types and
+    # f59449b:OPTIMIZATION_r15.md Fix 5); the parsed expression tree, types and
     # tie-break are identical.
     from pyspark.sql import types as T
 

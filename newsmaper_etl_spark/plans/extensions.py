@@ -33,15 +33,6 @@ from newsmaper_etl_spark.plans.fixture_cache import (
 )
 from newsmaper_etl_spark.registry import query
 
-from newsmaper_etl_spark.workerpatch import install as _workerpatch_install
-
-# Lazy zip-directory invalidation for every process that imports this
-# module — on a Spark worker that is the moment an engine UDF is
-# unpickled, after which every later task on that worker skips the
-# per-task zip central-directory re-parse (workerpatch.py has the
-# measured decomposition; guide §4).
-_workerpatch_install()
-
 _STOP_SQL = "[" + ", ".join(f"'{w}'" for w in TX._ALL_STOPWORDS) + "]"
 
 #: testdata embeddings are fixed 64-dim float vectors (TESTDATA.md); the

@@ -30,15 +30,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from newsmaper_etl_spark.workerpatch import install as _workerpatch_install
-
-# Lazy zip-directory invalidation for every process that imports this
-# module — on a Spark worker that is the moment an engine UDF is
-# unpickled, after which every later task on that worker skips the
-# per-task zip central-directory re-parse (workerpatch.py has the
-# measured decomposition; guide §4).
-_workerpatch_install()
-
 from newsmaper_etl_spark.operators.newsmaper import (
     NEWS_KEY,
     explode_date_parts,
@@ -361,129 +352,25 @@ def write_stream_manifest(
     """Exactly-once streaming sink onto a manifest-committed table
     (newsmaper_etl_spark/manifest.py) via ``foreachBatch``.
 
-    ``dedup_keys`` adds CONTENT-level corpus dedup on ingest (the
-    incremental_exact_dedup composition): each batch is deduped within
-    itself (keep-first by ``dedup_order_col`` when given — the
-    deterministic contract; arbitrary-survivor dropDuplicates
-    otherwise), then LEFT ANTI joined on the 128-bit hashed key basis
-    against the table's PERSISTED KEY INDEX (``keyindex.py`` — a
-    manifest side table at ``<table>/_keys`` of two xxhash64 lanes per
-    ever-committed key, appended in the same exactly-once txn protocol
-    right after each data commit), so a document already in the corpus
-    never re-enters it — regardless of which feed, query restart, or
-    upstream re-crawl redelivers it. Per-batch dedup I/O is the 16-byte
-    key rows, NOT the corpus snapshot (the r7 form re-scanned the full
-    table's key columns every micro-batch — the O(corpus)-per-batch
-    cost VERDICT r07 named; a table predating the index pays that scan
-    exactly once as a bootstrap). Keys are an ever-seen registry: they
-    survive maintenance rewrites of the data table, which is what
-    "key-level at-most-once across the table's WHOLE HISTORY" means —
-    the txn marks below make each BATCH exactly-once, this makes each
-    KEY at-most-once. Crash between data commit and key commit leaves
-    the index one batch behind; the foreachBatch replay repairs it
-    (data append skips via its mark, key append proceeds via its own),
-    and since batch keys are anti-joined against the index BEFORE
-    append, a key the replay drops is by construction already indexed —
-    repair can never lose a key. Single-writer assumption as with
-    compaction: two concurrent pipelines appending the same key in the
-    same instant can both pass the index check — the manifest claim
-    serializes the commits, not the reads.
-
-    ``near_dedup`` adds NEAR-duplicate corpus dedup on ingest (the
-    incremental_minhash_dedup composition, batch-scaled): a dict with
-    ``id_col`` (required) and optional ``text_col`` ("text"),
-    ``threshold`` (0.8), ``num_hashes`` (16), ``bands`` (4), ``k`` (3),
-    ``within_batch`` (False), ``max_candidate_ids`` (100_000).
-    ``method: "simhash"`` (r9) switches the near-dup notion to a
-    hamming radius (``max_hamming`` (3), ``bits`` (64)) over a
-    persisted :func:`operators.dedup.simhash_chunks` index at
-    ``<table>/_chunks`` — same txn/bootstrap/compaction discipline, but
-    the index carries the FINGERPRINTS, so the verify runs off the
-    candidate join itself and a batch never touches corpus text or the
-    data table at all (h+1 rows of 3-4 longs per seen doc is the whole
-    per-batch dedup read — there is no prune_in point fetch to tune,
-    no over-cap fallback, no data_version pin needed on replay).
-    ``method: "semantic"`` (r10) switches to embedding-cosine SemDeDup
-    over a persisted (cell, LSH-table, bucket) index at
-    ``<table>/_semcells`` with frozen k-means centroids at
-    ``<table>/_semcentroids`` (``vec_col`` ("embedding"), ``dim`` (64),
-    ``threshold`` (0.9), ``n_centroids`` (64), ``n_tables`` (8),
-    ``sample_n`` (2048), ``seed`` (42), ``max_candidate_ids``
-    (100_000); ``n_planes`` is index-owned — occupancy-scaled at index
-    birth, frozen in the stamp): see
-    :func:`keyindex.semantic_dedup_batch` for the cost contract. Pick
-    MinHash when "duplicate" means token-set overlap (robust to
-    reordering/small edits, exact-Jaccard verified); pick SimHash for
-    frequency-vector similarity at a fixed hamming bar with the
-    smallest per-batch I/O; pick semantic when "duplicate" means
-    same-meaning content that shares no tokens (translations,
-    paraphrases, template re-renders — embeddings required). The MinHash sink
-    maintains a persisted :func:`operators.dedup.banded_signatures`
-    side table at ``<table>/_banded`` (three longs per doc per band,
-    parameter-stamped, same txn/bootstrap/compaction discipline as the
-    key index): per batch, candidates come from the batch's band keys
-    joined against that index — the corpus is never re-signed — and the
-    exact-Jaccard verify fetches ONLY candidate bucket-mate documents
-    from the data table via manifest ``prune_in`` file skipping (see
-    :func:`keyindex.near_dedup_batch` for the cost contract and the
-    disclosed over-cap fallback). ``id_col`` footer stats are recorded
-    on data commits automatically so that point fetch can skip files.
-    Runs AFTER ``dedup_keys`` (cheap exact-key drops first shrink the
-    signing work).
-
-    ``span_dedup`` adds SUBSTRING-level span excision on ingest (the
-    incremental_remove_duplicate_spans composition — Lee et al. 2021:
-    repeated ≥k-token spans the corpus already holds are CUT FROM the
-    batch's text, rows are edited, never dropped): a dict with
-    ``id_col`` (required) and optional ``text_col`` ("text"), ``k``
-    (8). Maintains the persisted distinct-gram index at
-    ``<table>/_grams`` (same txn/bootstrap/compaction discipline; size
-    disclosed in :func:`keyindex.span_dedup_batch` — ~one 8-byte row
-    per corpus token). Runs LAST of the content gates (after
-    ``dedup_keys`` and ``near_dedup``): whole-document drops first, so
-    span excision only pays for rows that will actually commit —
-    and the grams committed to the index are the grams of the text AS
-    COMMITTED, which is the induction every future batch's cut relies
-    on.
-
-    ``para_dedup`` adds PARAGRAPH-level excision on ingest (the
-    incremental_paragraph_dedup composition — the C4/FineWeb keep-first
-    boilerplate pass: paragraphs the corpus already holds are CUT FROM
-    the batch's text, rows edited, never dropped): a dict with
-    ``id_col`` (required) and optional ``text_col`` ("text"), ``sep``
-    ("\\n\\n"). Maintains the persisted distinct-paragraph-hash index at
-    ``<table>/_paras`` (a few 8-byte rows per DOC — the lightest side
-    table). Runs after the row-level gates and BEFORE ``span_dedup``:
-    whole repeated paragraphs are cheap per-doc hash cuts, so the span
-    stage's per-token gram pass only sees what survives them.
-
-    ``domain_gate`` adds the DOMAIN-LEVEL aggregate gate on ingest (the
-    :func:`operators.web.domain_gate_incremental` composition — a
-    nightly batch gated against the ACCUMULATED per-domain statistics,
-    not a corpus re-aggregation): a dict with ``url_col`` (required)
-    and optional ``tokens_col`` (None) plus at least one of
-    ``min_docs`` / ``max_docs`` / ``min_sum_tokens``. Maintains the
-    persisted per-domain stat-delta index at ``<table>/_domains``
-    (domain-cardinality rows of (domain, n_docs[, sum_tokens]) partials
-    — counts are decomposable, so each commit is a tiny delta and reads
-    merge with one groupBy; PSL-snapshot + token-basis stamped, same
-    txn/bootstrap/compaction discipline). Runs FIRST of the content
-    gates — the recipe rule: the cheapest drop shields every hash and
-    shuffle downstream. ``max_docs`` across nights is an ever-seen
-    ledger, not a retroactive cap (rows admitted while a domain was
-    small stay admitted; re-gate history via the maintenance path).
-
-    ``classifier`` (r14) adds the MODEL-quality gate on ingest
-    (:func:`operators.selection.classifier_gate` — fastText-style
-    linear scoring in logit space): a dict with ``weights`` (required;
-    mapping or a (token, logw) DataFrame) and optional ``bias`` (0.0),
-    ``threshold`` (0.5), ``missing`` (0.0), ``text_col`` ("text"),
-    ``id_col`` ("doc_id"). STATELESS by design — a pure projection +
-    filter, so it needs no side index, no replay pinning, and no txn
-    coupling: a replayed batch recomputes the identical verdicts. Runs
-    right after the domain gate and before every content-dedup gate
-    (one codegen filter shields all downstream hashing; same order as
-    the batch recipe).
+    The gate keywords — ``domain_gate``, ``classifier``, ``dedup_keys``
+    (with ``dedup_order_col``), ``near_dedup`` (``method`` "minhash",
+    "simhash" or "semantic"), ``para_dedup``, ``span_dedup`` and the
+    ``dsir`` side output — each configure one stage of
+    :data:`keyindex.CHAIN` and run in that order: domain → classifier →
+    exact → near → para → span → dsir. Each stage's keys, defaults, side
+    table and place in the chain are documented once, at its
+    :class:`keyindex.SideIndex` spec; a config missing a required key
+    raises ValueError at call time. A batch reads side tables, never the
+    corpus snapshot (a table predating a side table pays one bootstrap
+    scan). Each side table commits right after the data commit, under
+    its own txn mark, from the batch AS COMMITTED (post every gate), so
+    it covers exactly what the corpus holds. A crash between the data
+    commit and an index commit leaves that index one batch behind; the
+    foreachBatch replay repairs it (the data append skips via its mark,
+    the index append proceeds via its own) and reads every side table
+    and the data table at their pre-batch versions
+    (keyindex.replay_version), so it re-derives exactly what the
+    original run committed.
 
     Spark's foreachBatch contract is at-least-once: after a crash
     between "user function ran" and "checkpoint advanced", the SAME
@@ -521,9 +408,10 @@ def write_stream_manifest(
 
     ``telemetry=True`` records per-batch GATE COUNTS in the data
     commit's manifest meta — ``{"gates": {"input": n, "after_exact":
-    n, "after_near": n, "committed": n}}`` (only the stages configured
-    appear) — the "what did my dedup gates drop last night?" audit,
-    readable without a Spark job via :func:`ingest_history`. The counts
+    n, "after_near": n, "committed": n}}`` (``input``, ``committed`` and
+    the ``label`` of each configured spec that has one) — the "what did
+    my dedup gates drop last night?" audit, readable without a Spark
+    job via :func:`ingest_history`. The counts
     cost no Spark job: each stage's output (the persisted input, a lazy
     classifier filter, an indexed gate's materialized frame) is counted
     by an ``Observation`` on the next job that reads it — the next
@@ -551,138 +439,18 @@ def write_stream_manifest(
 
     app = app_id or f"stream:{_os.path.abspath(checkpoint_dir)}"
 
-    nd = dict(near_dedup) if near_dedup else None
-    if nd is not None:
-        nd.setdefault("method", "minhash")
-        nd.setdefault("text_col", "text")
-        nd.setdefault("within_batch", False)
-        if nd["method"] == "minhash":
-            nd.setdefault("threshold", 0.8)
-            nd.setdefault("num_hashes", 16)
-            nd.setdefault("bands", 4)
-            nd.setdefault("k", 3)
-            nd.setdefault("max_candidate_ids", 100_000)
-        elif nd["method"] == "simhash":
-            # hamming-radius dedup via the persisted chunk index — no
-            # verify fetch against the data table at all (fingerprints
-            # ride the index), so the per-batch read is h+1 narrow
-            # rows per seen doc
-            nd.setdefault("max_hamming", 3)
-            nd.setdefault("bits", 64)
-        elif nd["method"] == "semantic":
-            # embedding-cosine (SemDeDup) dedup via the persisted cell
-            # index at <table>/_semcells + frozen centroids at
-            # _semcentroids (keyindex.semantic_dedup_batch): candidates
-            # come from the batch's (cell, LSH-table, bucket) keys
-            # joined against the index, verify is the exact cosine with
-            # seen vectors point-fetched via prune_in — per-batch cost
-            # is index-sized, never a corpus re-cluster. Centroids are
-            # trained once (snapshot bootstrap, or the first batch of a
-            # born-streaming table) and frozen; n_planes is index-owned
-            # (occupancy-scaled at birth, read back from the stamp).
-            nd.setdefault("vec_col", "embedding")
-            nd.setdefault("dim", 64)
-            nd.setdefault("threshold", 0.9)
-            nd.setdefault("n_centroids", 64)
-            nd.setdefault("n_planes", None)
-            nd.setdefault("n_tables", 8)
-            nd.setdefault("sample_n", 2048)
-            nd.setdefault("seed", 42)
-            nd.setdefault("max_candidate_ids", 100_000)
-        else:
-            raise ValueError(
-                f"near_dedup method={nd['method']!r} "
-                "(minhash, simhash, or semantic)"
-            )
-        if "id_col" not in nd:
-            raise ValueError("near_dedup requires an 'id_col' entry")
-
-    sd = dict(span_dedup) if span_dedup else None
-    if sd is not None:
-        if "id_col" not in sd:
-            raise ValueError("span_dedup requires an 'id_col' entry")
-        sd.setdefault("text_col", "text")
-        sd.setdefault("k", 8)
-
-    pdd = dict(para_dedup) if para_dedup else None
-    if pdd is not None:
-        if "id_col" not in pdd:
-            raise ValueError("para_dedup requires an 'id_col' entry")
-        pdd.setdefault("text_col", "text")
-        pdd.setdefault("sep", "\n\n")
-
-    dg = dict(domain_gate) if domain_gate else None
-    if dg is not None:
-        if "url_col" not in dg:
-            raise ValueError("domain_gate requires a 'url_col' entry")
-        dg.setdefault("tokens_col", None)
-        dg.setdefault("min_docs", None)
-        dg.setdefault("max_docs", None)
-        dg.setdefault("min_sum_tokens", None)
-        if (dg["min_docs"] is None and dg["max_docs"] is None
-                and dg["min_sum_tokens"] is None):
-            raise ValueError("domain_gate: pass at least one threshold")
-
-    clf = dict(classifier) if classifier else None
-    if clf is not None:
-        if "weights" not in clf:
-            raise ValueError("classifier requires a 'weights' entry")
-        clf.setdefault("bias", 0.0)
-        clf.setdefault("threshold", 0.5)
-        clf.setdefault("missing", 0.0)
-        clf.setdefault("text_col", "text")
-        clf.setdefault("id_col", "doc_id")
-
-    ds = dict(dsir) if dsir else None
-    if ds is not None:
-        # running DSIR selection (the _gumbel side table): a SIDE
-        # OUTPUT, not a gate — the batch's rows commit unfiltered, and
-        # the accumulated global Gumbel top-k is read back with
-        # keyindex.read_gumbel_index. Exact under batching because the
-        # Gumbel key is a pure per-row function (dsir_topk_state).
-        if "weights" not in ds or "k" not in ds:
-            raise ValueError("dsir requires 'weights' and 'k' entries")
-        ds.setdefault("seed", 0)
-        ds.setdefault("missing", 0.0)
-        ds.setdefault("text_col", "text")
-        ds.setdefault("id_col", "doc_id")
-
-    # the gate chain in run order: (telemetry count label, side index,
-    # its config). The classifier is the one stateless gate (no index,
-    # no replay pinning, no txn coupling); dsir is a side output with no
-    # gate, so its rows commit unfiltered.
-    stages: list[tuple[str | None, K.SideIndex | None, dict | None]] = []
-    if dg is not None:
-        # FIRST content gate: a dropped domain skips every hash and
-        # shuffle downstream (the batch recipe's stage order)
-        stages.append(("after_domain", K.DOMAINS, dg))
-    if clf is not None:
-        # one codegen filter shields all downstream content hashing
-        stages.append(("after_classifier", None, clf))
-    if dedup_keys:
-        stages.append(("after_exact", K.KEYS, {
-            "cols": list(dedup_keys), "order_col": dedup_order_col}))
-    if nd is not None:
-        # cheap exact-key drops first shrink the signing work
-        stages.append(("after_near", {"minhash": K.BANDED,
-                                      "simhash": K.CHUNKS,
-                                      "semantic": K.SEMCELLS}[nd["method"]],
-                       nd))
-    if pdd is not None:
-        # whole repeated paragraphs are cheap per-doc hash cuts, so the
-        # span stage's per-token gram pass only sees what survives them
-        stages.append(("after_para", K.PARAS, pdd))
-    if sd is not None:
-        # LAST content gate: span excision only pays for rows that will
-        # actually commit
-        stages.append((None, K.GRAMS, sd))
-    if ds is not None:
-        stages.append((None, K.GUMBEL, ds))
-    indexes = [(spec, cfg) for _, spec, cfg in stages if spec is not None]
-    data_stat_cols = tuple(stat_cols)
-    if nd is not None and nd["id_col"] not in data_stat_cols:
-        # candidate point-fetch pruning needs id footer stats
-        data_stat_cols += (nd["id_col"],)
+    chain = K.gate_chain(
+        domain_gate=domain_gate, classifier=classifier,
+        dedup_keys=dedup_keys and {"cols": list(dedup_keys),
+                                   "order_col": dedup_order_col},
+        near_dedup=near_dedup, para_dedup=para_dedup, span_dedup=span_dedup,
+        dsir=dsir,
+    )
+    indexes = [(spec, cfg) for spec, cfg in chain if spec.sub is not None]
+    data_stat_cols = tuple(stat_cols) + tuple(
+        cfg[spec.data_stat_col] for spec, cfg in chain
+        if spec.data_stat_col and cfg[spec.data_stat_col] not in stat_cols
+    )
 
     def _commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_id = int(batch_id)
@@ -722,26 +490,17 @@ def write_stream_manifest(
 
         try:
             batch_df = observed(batch_df, "input")
-            for label, spec, cfg in stages:
-                if spec is None:
-                    from newsmaper_etl_spark.operators.selection import (
-                        classifier_gate,
-                    )
-
-                    batch_df = classifier_gate(
-                        batch_df, cfg["weights"], bias=cfg["bias"],
-                        threshold=cfg["threshold"], text_col=cfg["text_col"],
-                        id_col=cfg["id_col"], missing=cfg["missing"],
-                        score_col=None,
-                    )
-                elif spec.gate is not None:
+            for spec, cfg in chain:
+                if spec.gate is not None:
                     index_version = (
                         K.replay_version(spec.path(table), app, batch_id)
-                        if main_done else None
+                        if main_done and spec.sub is not None else None
                     )
-                    batch_df = spec.gate(batch_df, table, cfg, index_version,
-                                         data_version)
-                batch_df = observed(batch_df, label)
+                    # looked up at call time: a wrapper installed on the
+                    # keyindex attribute sees every gate run
+                    batch_df = getattr(K, spec.gate)(
+                        batch_df, table, cfg, index_version, data_version)
+                batch_df = observed(batch_df, spec.label)
             if not main_done:
                 def meta() -> dict:
                     out = {"app": app, "batch_id": batch_id}

@@ -1,11 +1,11 @@
 """Python-worker import-cache patch: make ``importlib.invalidate_caches``
 cheap when nothing changed (guide §4 — the Python boundary).
 
-Measured on this rig (JFR + an instrumented worker, OPTIMIZATION_r15.md
-§arrow-floor): EVERY PySpark worker task calls ``setup_spark_files`` →
-``importlib.invalidate_caches()``, and CPython 3.10+'s
-``zipimport.zipimporter.invalidate_caches`` EAGERLY re-parses the whole
-zip central directory. The worker's ``sys.path`` carries pyspark.zip
+Measured with JFR and an instrumented worker (``git show
+f59449b:OPTIMIZATION_r15.md`` §arrow-floor): EVERY PySpark worker task
+calls ``setup_spark_files`` → ``importlib.invalidate_caches()``, and
+CPython 3.10+'s ``zipimport.zipimporter.invalidate_caches`` EAGERLY
+re-parses the whole zip central directory. The worker's ``sys.path`` carries pyspark.zip
 (1 328 entries), the py4j zip, and the multi-MB spark-core JAR, and
 ``sys.path_importer_cache`` holds one zipimporter per (archive, inner
 path) pair ever probed — so one task pays a dozen full directory
@@ -23,11 +23,13 @@ case becomes one ``os.stat``. ``sc.addPyFile`` mid-job therefore still
 works: new files land in a *directory* (spark_files_dir, FileFinder
 semantics untouched), and a genuinely replaced zip has a new stamp.
 
-Installation is idempotent and happens at import time of the operator
-modules that define pandas UDFs: unpickling any engine UDF on a worker
-imports that module, so every worker that has ever run one engine Arrow
-task runs all later tasks without the re-parse tax. The driver process
-is patched too (harmless — it calls invalidate_caches rarely).
+Installation is idempotent and happens once per process, when
+``newsmaper_etl_spark.io`` is imported — and the package ``__init__``
+imports it before any submodule loads. Unpickling any engine UDF on a
+worker imports its module, hence the package, so every worker that has
+ever run one engine Arrow task runs all later tasks without the
+re-parse tax. The driver process is patched too (harmless — it calls
+invalidate_caches rarely).
 """
 
 from __future__ import annotations

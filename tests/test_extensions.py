@@ -104,7 +104,7 @@ def test_connected_components_chain_and_islands(spark):
     # auto's r15 limit-probe: an over-threshold edge list must fall
     # through to propagate (the probe then is sizing-only) and still
     # produce identical components — the probe boundary is the
-    # optimization's only new branch (OPTIMIZATION_r15.md)
+    # optimization's only new branch (f59449b:OPTIMIZATION_r15.md)
     comps = {
         r["id"]: r["comp"]
         for r in D.connected_components(

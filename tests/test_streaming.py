@@ -809,14 +809,14 @@ def test_stream_manifest_near_dedup_on_ingest(spark, tmp_path):
         "id LONG, text STRING",
     )
     for cap in (0, 100_000):
-        kept = K.near_dedup_batch(probe, table, "id", threshold=0.5,
-                                  max_candidate_ids=cap)
+        kept = K.near_dedup_batch(probe, table, K.gate_config(K.BANDED, {
+            "id_col": "id", "threshold": 0.5, "max_candidate_ids": cap}))
         assert {r["id"] for r in kept.collect()} == {21}
     # parameter drift against the persisted index is refused
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="parameterizations|signed with"):
-        K.check_banded_stamp(table, num_hashes=32, bands=8, k=3)
+        K.check_stamp(K.BANDED, table, (32, 8, 3))
 
 
 def test_stream_near_dedup_bootstrap_preexisting_table(spark, tmp_path):
@@ -1215,7 +1215,7 @@ def test_stream_manifest_simhash_dedup_on_ingest(spark, tmp_path):
     cidx = M.read_table(spark, K.chunks_index_path(table))
     assert {r["id"] for r in cidx.collect()} == {1, 2, 12}
     with _pytest.raises(ValueError, match="signed with"):
-        K.check_chunks_stamp(table, max_hamming=3, bits=64)
+        K.check_stamp(K.CHUNKS, table, (3, 64))
     # measured bar for this corpus: the one-token edit sits at hamming 7
     # (dropped at radius 8); the distinct third doc sits far outside
 
@@ -1500,10 +1500,14 @@ def test_semantic_drift_telemetry_and_offline_rebuild(spark, tmp_path):
         ),
         table,
     )
-    assert K.ensure_semantic_bootstrap(
-        spark, table, "id", "embedding", dim, n_centroids=2, n_planes=4,
-        n_tables=2, sample_n=64, seed=42, app="driftapp",
-    )
+    cfg = K.gate_config(K.SEMCELLS, {
+        "id_col": "id", "dim": dim, "n_centroids": 2,
+        "n_planes": 4, "n_tables": 2, "sample_n": 64, "seed": 42})
+    # the dedup probes below adopt the index's parameterization
+    adopt = {**cfg, "threshold": 0.9, "n_centroids": None,
+             "n_tables": None, "seed": None}
+    assert K.ensure_index_bootstrap(K.SEMCELLS, spark, table, cfg,
+                                    "driftapp")
     hist = K.semantic_drift_history(table)
     assert len(hist) == 1 and hist[0]["n"] == 8
     baseline = hist[0]["mean_csim"]
@@ -1515,10 +1519,7 @@ def test_semantic_drift_telemetry_and_offline_rebuild(spark, tmp_path):
                for i in range(4)]
     bdf = spark.createDataFrame(drifted, "id long, embedding array<double>")
     M.append(bdf, table, txn=("driftapp", 1))
-    assert K.append_batch_cells(
-        bdf, table, "id", "embedding", dim, n_centroids=2, n_planes=4,
-        n_tables=2, sample_n=64, seed=42, app="driftapp", batch_id=1,
-    )
+    assert K.append_batch_index(K.SEMCELLS, bdf, table, cfg, "driftapp", 1)
     hist = K.semantic_drift_history(table)
     assert len(hist) == 2 and hist[1]["batch_id"] == 1
     assert hist[1]["mean_csim"] < baseline - 0.1  # visible decay
@@ -1541,8 +1542,7 @@ def test_semantic_drift_telemetry_and_offline_rebuild(spark, tmp_path):
     redeliver = spark.createDataFrame(
         [(999, base[0])], "id long, embedding array<double>"
     )
-    out = K.semantic_dedup_batch(redeliver, table, "id", "embedding",
-                                 dim=dim, threshold=0.9)
+    out = K.semantic_dedup_batch(redeliver, table, adopt)
     assert out.count() == 0
 
     # crash injection: centroids flip, cells flip crashes -> stale,
@@ -1566,25 +1566,20 @@ def test_semantic_drift_telemetry_and_offline_rebuild(spark, tmp_path):
         M.overwrite = real_overwrite
     assert K.semantic_index_stale(table)
     with _pytest.raises(ValueError, match="mid-rebuild"):
-        K.semantic_dedup_batch(redeliver, table, "id", "embedding",
-                               dim=dim, threshold=0.9)
+        K.semantic_dedup_batch(redeliver, table, adopt)
     # the WRITE path refuses too (code review r11): committing batch
     # keys signed under the flipped stamp would make the cells table's
     # __seed stat non-constant and brick every later stamp read
     with _pytest.raises(ValueError, match="mid-rebuild"):
-        K.append_batch_cells(
-            redeliver, table, "id", "embedding", dim, n_centroids=2,
-            n_planes=4, n_tables=2, sample_n=64, seed=42,
-            app="driftapp", batch_id=99,
-        )
+        K.append_batch_index(K.SEMCELLS, redeliver, table, cfg, "driftapp",
+                             99)
     res2 = K.rebuild_semantic_index(spark, table, "id", "embedding",
                                     sample_n=64)
     # replay ADOPTS the crashed flip's stamp (no second bump): the
     # persisted centroids are canonical, only the cells flip is redone
     assert res2["seed"] == old_seed + 2
     assert not K.semantic_index_stale(table)
-    out = K.semantic_dedup_batch(redeliver, table, "id", "embedding",
-                                 dim=dim, threshold=0.9)
+    out = K.semantic_dedup_batch(redeliver, table, adopt)
     assert out.count() == 0
 
 
@@ -1663,7 +1658,7 @@ def test_stream_manifest_span_dedup_on_ingest(spark, tmp_path):
 
     # parameter drift refused
     with _pytest.raises(ValueError, match="k="):
-        K.check_grams_stamp(table, k=4)
+        K.check_stamp(K.GRAMS, table, (4,))
 
 
 def test_ingest_gate_telemetry(spark, tmp_path):
@@ -1850,7 +1845,7 @@ def test_stream_manifest_para_dedup_on_ingest(spark, tmp_path):
 
     # separator drift refused
     with _pytest.raises(ValueError, match="separator"):
-        K.check_paras_stamp(table, sep="\n")
+        K.check_stamp(K.PARAS, table, K.PARAS.stamp_of({"sep": "\n"}))
 
 
 def test_stream_manifest_domain_gate_on_ingest(spark, tmp_path):
@@ -1939,7 +1934,8 @@ def test_stream_manifest_domain_gate_on_ingest(spark, tmp_path):
 
     # basis drift refused: the index was built without token sums
     with _pytest.raises(ValueError, match="token basis|PSL"):
-        K.check_domains_stamp(table, tokens=True)
+        K.check_stamp(K.DOMAINS, table,
+                      K.DOMAINS.stamp_of({"tokens_col": "n_tokens"}))
 
 
 def test_stream_manifest_canonical_url_dedup_composition(spark, tmp_path):
@@ -2146,7 +2142,8 @@ def test_stream_manifest_dsir_selection_on_ingest(spark, tmp_path):
 
     # basis drift refused: same weights, different k
     with _pytest.raises(ValueError, match="selection basis"):
-        K.check_gumbel_stamp(table, W, 0.0, 0, 5)
+        K.check_stamp(K.GUMBEL, table, K.GUMBEL.stamp_of(
+            K.gate_config(K.GUMBEL, {"weights": W, "k": 5})))
 
 
 def test_gumbel_bootstrap_preexisting_table(spark, tmp_path):
@@ -2181,27 +2178,27 @@ def test_gumbel_bootstrap_preexisting_table(spark, tmp_path):
 
 
 def test_gumbel_squash_keeps_selection_and_txn_marks(spark, tmp_path):
-    """squash_gumbel_index rewrites the side table as exactly the k
-    winners: the selection is unchanged, the table holds k rows, and
-    the txn high-water marks survive the overwrite — a replayed old
-    batch stays replay-skipped (append_batch_gumbel returns False)."""
+    """compact_index of the _gumbel selection rewrites the side table as
+    exactly the k winners: the selection is unchanged, the table holds k
+    rows, and the txn high-water marks survive the overwrite — a
+    replayed old batch stays replay-skipped (append_batch_index returns
+    False)."""
     from newsmaper_etl_spark import keyindex as K
     from newsmaper_etl_spark import manifest as M
 
     table = str(tmp_path / "sqtable")
-    W = {"good": 1.0}
+    cfg = K.gate_config(K.GUMBEL, {"weights": {"good": 1.0}, "k": 3})
     for bid, n in [(0, 5), (1, 9), (2, 2)]:
         batch = spark.createDataFrame(
             [(bid * 10 + i, "good " * (n + i)) for i in range(3)],
             "doc_id long, text string",
         )
-        K.append_batch_gumbel(batch, table, W, 3, 0, "text", "doc_id",
-                              0.0, "sqapp", bid)
+        K.append_batch_index(K.GUMBEL, batch, table, cfg, "sqapp", bid)
     before = {(r.id, r.gk) for r in
               K.read_gumbel_index(spark, table, 3).collect()}
     raw_rows = M.read_table(spark, K.gumbel_index_path(table)).count()
     assert raw_rows == 9  # 3 batches x local top-3
-    K.squash_gumbel_index(spark, table, 3)
+    K.compact_index(K.GUMBEL, spark, table, cfg)
     after = {(r.id, r.gk) for r in
              K.read_gumbel_index(spark, table, 3).collect()}
     assert after == before
@@ -2210,9 +2207,7 @@ def test_gumbel_squash_keeps_selection_and_txn_marks(spark, tmp_path):
     replay = spark.createDataFrame(
         [(99, "good good")], "doc_id long, text string"
     )
-    assert not K.append_batch_gumbel(
-        replay, table, W, 3, 0, "text", "doc_id", 0.0, "sqapp", 1
-    )
+    assert not K.append_batch_index(K.GUMBEL, replay, table, cfg, "sqapp", 1)
     assert 99 not in {r.id for r in
                       K.read_gumbel_index(spark, table, 3).collect()}
 
@@ -2387,3 +2382,104 @@ def test_first_batch_replay_with_pending_grams_commit(
     assert M.current_version(f"{crashed}/_grams") == 0
     run(crashed, ck)  # replay of batch 0
     assert state(crashed) == state(clean)
+
+
+_W = {"good": 1.0}
+_NEAR = {"text_col": "text", "within_batch": False, "id_col": "id"}
+
+#: write_stream_manifest keyword, its minimal config, the spec it
+#: selects, the normalized cfg and the telemetry label. The cfgs are the
+#: dicts the sink built by hand before the specs carried the defaults.
+_GATE_CONFIGS = [
+    ("dedup_keys", {"cols": ["text"], "order_col": None}, "KEYS",
+     {"cols": ["text"], "order_col": None}, "after_exact"),
+    ("near_dedup", {"id_col": "id"}, "BANDED",
+     {**_NEAR, "method": "minhash", "threshold": 0.8, "num_hashes": 16,
+      "bands": 4, "k": 3, "max_candidate_ids": 100_000}, "after_near"),
+    ("near_dedup", {"id_col": "id", "method": "simhash"}, "CHUNKS",
+     {**_NEAR, "method": "simhash", "max_hamming": 3, "bits": 64},
+     "after_near"),
+    ("near_dedup", {"id_col": "id", "method": "semantic"}, "SEMCELLS",
+     {**_NEAR, "method": "semantic", "vec_col": "embedding", "dim": 64,
+      "threshold": 0.9, "n_centroids": 64, "n_planes": None, "n_tables": 8,
+      "sample_n": 2048, "seed": 42, "max_candidate_ids": 100_000},
+     "after_near"),
+    ("para_dedup", {"id_col": "id"}, "PARAS",
+     {"id_col": "id", "text_col": "text", "sep": "\n\n"}, "after_para"),
+    ("span_dedup", {"id_col": "id"}, "GRAMS",
+     {"id_col": "id", "text_col": "text", "k": 8}, None),
+    ("domain_gate", {"url_col": "url", "max_docs": 5}, "DOMAINS",
+     {"url_col": "url", "tokens_col": None, "min_docs": None, "max_docs": 5,
+      "min_sum_tokens": None}, "after_domain"),
+    ("classifier", {"weights": _W}, "CLASSIFIER",
+     {"weights": _W, "bias": 0.0, "threshold": 0.5, "missing": 0.0,
+      "text_col": "text", "id_col": "doc_id"}, "after_classifier"),
+    ("dsir", {"weights": _W, "k": 3}, "GUMBEL",
+     {"weights": _W, "k": 3, "seed": 0, "missing": 0.0, "text_col": "text",
+      "id_col": "doc_id"}, None),
+]
+
+#: keyword, a config that leaves out one required entry (or is
+#: otherwise invalid), the word the error must name besides the keyword
+_BAD_GATE_CONFIGS = [
+    ("near_dedup", {"text_col": "body"}, "id_col"),
+    ("near_dedup", {"method": "simhash"}, "id_col"),
+    ("near_dedup", {"method": "semantic"}, "id_col"),
+    ("near_dedup", {"id_col": "id", "method": "bloom"}, "method"),
+    ("para_dedup", {"sep": "\n"}, "id_col"),
+    ("span_dedup", {"k": 4}, "id_col"),
+    ("domain_gate", {"max_docs": 5}, "url_col"),
+    ("domain_gate", {"url_col": "url"}, "threshold"),
+    ("classifier", {"bias": 0.1}, "weights"),
+    ("dsir", {"k": 3}, "weights"),
+    ("dsir", {"weights": _W}, "k"),
+]
+
+
+@pytest.mark.parametrize(
+    "keyword,raw,spec,cfg,label", _GATE_CONFIGS,
+    ids=[f"{c[0]}-{c[2]}" for c in _GATE_CONFIGS],
+)
+def test_gate_config_normalizes_to_the_sink_contract(keyword, raw, spec,
+                                                     cfg, label):
+    """Each gate keyword's minimal config normalizes, on its spec, to
+    the exact dict the sink committed to; near-dedup's ``id_col`` rides
+    the data commits' stat columns for every method. No query starts."""
+    from newsmaper_etl_spark import keyindex as K
+
+    [(got_spec, got)] = K.gate_chain(**{keyword: raw})
+    assert got_spec is getattr(K, spec)
+    assert got == cfg
+    assert got_spec.label == label
+    assert got_spec.data_stat_col == ("id_col" if keyword == "near_dedup"
+                                      else None)
+
+
+def test_gate_chain_runs_in_the_documented_order():
+    """domain → classifier → exact → near → para → span → dsir, whatever
+    order the keywords come in."""
+    from newsmaper_etl_spark import keyindex as K
+
+    configs = {kw: raw for kw, raw, spec, _, _ in _GATE_CONFIGS
+               if spec != "CHUNKS" and spec != "SEMCELLS"}
+    chain = K.gate_chain(**dict(reversed(configs.items())))
+    assert [s.keyword for s, _ in chain] == [
+        "domain_gate", "classifier", "dedup_keys", "near_dedup",
+        "para_dedup", "span_dedup", "dsir"]
+
+
+@pytest.mark.parametrize(
+    "keyword,raw,word", _BAD_GATE_CONFIGS,
+    ids=[f"{c[0]}-{c[2]}" for c in _BAD_GATE_CONFIGS],
+)
+def test_gate_config_errors_raise_at_call_time(spark, tmp_path, keyword,
+                                               raw, word):
+    """A missing required entry (or an unknown method, or a domain gate
+    with no threshold) raises ValueError naming the gate and the key
+    when write_stream_manifest is called, before any query starts."""
+    stream = spark.readStream.schema("id LONG, text STRING").json(
+        str(tmp_path))
+    with pytest.raises(ValueError, match=rf"{keyword}.*{word}"):
+        write_stream_manifest(stream, str(tmp_path / "t"),
+                              str(tmp_path / "ck"), **{keyword: raw})
+    assert not spark.streams.active

@@ -1,4 +1,5 @@
-"""workerpatch: the lazy zip-directory invalidation (OPTIMIZATION_r15).
+"""workerpatch: the lazy zip-directory invalidation
+(``git show f59449b:OPTIMIZATION_r15.md``).
 
 The patch must (a) install idempotently, (b) skip the central-directory
 re-parse when the archive is unchanged, and (c) STILL invalidate when
@@ -72,3 +73,25 @@ def test_vanished_archive_falls_back(tmp_path):
     except Exception as e:  # pragma: no cover - stdlib may raise here
         assert isinstance(e, Exception)
     assert zp not in workerpatch._DIR_CACHE
+
+
+def test_importing_any_engine_module_installs_the_patch():
+    """One install call, in ``io``: the package ``__init__`` imports it
+    before any submodule, so a fresh process that imports only an
+    operator module (what unpickling an engine UDF does on a worker)
+    is patched."""
+    import subprocess
+    import sys
+
+    code = (
+        "import zipimport\n"
+        "before = getattr(zipimport.zipimporter, '_ne_lazy_inval', False)\n"
+        "import newsmaper_etl_spark.operators.text\n"
+        "print(before, getattr(zipimport.zipimporter, '_ne_lazy_inval', False))\n"
+    )
+    env = {k: v for k, v in os.environ.items()
+           if k != "NEWSMAPER_LAZY_ZIPIMPORT"}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root, env=env,
+                         capture_output=True, text=True, check=True)
+    assert out.stdout.split() == ["False", "True"]
