@@ -8,14 +8,15 @@
 Equivalent to `setup_newsmaper_pipeline` (first run bootstraps the
 warehouse: countries, sources, generated date dim, and an empty
 day-partitioned `news` manifest table) followed by one
-`newsmaper_pipeline` run (fetch feeds → transform → idempotent append,
-one manifest commit). `--dedup` also runs the maintenance (Main.py:28-47):
-the keep-first dedup, then a compaction of the day partitions that hold
-more than one small file, then a vacuum of files older than 24 h that
-the latest snapshot no longer references. Re-running is a no-op for
-already-loaded items (anti-join append). Schedule it every 20 minutes
-for reference cadence, or use streaming.pipeline for the Structured
-Streaming mode.
+`newsmaper_pipeline` run: fetch feeds → `transform_news` →
+`sinks.append_news_tx`, whose one anti-join against the snapshot it
+pins keeps only novel keys, in one manifest commit. `--dedup` also runs
+the maintenance (Main.py:28-47): the keep-first dedup, then a
+compaction of the day partitions that hold more than one small file,
+then a vacuum of files older than 24 h that the latest snapshot no
+longer references. Re-running is a no-op for already-loaded items.
+Schedule it every 20 minutes for reference cadence, or use
+streaming.pipeline for the Structured Streaming mode.
 """
 
 from __future__ import annotations
@@ -44,7 +45,10 @@ def main(argv: list[str] | None = None) -> int:
 
     from newsmaper_etl_spark import manifest as M
     from newsmaper_etl_spark import sinks
-    from newsmaper_etl_spark.operators.newsmaper import DATE_DIM_DDL, run_pipeline
+    from newsmaper_etl_spark.operators.newsmaper import (
+        DATE_DIM_DDL,
+        transform_news,
+    )
     from newsmaper_etl_spark.session import get_spark
     from newsmaper_etl_spark.sources import (
         read_references_json,
@@ -77,20 +81,8 @@ def main(argv: list[str] | None = None) -> int:
     date_dim = spark.read.schema(DATE_DIM_DDL).parquet(
         os.path.join(args.warehouse, "date")
     )
-    base = M.current_version(table)
-    existing = (
-        M.read_table(spark, table, version=base)
-        if base > 0
-        else spark.createDataFrame([], sinks.NEWS_DDL)
-    )
-    new_rows = run_pipeline(
-        articles=articles,
-        references=references,
-        date_dim=date_dim,
-        news_existing=existing,
-        strict=args.strict,
-    )
-    appended = sinks.append_news_tx(spark, new_rows, table, partitioned=True)
+    news = transform_news(articles, references, date_dim, strict=args.strict)
+    appended = sinks.append_news_tx(spark, news, table, partitioned=True)
     if args.dedup:
         sinks.rewrite_dedup_tx(spark, table)
         M.compact(spark, table)

@@ -152,11 +152,13 @@ def gate_config(spec: SideIndex, raw: dict) -> dict:
 def gate_chain(**configs: dict | None) -> list[tuple[SideIndex, dict]]:
     """The stages ``configs`` (``write_stream_manifest`` keyword → raw
     dict) configure, in :data:`CHAIN` order, each with its normalized
-    cfg. A None or empty dict configures nothing; a keyword that several
-    specs share picks one by its ``"method"`` entry."""
+    cfg. Only None configures nothing: any dict, an empty one included,
+    configures its stage and raises ValueError when it lacks a required
+    key. A keyword that several specs share picks one by its
+    ``"method"`` entry."""
     chosen: dict[SideIndex, dict] = {}
     for kw, raw in configs.items():
-        if not raw:
+        if raw is None:
             continue
         specs = [s for s in CHAIN if s.keyword == kw]
         if len(specs) > 1:

@@ -35,8 +35,6 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 #: JPEG start-of-frame markers that carry dimensions (SOF0..SOF15 minus
@@ -571,30 +569,6 @@ def parse_mp4_samples(
                 off += size
                 sample += 1
     return out or None
-
-
-#: Metadata struct carried alongside every media binary.
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType(), False),  # image|audio|video
-        T.StructField("format", T.StringType(), True),       # png|jpeg|wav|mp4…
-        T.StructField("source_url", T.StringType(), True),
-    ]
-)
-
-
-def attach_media(
-    df: DataFrame, binary_col: str, media_type: str, fmt: str | None = None
-) -> DataFrame:
-    """Normalize a raw binary column into (media: binary, media_meta: struct)."""
-    return df.withColumn("media", F.col(binary_col).cast("binary")).withColumn(
-        "media_meta",
-        F.struct(
-            F.lit(media_type).alias("media_type"),
-            F.lit(fmt).cast("string").alias("format"),
-            F.lit(None).cast("string").alias("source_url"),
-        ),
-    )
 
 
 #: Output schema of media_features — fixed so downstream code/tests can

@@ -1,14 +1,17 @@
 """The reference pipeline's domain operators, re-expressed Spark-first.
 
-Each function is a pure DataFrame→DataFrame operator (lazy, no collects),
-so the whole reference DAG (SURVEY.md §3.1) composes into ONE Catalyst
-plan:
+Each function is a pure DataFrame→DataFrame operator (lazy, no collects
+but the keyword dictionary's), so the whole reference DAG (SURVEY.md
+§3.1) composes into ONE Catalyst plan. :func:`transform_news` is the one
+place the Transform chain is composed — the batch pipeline, the CLI and
+the stream all call it:
 
-    project_news(tag_country(resolve_date_key(explode_date_parts(
-        parse_pubdate(articles)))))  |> append_new_rows(existing)
+    transform_news = tag_country_expr(tokenize_text(resolve_date_key(
+        explode_date_parts(parse_pubdate(articles)))))
+    run_pipeline   = transform_news |> append_new_rows(existing)
 
-Semantics pinned to the reference (citations into /root/reference, ledger
-items from SURVEY.md §2.11):
+Semantics pinned to the reference (citations are paths in the reference
+repo, ledger items from SURVEY.md §2.11):
 
 - parse_pubdate      dags/Transform.py:50-58  (L9: wall-clock fields, tz
                      offset NOT applied in oracle mode)
@@ -16,9 +19,13 @@ items from SURVEY.md §2.11):
 - resolve_date_key   dags/Transform.py:36-47  (L5: miss is fatal)
 - tokenize_text      dags/Transform.py:15-17,33 (L4: only ``, ; '`` →
                      space; split on single literal space; lowercase)
-- tag_country        dags/Transform.py:14-29  (L1 default id 1; L2 lowest
-                     id wins per word; L3 tie-break count DESC, id ASC)
-- project_news       dags/Transform.py:86-88
+- tag_country_expr   dags/Transform.py:14-29  (L1 default id 1; L2 lowest
+                     id wins per word; L3 tie-break count DESC, id ASC);
+                     ``tag_country`` is the join+rank form of the same
+                     vote, kept as the reference the tests and
+                     ``sql_functions`` check it against
+- transform_news     dags/Transform.py:86-88  (projection to the fact
+                     layout)
 - append_new_rows    dags/Load.py:8-28        (L7 composite key anti-join)
 - dedup_keep_first   dags/Main.py:28-47       (L7: lowest id survives)
 - generate_date_dim  closes the reference's Setup.py gap (dim never
@@ -257,18 +264,6 @@ def tag_country_expr(
     )
 
 
-def project_news(df: DataFrame, source_col: str = "source") -> DataFrame:
-    """Rename + project to the 7-column fact layout (Transform.py:86-88).
-
-    ``source_col`` names the incoming source-id column; it is renamed to
-    ``id_source`` when present (the reference's rename at Transform.py:87).
-    """
-    renamed = df
-    if source_col in df.columns and "id_source" not in df.columns:
-        renamed = df.withColumnRenamed(source_col, "id_source")
-    return renamed.select(*NEWS_COLUMNS)
-
-
 def append_new_rows(
     new: DataFrame, existing: DataFrame, keys: tuple[str, ...] = NEWS_KEY
 ) -> DataFrame:
@@ -367,40 +362,41 @@ def generate_date_dim(
     )
 
 
+def transform_news(
+    articles: DataFrame,
+    references: DataFrame,
+    date_dim: DataFrame,
+    strict: bool = False,
+    check_misses: bool = True,
+) -> DataFrame:
+    """The reference Transform (Transform.py:14-88) as one lazy plan:
+    parse the pubDate, look up its date key, tokenize, tag the country
+    by per-row vote (default id 1), project to the fact layout.
+
+    Returns :data:`NEWS_COLUMNS` plus ``pub_ts``, the parsed event time
+    (the stream's watermark column). ``strict`` fixes the reference's
+    pinned bugs (L4/L9); ``check_misses`` keeps a date-dimension miss
+    fatal (L5) instead of dropping the row. The expression tagger is
+    stateless, so the same plan is legal on a streaming frame."""
+    df = parse_pubdate(articles, strict=strict)
+    df = explode_date_parts(df)
+    df = resolve_date_key(df, date_dim, check_misses=check_misses)
+    df = tokenize_text(df)
+    df = tag_country_expr(df, reference_keyword_map(references, strict=strict))
+    return df.select(*NEWS_COLUMNS, "pub_ts")
+
+
 def run_pipeline(
     articles: DataFrame,
     references: DataFrame,
     date_dim: DataFrame,
     news_existing: DataFrame,
-    default_country: int = 1,
     strict: bool = False,
     check_misses: bool = True,
-    expr_tagging: bool = True,
 ) -> DataFrame:
     """The full reference DAG as one lazy plan: returns the NEW fact rows
-    (what the reference INSERTs at Load.py:28).
-
-    ``expr_tagging`` (default) votes with per-row expressions (no shuffle);
-    the join-based ``tag_country`` is the fallback for dictionaries too
-    large to inline. Both are pinned to the same L1–L4 semantics.
-    """
-    df = articles.withColumn("article_id", F.monotonically_increasing_id())
-    df = parse_pubdate(df, strict=strict)
-    df = explode_date_parts(df)
-    df = resolve_date_key(df, date_dim, check_misses=check_misses)
-    df = tokenize_text(df)
-    if expr_tagging:
-        kw_map = reference_keyword_map(references, strict=strict)
-        df = tag_country_expr(df, kw_map, default_id=default_country)
-    else:
-        # tag_country self-joins the vote winners back on article_id;
-        # monotonically_increasing_id is only stable WITHIN one
-        # evaluation, so pin the frame (lazy local checkpoint: both join
-        # branches read the same materialization) — a task retry or
-        # speculative re-run must not renumber one branch and swap tags
-        # between articles. The expr path is a pure projection (no
-        # self-join) and needs no pin.
-        df = df.localCheckpoint(eager=False)
-        df = tag_country(df, references, default_id=default_country, strict=strict)
-    df = project_news(df)
-    return append_new_rows(df, news_existing)
+    (what the reference INSERTs at Load.py:28), in :data:`NEWS_COLUMNS`
+    order."""
+    news = transform_news(articles, references, date_dim, strict=strict,
+                          check_misses=check_misses)
+    return append_new_rows(news.drop("pub_ts"), news_existing)

@@ -162,18 +162,6 @@ def _norm2(a: Column | str, dim: int | None = None) -> Column:
     return F.sqrt(_sqnorm(a, dim))
 
 
-def cosine_sim(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Cosine similarity of two array Columns via interpreted HOFs.
-
-    NOTE: evaluates both norms inline — fine for a one-off projection,
-    wrong inside a pair join (each vector's norm would be recomputed per
-    pair). The join paths below all pre-project norms instead; ``dim``
-    is accepted for API symmetry but the HOF form is used (Columns carry
-    no name to unroll against)."""
-    del dim
-    return _dot(a, b) / (_norm2(a) * _norm2(b))
-
-
 def _with_norm(
     df: DataFrame, vec_col: str, out: str, dim: int | None, unroll: bool = True
 ) -> DataFrame:

@@ -2,21 +2,20 @@
 
 Mimics the driver's correctness gate: run a declared Spark query and its
 DuckDB oracle SQL over the same parquet tables, then compare row count,
-sorted column names, and an order-insensitive value hash. Used by
+sorted column names, and an order-insensitive value compare. Used by
 tests/test_oracle.py so every operator is gated locally before the driver
 ever sees it.
 """
 
 from __future__ import annotations
 
-import hashlib
 import math
 from dataclasses import dataclass
 
 import duckdb
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from newsmaper_etl_spark.io import TABLE_NAMES
 
@@ -47,14 +46,6 @@ def canonicalize(pdf: pd.DataFrame) -> list[tuple[str, ...]]:
     rows = [tuple(_cell(v) for v in row) for row in pdf[cols].itertuples(index=False)]
     rows.sort()
     return rows
-
-
-def value_hash(pdf: pd.DataFrame) -> str:
-    h = hashlib.sha256()
-    for row in canonicalize(pdf):
-        h.update("\x1f".join(row).encode("utf-8"))
-        h.update(b"\x1e")
-    return h.hexdigest()
 
 
 @dataclass
@@ -112,9 +103,3 @@ def compare(
         )
     return CompareResult(name, True, len(spdf), len(opdf))
 
-
-def run_query(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
-    from newsmaper_etl_spark.registry import QUERIES, _ensure_loaded
-
-    _ensure_loaded()
-    return QUERIES[name].fn(spark, sf_dir)

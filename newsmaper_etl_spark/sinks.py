@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from newsmaper_etl_spark import manifest as M
 from newsmaper_etl_spark.operators.newsmaper import (
+    NEWS_COLUMNS,
     NEWS_KEY,
     append_new_rows,
     dedup_keep_first,
@@ -71,11 +72,6 @@ COUNTRIES_SEED = (
     (12, "Venezuela", "Caracas"),
 )
 
-#: The fact table's columns (the reference's news DDL, Setup.py:43-53).
-NEWS_DDL = (
-    "id_country INT, id_source INT, id_date INT, "
-    "title STRING, link STRING, description STRING, media STRING"
-)
 #: Partition column: the yyyymmdd prefix of the yyyymmddhh surrogate —
 #: day-grain directories, so appends touch only the days they carry and
 #: date-ranged reads prune on recorded values (see read_news_tx_for_dates).
@@ -161,18 +157,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def _news_columns() -> tuple[str, ...]:
-    return (
-        "id_country",
-        "id_source",
-        "id_date",
-        "title",
-        "link",
-        "description",
-        "media",
-    )
-
-
 def append_news_tx(
     spark: SparkSession, new_rows: DataFrame, table: str,
     partitioned: bool = False,
@@ -181,9 +165,10 @@ def append_news_tx(
     composite key against the pinned snapshot, then only the novel rows
     are committed as one manifest pointer flip — a crash mid-write leaves
     the previous snapshot fully intact and readers never see a
-    half-batch. Per-file
-    ``id_date`` min/max land in the manifest, so date-ranged reads prune
-    files without partition directories. Returns the appended count.
+    half-batch. Per-file ``id_date`` min/max land in the manifest, so
+    date-ranged reads prune files without partition directories. Only
+    :data:`NEWS_COLUMNS` of ``new_rows`` are written (``transform_news``'s
+    ``pub_ts`` is dropped). Returns the appended count.
 
     ``partitioned=True`` additionally lays batches out in day-grain
     Hive subdirs (``p_date=yyyymmdd/``) and records each file's exact
@@ -199,20 +184,14 @@ def append_news_tx(
     Rows that share a key within the batch (in-feed copies) are all
     appended; the keep-first rewrite removes them. A batch with no novel
     row (a replay) still commits, with no data file."""
-    novel = new_rows.select(*_news_columns())
+    novel = new_rows.select(*NEWS_COLUMNS)
     # pin the base: the anti-join decides novelty against THIS snapshot,
     # so the commit must fail (ConcurrentWriteError) if another writer
     # lands in between — not silently re-append rows it couldn't see
     base = M.current_version(table)
     if base > 0:
         existing = M.read_table(spark, table, version=base)
-        # re-project: the anti-join moves its key columns to the front,
-        # and the manifest's schema contract pins column ORDER too
-        novel = append_new_rows(
-            novel.select(*_news_columns()),
-            existing.select(*_news_columns()),
-            NEWS_KEY,
-        ).select(*_news_columns())
+        novel = append_new_rows(novel, existing, NEWS_KEY)
     if partitioned:
         novel = _with_partition(novel)
     obs = Observation()

@@ -14,14 +14,16 @@ three mechanisms natively:
 - late/duplicate repair: subsumed by the watermark; the batch
   ``dedup_keep_first`` remains available as a repair job.
 
-The batch operators from operators/newsmaper.py are expression-only, so
-they compose unchanged into the streaming plan — one definition of the
+The Transform chain is :func:`operators.newsmaper.transform_news`, the
+same function the batch pipeline and the CLI call: its operators are
+expression-only (the country vote is the stateless per-row tagger), so
+it composes unchanged into the streaming plan — one definition of the
 semantics for both modes.
 
 State sizing at scale: the dedup state key is sha2(concat(keys)) rather
 than the raw 3-column key (titles are long strings; hashing keeps state
-rows ~32 bytes), and the watermark bounds state growth to the lateness
-window.
+rows ~32 bytes), and the :data:`NEWS_WATERMARK` lateness window bounds
+state growth.
 """
 
 from __future__ import annotations
@@ -30,15 +32,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from newsmaper_etl_spark.operators.newsmaper import (
-    NEWS_KEY,
-    explode_date_parts,
-    parse_pubdate,
-    reference_keyword_map,
-    resolve_date_key,
-    tag_country_expr,
-    tokenize_text,
-)
+from newsmaper_etl_spark.operators.newsmaper import NEWS_KEY, transform_news
 
 #: Pinned source schema for streaming article ingestion (in-flight RSS
 #: items — FIXTURES.md B2; schema inference is dev-only).
@@ -67,37 +61,26 @@ def read_article_stream(
     return reader.json(source_dir)
 
 
+#: Event-time lateness window of :func:`transform_stream`'s
+#: within-watermark dedup: how long its state holds a key.
+NEWS_WATERMARK = "2 hours"
+
+
 def transform_stream(
-    articles: DataFrame,
-    references: DataFrame,
-    date_dim: DataFrame,
-    default_country: int = 1,
-    strict: bool = False,
-    watermark: str = "2 hours",
+    articles: DataFrame, references: DataFrame, date_dim: DataFrame
 ) -> DataFrame:
-    """The reference transform chain on a streaming frame + watermarked
+    """:func:`transform_news` on a streaming frame + watermarked
     within-stream dedup on the composite key (L7).
 
-    ``tag_country`` votes per article_id — a streaming-safe groupBy
-    because each article's tokens arrive in one row (no cross-batch
-    state). The target-table anti-join of batch mode is replaced by the
+    A date-dimension miss drops the article instead of failing the
+    query. The target-table anti-join of batch mode is replaced by the
     dedup state + idempotent sink.
     """
-    from newsmaper_etl_spark.operators.newsmaper import NEWS_COLUMNS
-
-    df = parse_pubdate(articles, strict=strict)
-    df = explode_date_parts(df)
-    df = resolve_date_key(df, date_dim, check_misses=False)
-    df = tokenize_text(df)
-    # expression tagger: per-row vote, stateless → streaming-legal (the
-    # join+rank form would be a disallowed non-windowed agg on a stream)
-    kw_map = reference_keyword_map(references, strict=strict)
-    df = tag_country_expr(df, kw_map, default_id=default_country)
-    keyed = df.select(*NEWS_COLUMNS, "pub_ts").withColumn(
-        "__key", F.sha2(F.concat_ws("\x1f", *NEWS_KEY), 256)
-    )
+    keyed = transform_news(
+        articles, references, date_dim, check_misses=False
+    ).withColumn("__key", F.sha2(F.concat_ws("\x1f", *NEWS_KEY), 256))
     return (
-        keyed.withWatermark("pub_ts", watermark)
+        keyed.withWatermark("pub_ts", NEWS_WATERMARK)
         .dropDuplicatesWithinWatermark(["__key"])
         .drop("__key", "pub_ts")
     )
@@ -391,11 +374,11 @@ def write_stream_manifest(
     log — and the output stays readable by the snapshot / time-travel /
     pruning API instead of only by Spark's file-sink-aware reader.
 
-    Crash windows (ADVICE r04): a writer dying between the manifest
-    CLAIM and the pointer flip leaves its own claim blocking the next
-    version — the replay detects that case via the claim's txn mark and
-    clears it (manifest.repair_claimed_orphan) before retrying, so the
-    query self-heals instead of raising ConcurrentWriteError forever.
+    Crash windows: a writer dying between the manifest CLAIM and the
+    pointer flip leaves its own claim blocking the next version — the
+    replay detects that case via the claim's txn mark and clears it
+    (manifest.repair_claimed_orphan) before retrying, so the query
+    self-heals instead of raising ConcurrentWriteError forever.
     A claim held by a DIFFERENT writer is a genuine race and still
     raises.
 
@@ -439,10 +422,11 @@ def write_stream_manifest(
 
     app = app_id or f"stream:{_os.path.abspath(checkpoint_dir)}"
 
+    exact = None if dedup_keys is None else {"order_col": dedup_order_col}
+    if dedup_keys:
+        exact["cols"] = list(dedup_keys)
     chain = K.gate_chain(
-        domain_gate=domain_gate, classifier=classifier,
-        dedup_keys=dedup_keys and {"cols": list(dedup_keys),
-                                   "order_col": dedup_order_col},
+        domain_gate=domain_gate, classifier=classifier, dedup_keys=exact,
         near_dedup=near_dedup, para_dedup=para_dedup, span_dedup=span_dedup,
         dsir=dsir,
     )

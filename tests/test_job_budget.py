@@ -29,9 +29,9 @@ def _jobs_of(spark, fn):
 
 
 def _news(spark, rows):
-    from newsmaper_etl_spark.sinks import _news_columns
+    from newsmaper_etl_spark.operators.newsmaper import NEWS_COLUMNS
 
-    return values_df(spark, rows, list(_news_columns()))
+    return values_df(spark, rows, list(NEWS_COLUMNS))
 
 
 def test_window_rewrite_runs_at_most_two_jobs(spark, tmp_path):

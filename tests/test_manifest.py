@@ -432,9 +432,10 @@ def test_timestamp_stat_cols_do_not_break_commit(spark, tmp_path):
 def _append_news_file(spark, t, rows, partitioned):
     """Commit ``rows`` (news tuples) as ONE file per day through the raw
     manifest append, so in-batch duplicates survive into the table."""
-    from newsmaper_etl_spark.sinks import _news_columns, _with_partition
+    from newsmaper_etl_spark.operators.newsmaper import NEWS_COLUMNS
+    from newsmaper_etl_spark.sinks import _with_partition
 
-    df = values_df(spark, rows, list(_news_columns())).coalesce(1)
+    df = values_df(spark, rows, list(NEWS_COLUMNS)).coalesce(1)
     if partitioned:
         df = _with_partition(df)
     return M.append(
@@ -592,9 +593,9 @@ def _round_rows(rng, history, n_new, n_reserved, n_copies, null_titles=0):
 
 
 def _news_df(spark, rows):
-    from newsmaper_etl_spark.sinks import _news_columns
+    from newsmaper_etl_spark.operators.newsmaper import NEWS_COLUMNS
 
-    return values_df(spark, rows, list(_news_columns()))
+    return values_df(spark, rows, list(NEWS_COLUMNS))
 
 
 def _rows(spark, t):

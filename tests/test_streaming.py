@@ -53,6 +53,35 @@ def test_streaming_pipeline_available_now(spark, tmp_path):
     }
 
 
+def test_batch_and_stream_transforms_agree(spark, tmp_path):
+    """``run_pipeline`` (nothing existing, misses dropped) and
+    ``transform_stream`` over the same articles keep the same keys, and
+    every stream row is a batch row, country too. Spark rejects
+    ``dropDuplicatesWithinWatermark`` on a batch frame, so the stream
+    side is one availableNow run into a memory sink."""
+    from newsmaper_etl_spark.operators.newsmaper import NEWS_KEY, run_pipeline
+
+    refs, dim = FX.references_df(spark), FX.date_dim_df(spark)
+    batch = run_pipeline(
+        FX.articles_df(spark), refs, dim,
+        FX.news_existing_df(spark).limit(0), check_misses=False,
+    ).collect()
+    articles = read_article_stream(spark, _write_article_json(tmp_path))
+    transform_stream(articles, refs, dim).writeStream.format(
+        "memory").queryName("news_stream_agree").trigger(
+        availableNow=True).start().awaitTermination()
+    stream = spark.table("news_stream_agree").collect()
+
+    def keys(rows):
+        return {tuple(r[k] for k in NEWS_KEY) for r in rows}
+
+    def as_set(rows):
+        return {tuple(sorted(r.asDict().items())) for r in rows}
+
+    assert stream and keys(stream) == keys(batch)
+    assert as_set(stream) <= as_set(batch)
+
+
 def test_streaming_restart_is_exactly_once(spark, tmp_path):
     """Re-running with the same checkpoint must not duplicate output."""
     src = _write_article_json(tmp_path)
@@ -2433,6 +2462,14 @@ _BAD_GATE_CONFIGS = [
     ("classifier", {"bias": 0.1}, "weights"),
     ("dsir", {"k": 3}, "weights"),
     ("dsir", {"weights": _W}, "k"),
+    # an empty config is incomplete, not "gate off" (only None is)
+    ("dedup_keys", (), "cols"),
+    ("near_dedup", {}, "id_col"),
+    ("para_dedup", {}, "id_col"),
+    ("span_dedup", {}, "id_col"),
+    ("domain_gate", {}, "url_col"),
+    ("classifier", {}, "weights"),
+    ("dsir", {}, "weights"),
 ]
 
 
@@ -2470,7 +2507,8 @@ def test_gate_chain_runs_in_the_documented_order():
 
 @pytest.mark.parametrize(
     "keyword,raw,word", _BAD_GATE_CONFIGS,
-    ids=[f"{c[0]}-{c[2]}" for c in _BAD_GATE_CONFIGS],
+    ids=[f"{c[0]}-{c[2]}" if c[1] else f"{c[0]}-empty"
+         for c in _BAD_GATE_CONFIGS],
 )
 def test_gate_config_errors_raise_at_call_time(spark, tmp_path, keyword,
                                                raw, word):
